@@ -1,0 +1,48 @@
+package perfbench
+
+/** Minimal JSON encoder for the harness's result and trace files. */
+object Json {
+  def of(v: Any): String = {
+    val sb = new StringBuilder
+    write(sb, v)
+    sb.toString
+  }
+
+  private def str(sb: StringBuilder, s: String): Unit = {
+    sb += '"'
+    s.foreach {
+      case '"' => sb ++= "\\\""
+      case '\\' => sb ++= "\\\\"
+      case '\n' => sb ++= "\\n"
+      case '\r' => sb ++= "\\r"
+      case '\t' => sb ++= "\\t"
+      case c if c < ' ' => sb ++= f"\\u${c.toInt}%04x"
+      case c => sb += c
+    }
+    sb += '"'
+  }
+
+  private def write(sb: StringBuilder, v: Any): Unit = v match {
+    case null | None => sb ++= "null"
+    case Some(x) => write(sb, x)
+    case s: String => str(sb, s)
+    case b: Boolean => sb ++= b.toString
+    case d: Double => sb ++= (if (d.isNaN || d.isInfinite) "null" else d.toString)
+    case f: Float => write(sb, f.toDouble)
+    case n: Int => sb ++= n.toString
+    case n: Long => sb ++= n.toString
+    case n: BigDecimal => sb ++= n.toString
+    case m: scala.collection.Map[_, _] =>
+      sb += '{'
+      m.zipWithIndex.foreach { case ((k, x), i) =>
+        if (i > 0) sb += ','
+        str(sb, k.toString); sb += ':'; write(sb, x)
+      }
+      sb += '}'
+    case xs: Iterable[_] =>
+      sb += '['
+      xs.zipWithIndex.foreach { case (x, i) => if (i > 0) sb += ','; write(sb, x) }
+      sb += ']'
+    case other => str(sb, other.toString)
+  }
+}
