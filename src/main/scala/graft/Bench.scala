@@ -310,16 +310,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local("graft-bench",
+      graft.core.GraftSession.coresOr(4))
     // Local iteration aid: SPARK_GRAFT_ONLY=q60_fuzzy_names,q23_ngram_jaccard
     // restricts the run to a comma-separated subset (driver never sets it).
     // SPARK_GRAFT_SCALE_PROBE=1 is a preset subset of the most DATA-bound
@@ -418,7 +410,11 @@ object Bench {
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Sample =
       timeOnceAt(name, sfDir, capSecFor(name), fn)
     // Warmup at the smallest SF: JIT, codegen compilation, parquet reader and
-    // shuffle machinery init — excluded from the timed runs below. Capped
+    // shuffle machinery init — excluded from the timed runs below. The
+    // session's codegen cache holds every class the sweep generates, so the
+    // timed passes reuse the classes compiled here wherever AQE picks the
+    // same plan at the larger SF, instead of finding them evicted by the
+    // rest of the catalog's classes. Capped
     // per-sample and as a phase so a throttled host cannot spend the
     // driver's whole budget before the first timed sample.
     val warmupStart = System.nanoTime()

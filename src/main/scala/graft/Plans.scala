@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for representative queries — the
   * `.explain("formatted")` iteration artifact (see PLANS.md).
   * Usage: runMain graft.Plans [sfDir] [queryName...] — with names given,
@@ -10,14 +8,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local("graft-plans", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val picks = Seq(
       "q2_filter_project", "q3_join_agg", "q8_topk", "q11_ohlcv",

@@ -1,7 +1,8 @@
 package graft.core
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
+
+import org.apache.spark.sql.SparkSession
 
 /** Run independent Spark-job legs as concurrent jobs (the guide §2.6
   * overlap pattern) on a FRESH per-call executor, never the global pool.
@@ -18,9 +19,13 @@ import scala.concurrent.duration.Duration
   * in the submitter), so each leg inherits the caller's job group and
   * cancellation reaches every leg.
   *
-  * The pool is shut down in a finally: on success all legs have
-  * completed (shutdownNow interrupts nothing); on failure the interrupt
-  * unwinds the still-running legs instead of leaking them. */
+  * Failure is fast: legs are awaited in completion order, so the first
+  * leg to fail surfaces at once, however long its siblings still run.
+  * The pool is then shut down (interrupting the siblings' threads) and
+  * the siblings' Spark jobs are cancelled through a job tag every leg of
+  * this call carries — an interrupted driver thread alone would leave its
+  * submitted job running. On success every leg has completed, the results
+  * come back in leg order, and the shutdown interrupts nothing. */
 object Concurrency {
 
   def runAll[T](legs: Seq[() => T]): Seq[T] = runAll(legs, legs.size)
@@ -31,12 +36,22 @@ object Concurrency {
   def runAll[T](legs: Seq[() => T], maxThreads: Int): Seq[T] = {
     require(legs.nonEmpty, "runAll needs at least one leg")
     require(maxThreads >= 1, s"maxThreads must be >= 1, got $maxThreads")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(legs.size, maxThreads))
+    val sc = SparkSession.getActiveSession.map(_.sparkContext)
+    val tag = s"graft-runAll-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(math.min(legs.size, maxThreads))
     try {
-      val ec = ExecutionContext.fromExecutorService(pool)
-      val futures = legs.map(l => Future(l())(ec))
-      futures.map(Await.result(_, Duration.Inf))
+      val done = new ExecutorCompletionService[T](pool)
+      val futures = legs.map(l => done.submit(() => {
+        sc.foreach(_.addJobTag(tag)); l()
+      }))
+      try legs.foreach(_ => done.take().get())
+      catch { case e: Throwable =>
+        pool.shutdownNow()
+        sc.foreach(_.cancelJobsWithTag(tag))
+        throw (e match { case failed: ExecutionException => failed.getCause
+                         case other => other })
+      }
+      futures.map(_.get())
     } finally pool.shutdownNow()
   }
 

@@ -25,7 +25,12 @@ package graft.core
   * single task still reads all its rows) remains governed by the family
   * knobs the caller already owns — nBuckets/bands/nLists. */
 object IndexLayout {
-  val maxRecordsPerFile: Long =
-    sys.env.get("SPARK_GRAFT_MAX_RECORDS_PER_FILE").map(_.toLong)
-      .getOrElse(8000000L)
+  private val Var = "SPARK_GRAFT_MAX_RECORDS_PER_FILE"
+
+  /** Read at each write, so a bad value fails that write naming the
+    * variable rather than poisoning this object's initialisation. */
+  def maxRecordsPerFile: Long = maxRecordsPerFile(sys.env.get(Var))
+
+  private[graft] def maxRecordsPerFile(setting: Option[String]): Long =
+    setting.fold(8000000L)(GraftSession.positiveSetting(Var, _, Long.MaxValue))
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev aid: print the formatted physical plan of one SparkEntry query
   * (`runMain graft.tools.ExplainOne <name> [sfDir]`) — the .explain
   * iteration loop the build discipline asks for, without editing query
@@ -10,14 +8,7 @@ object ExplainOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local("graft-explain", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r16 optimization evidence: dump the EXECUTED physical plans of the
@@ -15,14 +14,7 @@ object MutationPlans {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/mutation_plans.txt")
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local("graft-mutation-plans", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     var label = "(unlabeled)"
