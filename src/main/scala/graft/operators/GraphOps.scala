@@ -32,21 +32,35 @@ object GraphOps {
   /** Per-node triangle participation counts over the UNDIRECTED graph
     * spanned by `edges` (orientation and duplicate edges are normalized
     * away; self-loops dropped). Output: (node, triangles) for nodes in at
-    * least one triangle — each triangle credits all three corners. */
+    * least one triangle — each triangle credits all three corners.
+    *
+    * Lazy and recomputable: nothing is cached or checkpointed, so the
+    * plan survives executor loss and callers see its exchanges. The
+    * oriented edge list is read three times; its shuffles are identical
+    * subtrees, which exchange reuse runs once. */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    withClosedTriangles(edges, srcCol, dstCol)(
-      _.select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("triangles")))
+    closedTriangles(oriented(edges, srcCol, dstCol))
+      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
+      .groupBy("node").agg(count(lit(1)).as("triangles"))
 
   /** Global triangle COUNT — one row (n_triangles BIGINT). Same oriented
     * wedge pipeline as [[triangleCounts]], but when only the total is
     * needed the final per-corner explode (3× the triangle set) and its
     * node-keyed exchange are pure waste: this aggregates the closed-wedge
     * join output directly into a single partial-count scalar — no
-    * post-join shuffle rows at all. */
-  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    withClosedTriangles(edges, srcCol, dstCol)(
-      _.agg(count(lit(1)).as("n_triangles")))
+    * post-join shuffle rows at all.
+    *
+    * The oriented edge list is persisted (the closing side exchanges on
+    * different keys and would re-run the canon+degree subtree) and the
+    * one-row result is materialized with an eager localCheckpoint, so
+    * the persisted frame is RELEASED before returning — callers never
+    * leak a cached frame per call. A one-row scalar is the one result
+    * for which the checkpoint's lost recomputability costs nothing. */
+  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val o = oriented(edges, srcCol, dstCol).persist()
+    try closedTriangles(o).agg(count(lit(1)).as("n_triangles")).localCheckpoint()
+    finally o.unpersist()
+  }
 
   /** Degree-capped triangle count — the skew-emergency variant of
     * [[triangleCount]]: every node whose (deduplicated, undirected)
@@ -89,25 +103,11 @@ object GraphOps {
     triangleCount(capped, "src", "dst")
   }
 
-  /** The shared enumeration — one row (a, b, c) per triangle, each listed
-    * exactly once at its degree-orientation apex — handed to `consume`,
-    * whose (node- or parameter-bounded) aggregate result is materialized
-    * via an eager localCheckpoint so the `oriented` working cache can be
-    * RELEASED before returning: library callers no longer leak one cached
-    * frame per call (they relied on Bench/Verify's session clearCache),
-    * and the checkpoint cuts the unrolled wedge lineage exactly like
-    * [[kCore]]'s materializing count. `consume` must aggregate (its
-    * output is what gets block-stored), which both public triangle APIs
-    * do. */
-  private def withClosedTriangles(edges: DataFrame, srcCol: String,
-      dstCol: String)(consume: DataFrame => DataFrame): DataFrame = {
-    val closed = closedTrianglesRaw(edges, srcCol, dstCol)
-    try consume(closed._1).localCheckpoint()
-    finally closed._2.unpersist()
-  }
-
-  private def closedTrianglesRaw(edges: DataFrame, srcCol: String,
-      dstCol: String): (DataFrame, DataFrame) = {
+  /** The degree-oriented edge list (src, dst, dst_ord): every undirected
+    * edge points toward its higher-(degree, id) endpoint, carrying that
+    * endpoint's rank so the wedge stage orders its spokes the same way. */
+  private def oriented(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = {
     val canon = edges
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
@@ -116,10 +116,8 @@ object GraphOps {
     val deg = canon.select(col("u").as("node"))
       .union(canon.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
-    // total order (deg, id): orient u -> v iff ord(u) < ord(v); carry the
-    // endpoint ranks so the wedge stage can order its two spokes the same
-    // way the closing edge is oriented
-    val oriented = canon
+    // total order (deg, id): orient u -> v iff ord(u) < ord(v)
+    canon
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
       .select(
@@ -132,16 +130,15 @@ object GraphOps {
           .otherwise(struct(col("du").as("d"), col("u").as("n")))
           .as("dst_ord"))
       .select(col("src"), col("dst_ord.n").as("dst"), col("dst_ord"))
-    // oriented is consumed THREE times (both wedge spokes + the closing
-    // edge); the wedge self-join's identical exchanges dedup via
-    // ReuseExchange, but the closing side exchanges on different keys
-    // and re-ran the whole canon+degree subtree — persist it once;
-    // withClosedTriangles releases it after the consumer materializes
-    val orientedC = oriented.persist()
+  }
+
+  /** The shared enumeration — one row (a, b, c) per triangle, each listed
+    * exactly once at its degree-orientation apex. */
+  private def closedTriangles(oriented: DataFrame): DataFrame = {
     // wedges at the common source, spokes ordered by the global total
     // order; the closing edge — if present — is oriented spoke1 -> spoke2
-    val wedges = orientedC.select(col("src"), col("dst").as("w1"), col("dst_ord").as("o1"))
-      .join(orientedC.select(col("src"), col("dst").as("w2"), col("dst_ord").as("o2")), "src")
+    val wedges = oriented.select(col("src"), col("dst").as("w1"), col("dst_ord").as("o1"))
+      .join(oriented.select(col("src"), col("dst").as("w2"), col("dst_ord").as("o2")), "src")
       .filter(col("o1") < col("o2"))
       .select(col("src").as("a"), col("w1").as("b"), col("w2").as("c"))
     // left_semi, not inner: oriented edges are distinct, so the closing
@@ -152,11 +149,11 @@ object GraphOps {
     // would sort it; hashing the edge side per partition skips that sort
     // at every scale (the build side is edges/partitions, which AQE
     // keeps bounded)
-    (wedges.join(
-      orientedC.select(col("src").as("b"), col("dst").as("c"))
+    wedges.join(
+      oriented.select(col("src").as("b"), col("dst").as("c"))
         .hint("shuffle_hash"),
       Seq("b", "c"), "left_semi")
-      .select(col("a"), col("b"), col("c")), orientedC)
+      .select(col("a"), col("b"), col("c"))
   }
 
   /** The k-core of the undirected graph — the maximal node set in which

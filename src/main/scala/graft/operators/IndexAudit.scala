@@ -133,8 +133,7 @@ object IndexAudit {
     val m = spark.read.parquet(s"$dir/pq_model")
       .select(col("subspace")).distinct().count()
     val codes = spark.read.parquet(s"$dir/codes")
-    val idCol = codes.schema.fields
-      .find(f => f.name != "list_id" && f.name != "codes").get.name
+    val idCol = ProductQuantizer.lifecycle.membership.idColIn(codes.schema)
     // independent counts as concurrent jobs (§2.6, r17)
     val pqWave = graft.core.Concurrency.runAll(Seq[() => Any](
       () => codes.agg(count(lit(1)), countDistinct(col(idCol))).collect().head,
@@ -156,9 +155,7 @@ object IndexAudit {
   /** Audit an [[IvfIndex]] at `dir`. */
   def auditIvf(spark: SparkSession, dir: String): DataFrame = {
     val lists = spark.read.parquet(s"$dir/lists")
-    val idCol = lists.schema.fields
-      .find(f => f.name != "list_id" &&
-        !f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]).get.name
+    val idCol = IvfIndex.lifecycle.membership.idColIn(lists.schema)
     val centroids = spark.read.parquet(s"$dir/centroids")
     // independent counts as concurrent jobs (§2.6, r17)
     val ivfWave = graft.core.Concurrency.runAll(Seq[() => Any](

@@ -30,7 +30,7 @@ object IndexMaintenance {
 
   private def excludedSuffixes = StagedSwap.allStagingSuffixes
 
-  private def dataFiles(f: org.apache.hadoop.fs.FileSystem,
+  private[operators] def dataFiles(f: org.apache.hadoop.fs.FileSystem,
       dir: Path): (Long, Long) = {
     // (leaf dirs, data files): a partitioned artifact's leaves are its
     // partition dirs; a flat artifact is its own single leaf
@@ -87,27 +87,4 @@ object IndexMaintenance {
   def needsCompact(spark: SparkSession, path: String,
       maxFilesPerDir: Int = 4): Boolean =
     planRows(spark, path, maxFilesPerDir).exists(_._4)
-
-  /** Coalesce a FLAT (unpartitioned) parameter-sized artifact to one
-    * file under [[StagedSwap]], iff it currently holds more than one
-    * data file — the family compacts call this so every artifact the
-    * fragmentation policy counts is one a compact can actually clear
-    * (a flagged artifact compact never rewrites would re-trigger
-    * auto-compact on every maintenance pass forever). No-op on absent
-    * or already-single-file artifacts; contents untouched. */
-  def coalesceFlatArtifact(spark: SparkSession, path: String,
-      sub: String): Unit = {
-    val p = new Path(s"$path/$sub")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (f.exists(p)) {
-      val nData = f.listStatus(p).count { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      if (nData > 1)
-        StagedSwap.swapSub(spark, path, sub, "_compact") { tmp =>
-          spark.read.parquet(p.toString).coalesce(1).write.parquet(tmp)
-        }
-    }
-  }
 }

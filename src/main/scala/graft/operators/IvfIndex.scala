@@ -208,16 +208,13 @@ object IvfIndex {
     * Build once, probe many — across jobs, not just within one. */
   def save(vectors: DataFrame, idCol: String, vecCol: String,
       model: IvfModel, dir: String): Unit = {
-    // parameter-sized (k x dim rows): one file, like stats — multi-file
-    // writes would trip the fragmentation policy compact can't clear
+    // parameter-sized (k x dim rows): one file, like stats
     model.toDF(vectors.sparkSession)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    // list-aligned write (the compact layout): ~one file per list dir,
-    // not input-partitions × lists — a fresh save must not instantly
-    // flag IndexMaintenance.needsCompact
-    assign(vectors, idCol, vecCol, model.toDF(vectors.sparkSession))
-      .repartition(model.centroids.size, col("list_id"))
-      .write.option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile).partitionBy("list_id").mode("overwrite").parquet(s"$dir/lists")
+    IndexLifecycle.aligned(
+        assign(vectors, idCol, vecCol, model.toDF(vectors.sparkSession)),
+        model.centroids.size, "list_id")
+      .mode("overwrite").parquet(s"$dir/lists")
     distProfile(vectors, vecCol, model)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
   }
@@ -277,11 +274,8 @@ object IvfIndex {
       StagedSwap.swapSub(spark, dir, sub, "_compact")(write)
     // lists first (its write READS the live lists dir); the later swaps
     // re-read only the freshly swapped lists
-    swapIn("lists") { tmp =>
-      assign(current, idCol, vecCol, model.toDF(spark))
-        .repartition(k, col("list_id"))
-        .write.option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile).partitionBy("list_id").parquet(tmp)
-    }
+    swapIn("lists")(IndexLifecycle.aligned(
+      assign(current, idCol, vecCol, model.toDF(spark)), k, "list_id").parquet(_))
     swapIn("centroids")(tmp =>
       model.toDF(spark).coalesce(1).write.parquet(tmp))
     swapIn("stats")(tmp =>
@@ -325,60 +319,27 @@ object IvfIndex {
       .map(_.dataType)
     val batch = vecType.fold(vectors)(t =>
       vectors.withColumn(vecCol, col(vecCol).cast(t)))
-    assign(batch, idCol, vecCol, centroids)
-      .repartition(nLists, col("list_id"))
-      .write.option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile).partitionBy("list_id").mode("append").parquet(s"$dir/lists")
+    IndexLifecycle.aligned(assign(batch, idCol, vecCol, centroids), nLists,
+      "list_id").mode("append").parquet(s"$dir/lists")
   }
 
   /** Targeted delete (right-to-be-forgotten) — the [[TextIndex.delete]]
     * discipline on the exact-vector index: remove `ids` (a one-column
-    * frame) by rewriting `lists/` filtered under the crash-safe
-    * [[StagedSwap]]. Centroids and the fit-time `stats/` profile stay:
-    * they are the partitioning yardstick, not per-vector state — a
-    * deletion big enough to invalidate them is a [[refit]], which
-    * [[staleness]] will flag. Idempotent; absent ids are no-ops; an
-    * emptying delete is rejected (drop the directory instead).
-    * Single-writer. */
-  def delete(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
-    require(ids.columns.length == 1,
-      s"ids must be a one-column frame, got ${ids.columns.toSeq}")
-    recover(spark, dir)
-    val del = ids.toDF("__del_id").distinct().cache()
-    try {
-      // the id column is the scalar that isn't the list key; keying off
-      // the TYPE (the vector column is the ArrayType one) survives any
-      // column-order change in assign()'s output
-      val idCol = spark.read.parquet(s"$dir/lists").schema.fields
-        .find(f => f.name != "list_id" &&
-          !f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-        .map(_.name)
-        .getOrElse(throw new IllegalStateException("no id column in lists/"))
-      // existence check, not a count: head(1) stops at the first
-      // surviving row instead of scanning the whole corpus twice
-      require(spark.read.parquet(s"$dir/lists")
-          .join(del, col(idCol) === col("__del_id"), "left_anti")
-          .head(1).nonEmpty,
-        "delete would empty the index; drop the index directory instead")
-      val nLists = spark.read.parquet(s"$dir/centroids").count().toInt
-      StagedSwap.swapSub(spark, dir, "lists", "_del") { tmpDir =>
-        spark.read.parquet(s"$dir/lists")
-          .join(del, col(idCol) === col("__del_id"), "left_anti")
-          .repartition(nLists, col("list_id"))
-          .write.option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile).partitionBy("list_id").parquet(tmpDir)
-      }
-    } finally del.unpersist()
-  }
+    * frame) by rewriting `lists/` filtered ([[IndexLifecycle.Spec.delete]]).
+    * Centroids and the fit-time `stats/` profile stay: they are the
+    * partitioning yardstick, not per-vector state — a deletion big
+    * enough to invalidate them is a [[refit]], which [[staleness]] will
+    * flag. Idempotent; absent ids are no-ops; an emptying delete is
+    * rejected (drop the directory instead). Single-writer. */
+  def delete(spark: SparkSession, dir: String, ids: DataFrame): Unit =
+    lifecycle.delete(spark, dir, ids)
 
   /** Upsert (replace-or-insert) — the re-embed path: delete(batch ids)
     * then [[append]](batch), so re-embedded ids move to their new lists
-    * and serve only their new vectors, absent ids are plain inserts.
-    * Crash between the halves leaves the batch ids absent; the same
-    * upsert rerun is idempotent and completes it. Single-writer. */
+    * and serve only their new vectors ([[IndexLifecycle.Spec.upsert]]). */
   def upsert(vectors: DataFrame, idCol: String, vecCol: String,
-      dir: String): Unit = {
-    delete(vectors.sparkSession, dir, vectors.select(col(idCol)))
-    append(vectors, idCol, vecCol, dir)
-  }
+      dir: String): Unit =
+    lifecycle.upsert(vectors, idCol, dir)(append(vectors, idCol, vecCol, dir))
 
   /** Operational snapshot — one (stat, value) row per metric, exact
     * longs (the [[TextIndex.stats]] dashboard discipline): `vec_rows`
@@ -402,33 +363,24 @@ object IvfIndex {
     ).toDF("stat", "value")
   }
 
-  /** Rewrite append-accreted list partitions to ~one file per list via the
-    * crash-safe [[StagedSwap]] (write to a sibling, two renames, never a
-    * mixed read; a crash in the rename window is repaired by the next
-    * compact's recovery step, which restores `lists/` from the surviving
-    * copy before deleting anything). Single-writer contract: no concurrent
-    * append or probe during the swap. */
-  /** Writer-restart repair — the [[TextIndex.recover]] discipline on
-    * this family's swapped artifacts (lists always; centroids and stats
-    * swap during [[refit]]). */
-  def recover(spark: SparkSession, dir: String): Unit =
-    Seq("lists", "centroids", "stats").foreach(StagedSwap.recoverSub(spark, dir, _))
+  /** This family's lifecycle facts: `lists/` carries the caller's id
+    * column, partitioned by list; the list count is the centroid count;
+    * centroids and stats swap during [[refit]]. */
+  val lifecycle: IndexLifecycle.Spec = IndexLifecycle.Spec("ivf",
+    Seq(IndexLifecycle.IdArtifact("lists", None, Some("list_id"))),
+    IndexLifecycle.DistinctCount("centroids", "list_id"),
+    flatParams = Seq("centroids"),
+    recovered = Seq("lists", "centroids", "stats"), IndexAudit.auditIvf)
 
-  def compact(spark: SparkSession, dir: String): Unit = {
-    recover(spark, dir)
-    val nLists = spark.read.parquet(s"$dir/centroids").count().toInt
-    StagedSwap.swapSub(spark, dir, "lists", "_compact") { tmpDir =>
-      // repartition on list_id: each task holds whole list partitions, so
-      // partitionBy emits ~one file per list directory
-      spark.read.parquet(s"$dir/lists")
-        .repartition(nLists, col("list_id"))
-        .write.option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile).partitionBy("list_id").parquet(tmpDir)
-    }
-    // heal multi-file parameter artifacts (older saves wrote centroids
-    // un-coalesced): compact must clear everything the fragmentation
-    // policy flags, or auto-compact re-triggers every pass forever
-    IndexMaintenance.coalesceFlatArtifact(spark, dir, "centroids")
-  }
+  /** [[IndexLifecycle.Spec.recover]] on this family's artifacts. */
+  def recover(spark: SparkSession, dir: String): Unit =
+    lifecycle.recover(spark, dir)
+
+  /** Rewrite append-accreted list partitions to ~one file per list
+    * ([[IndexLifecycle.Spec.compact]]), healing a multi-file centroids
+    * artifact from older saves too. */
+  def compact(spark: SparkSession, dir: String): Unit =
+    lifecycle.compact(spark, dir)
 
   /** Probe a PERSISTED index (a frame carrying a `list_id` partition
     * column, as written by [[save]]). The probed list ids are resolved

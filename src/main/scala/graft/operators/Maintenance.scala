@@ -39,55 +39,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * GC runs inside step 5; its reclaimed objects are its own concern). */
 object Maintenance {
 
-  /** One persisted family's maintenance surface. */
-  sealed trait IndexFamily {
-    def name: String
-    def recover(spark: SparkSession, path: String): Unit
-    def audit(spark: SparkSession, path: String): DataFrame
-    def compact(spark: SparkSession, path: String): Unit
-  }
-  case object TextFamily extends IndexFamily {
-    val name = "text"
-    def recover(spark: SparkSession, path: String): Unit =
-      TextIndex.recover(spark, path)
-    def audit(spark: SparkSession, path: String): DataFrame =
-      IndexAudit.auditText(spark, path)
-    def compact(spark: SparkSession, path: String): Unit =
-      TextIndex.compact(spark, path)
-  }
-  case object MinHashFamily extends IndexFamily {
-    val name = "minhash"
-    def recover(spark: SparkSession, path: String): Unit =
-      MinHashIndex.recover(spark, path)
-    def audit(spark: SparkSession, path: String): DataFrame =
-      IndexAudit.auditMinHash(spark, path)
-    def compact(spark: SparkSession, path: String): Unit =
-      MinHashIndex.compact(spark, path)
-  }
-  case object PqFamily extends IndexFamily {
-    val name = "pq"
-    def recover(spark: SparkSession, path: String): Unit =
-      ProductQuantizer.recover(spark, path)
-    def audit(spark: SparkSession, path: String): DataFrame =
-      IndexAudit.auditPq(spark, path)
-    def compact(spark: SparkSession, path: String): Unit =
-      ProductQuantizer.compact(spark, path)
-  }
-  case object IvfFamily extends IndexFamily {
-    val name = "ivf"
-    def recover(spark: SparkSession, path: String): Unit =
-      IvfIndex.recover(spark, path)
-    def audit(spark: SparkSession, path: String): DataFrame =
-      IndexAudit.auditIvf(spark, path)
-    def compact(spark: SparkSession, path: String): Unit =
-      IvfIndex.compact(spark, path)
-  }
-
   /** Run one maintenance cycle (see object doc for the step order and
     * why it is the only safe one). `tag` is the snapshot name for
     * tonight's generation — callers derive it from their scheduler's
-    * date, keeping the engine clock-free. */
-  def cycle(spark: SparkSession, family: IndexFamily, path: String,
+    * date, keeping the engine clock-free. `family` is the index
+    * family's lifecycle spec (e.g. [[TextIndex.lifecycle]]). */
+  def cycle(spark: SparkSession, family: IndexLifecycle.Spec, path: String,
       tag: String, keepLast: Int, protect: Set[String] = Set.empty,
       maxFilesPerDir: Int = 4, retakeTag: Boolean = false): DataFrame = {
     import spark.implicits._

@@ -54,7 +54,13 @@ object MinHashIndex {
     * it, so "meta readable" ⟺ "a save once completed here" — the signal
     * a restarting ingest stream keys its cold-start decision on. A
     * plain overwrite's delete-then-write window would break that
-    * inference. */
+    * inference.
+    *
+    * Crash contract: over a FRESH `path` the sigs and bands writes
+    * overlap ([[IndexLifecycle.writeAll]]); over an existing index they
+    * run in order — sigs, bands, meta — so a crash never leaves new
+    * bands over old sigs. A crash mid-save over an existing index leaves
+    * new sigs (and maybe bands) under the old meta; rerun the save. */
   def save(docs: DataFrame, idCol: String, textCol: String, path: String,
       n: Int = 3, k: Int = 64, bands: Int = 16, seed: Long = 42L): Unit = {
     val spark = docs.sparkSession
@@ -64,19 +70,12 @@ object MinHashIndex {
     try {
       // materialize the signature cache ONCE, then the two artifact
       // writes (disjoint subdirs, both reading the cache) run as
-      // concurrent jobs (§2.6, r17) — sequential writes serialized two
-      // cache scans behind one driver thread. Meta still lands LAST.
+      // concurrent jobs on a fresh path (§2.6, r17). Meta lands LAST.
       sigs.count()
-      graft.core.Concurrency.runAll(Seq(
+      IndexLifecycle.writeAll(spark, path, Seq(
         () => sigs.write.mode("overwrite").parquet(s"$path/sigs"),
-        // band-aligned write (the compact layout): one file per band dir,
-        // not input-partitions × bands small files — a fresh save must
-        // not instantly flag IndexMaintenance.needsCompact
-        () => banded(sigs, "id", k, bands)
-          .repartition(bands, col("band_idx"))
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile)
-          .partitionBy("band_idx").parquet(s"$path/bands")))
+        () => IndexLifecycle.aligned(banded(sigs, "id", k, bands), bands,
+          "band_idx").mode("overwrite").parquet(s"$path/bands")))
       StagedSwap.swapSub(spark, path, "meta", "_del") { tmp =>
         Seq((n, k, bands, seed)).toDF("n", "k", "bands", "seed")
           .coalesce(1).write.parquet(tmp)
@@ -84,10 +83,17 @@ object MinHashIndex {
     } finally sigs.unpersist()
   }
 
-  /** Writer-restart repair — the [[TextIndex.recover]] discipline on
-    * this family's swapped artifacts (sigs, bands, meta). */
+  /** This family's lifecycle facts: sigs (membership) and the
+    * band-partitioned buckets carry the ids; the band count is in meta. */
+  val lifecycle: IndexLifecycle.Spec = IndexLifecycle.Spec("minhash",
+    Seq(IndexLifecycle.IdArtifact("sigs", Some("id"), None),
+      IndexLifecycle.IdArtifact("bands", Some("id"), Some("band_idx"))),
+    IndexLifecycle.MetaColumn("bands"), flatParams = Nil,
+    recovered = Seq("sigs", "bands", "meta"), IndexAudit.auditMinHash)
+
+  /** [[IndexLifecycle.Spec.recover]] on this family's artifacts. */
   def recover(spark: SparkSession, path: String): Unit =
-    Seq("sigs", "bands", "meta").foreach(StagedSwap.recoverSub(spark, path, _))
+    lifecycle.recover(spark, path)
 
   /** Admit a new batch into an EXISTING index: append its signatures and
     * bands (parquet append — partitionBy(band_idx) layouts merge
@@ -103,124 +109,44 @@ object MinHashIndex {
     val sigs = Dedup.minhashSignatures(newDocs, idCol, textCol, n, k, seed)
       .select(col(idCol).as("id"), col("sig")).cache()
     try {
-      // sequential, NOT overlapped (the TextIndex.append lesson, r17):
-      // an ingest stream's batch lineage reads THIS index (the probe's
-      // sigs/bands scans), and a concurrent artifact commit recaches the
-      // cached signature frame mid-wave — the sibling write then
-      // recomputes over a self-excluding listing. save() overlaps
-      // safely; append must keep the strict sigs → bands order.
-      sigs.write.mode("append").parquet(s"$path/sigs")
-      banded(sigs, "id", k, bands)
-        .repartition(bands, col("band_idx"))
-        .write.mode("append")
-        .option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile)
-        .partitionBy("band_idx").parquet(s"$path/bands")
+      // the index exists, so writeAll keeps the strict sigs → bands
+      // order: an ingest batch's lineage reads THIS index, and a
+      // concurrent commit would recache the signature frame mid-wave
+      IndexLifecycle.writeAll(spark, path, Seq(
+        () => sigs.write.mode("append").parquet(s"$path/sigs"),
+        () => IndexLifecycle.aligned(banded(sigs, "id", k, bands), bands,
+          "band_idx").mode("append").parquet(s"$path/bands")))
     } finally sigs.unpersist()
   }
 
-  /** Upsert (replace-or-insert) a batch — the document-edited path:
-    * delete(batch ids) then append(batch), so re-ingested docs carry
-    * their NEW signatures and absent ids are plain inserts. Contract
+  /** Upsert (replace-or-insert) a batch — the document-edited path
+    * ([[IndexLifecycle.Spec.upsert]]): re-ingested docs carry their NEW
+    * signatures, never a stale dual signature. Contract
     * (MinHashIndexSpec): post-upsert probe ≡ probe of an index rebuilt
-    * with the batch replacing its ids. Crash between the halves leaves
-    * the batch ids absent (never stale dual-signature); the same upsert
-    * rerun is idempotent and completes it. Single-writer. */
+    * with the batch replacing its ids. */
   def upsert(batch: DataFrame, idCol: String, textCol: String,
-      path: String): Unit = {
-    delete(batch.sparkSession, path, batch.select(col(idCol)))
-    append(batch, idCol, textCol, path)
-  }
+      path: String): Unit =
+    lifecycle.upsert(batch, idCol, path)(append(batch, idCol, textCol, path))
 
   /** Targeted delete (right-to-be-forgotten): remove `ids` (a one-column
     * frame) from the index without a rebuild — `sigs/` and `bands/`
-    * rewrite filtered under the crash-safe [[StagedSwap]]. Signatures
-    * and bands are strictly per-row artifacts (no corpus-level stats to
+    * rewrite filtered ([[IndexLifecycle.Spec.delete]]). Signatures and
+    * bands are strictly per-row artifacts (no corpus-level stats to
     * correct, unlike [[TextIndex.delete]]), so post-delete probe is
     * EXACTLY probe of an index rebuilt without the ids
-    * (MinHashIndexSpec pins it). Crash window: a crash between the two
-    * swaps leaves deleted ids in one artifact but not the other — a
-    * band hit whose signature is gone drops out of the candidate join
-    * (inner on id), so deleted ids never surface mid-repair; re-running
-    * the same delete is idempotent and completes it. Single-writer, no
-    * concurrent append/probe during the swap (same as [[compact]]). */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    require(ids.columns.length == 1,
-      s"ids must be a one-column frame, got ${ids.columns.toSeq}")
-    recover(spark, path)
-    val del = ids.toDF("__del_id").distinct().cache()
-    try {
-      // same emptying guard as the other families: a zero-row rewrite
-      // under partitionBy writes NO data files (just _SUCCESS), bricking
-      // every future probe/stats with an unreadable-schema error
-      require(spark.read.parquet(s"$path/sigs")
-          .join(del, col("id") === col("__del_id"), "left_anti")
-          .head(1).nonEmpty,
-        "delete would empty the index; drop the index directory instead")
-      def swapSub(sub: String)(write: String => Unit): Unit =
-        StagedSwap.swapSub(spark, path, sub, "_del")(write)
-      // disjoint subdirs, both reading pre-swap state + the cached
-      // delete set: run the two rewrites as concurrent Spark jobs
-      // (§2.6). The documented crash contract already covers either
-      // artifact landing first (deleted ids in one but not the other
-      // never surface — the candidate join is inner on id).
-      graft.core.Concurrency.runAll(Seq(
-        () => swapSub("sigs") { tmp =>
-          spark.read.parquet(s"$path/sigs")
-            .join(del, col("id") === col("__del_id"), "left_anti")
-            .write.parquet(tmp)
-        },
-        () => swapSub("bands") { tmp =>
-          // no repartition: a broadcast anti-join over a band-aligned
-          // layout keeps input partitioning, so the rewrite stays aligned
-          // for free (the TextIndex.delete rationale)
-          spark.read.parquet(s"$path/bands")
-            .join(del, col("id") === col("__del_id"), "left_anti")
-            .write.partitionBy("band_idx").parquet(tmp)
-        }))
-    } finally del.unpersist()
-  }
+    * (MinHashIndexSpec pins it). A band hit whose signature is gone
+    * drops out of the candidate join (inner on id), so a crash between
+    * the two swaps never surfaces a deleted id. */
+  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    lifecycle.delete(spark, path, ids)
 
   /** Compact an index that has accreted small files through [[append]]:
-    * every ingest micro-batch adds one file set per band partition, so
-    * thousands of batches turn `bands/` into thousands of tiny files per
-    * band and probe cost becomes file-open-bound. Rewrites `bands/` to
-    * ~one file per band partition and `sigs/` to size-proportional file
-    * counts, preserving contents exactly (spec-pinned: probe results are
-    * identical pre/post).
-    *
-    * Single-writer contract (same as [[append]]): no concurrent probe or
-    * append may run during the swap — the rewrite stages into a sibling
-    * directory and swaps via the crash-safe [[StagedSwap]] (never a mixed
-    * read; a crash in the rename window is repaired by the next compact's
-    * recovery step, which restores the live directory from the surviving
-    * copy before deleting anything). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    recover(spark, path)
-    val (_, _, bands, _) = meta(spark, path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def swap(sub: String)(write: String => Unit): Unit =
-      StagedSwap.swapSub(spark, path, sub, "_compact")(write)
-    // disjoint subdirs, content-preserving rewrites: concurrent jobs
-    // (§2.6) — a crash leaving one artifact compacted and the other not
-    // is a valid (identical-content) state
-    graft.core.Concurrency.runAll(Seq(
-      () => swap("bands") { tmp =>
-        // repartition on band_idx: each task holds whole band partitions,
-        // so partitionBy emits ~one file per band directory
-        spark.read.parquet(s"$path/bands")
-          .repartition(bands, col("band_idx"))
-          .write.partitionBy("band_idx")
-          .option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile)
-          .parquet(tmp)
-      },
-      () => swap("sigs") { tmp =>
-        // ~128 MB-target file count from the on-disk byte size, min 1
-        val live = new org.apache.hadoop.fs.Path(s"$path/sigs")
-        val bytes = live.getFileSystem(conf).getContentSummary(live).getLength
-        val nFiles = math.max(1L, bytes / (128L << 20)).toInt
-        spark.read.parquet(s"$path/sigs").repartition(nFiles).write.parquet(tmp)
-      }))
-  }
+    * `bands/` to ~one file per band partition, `sigs/` to
+    * size-proportional file counts, contents exactly preserved
+    * (spec-pinned: probe results identical pre/post). See
+    * [[IndexLifecycle.Spec.compact]]. */
+  def compact(spark: SparkSession, path: String): Unit =
+    lifecycle.compact(spark, path)
 
   private def meta(spark: SparkSession, path: String): (Int, Int, Int, Long) = {
     val row = spark.read.parquet(s"$path/meta").head()

@@ -374,18 +374,12 @@ object ProductQuantizer {
       model: DataFrame, dir: String, residual: Boolean): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    // parameter-sized artifacts (k x dim rows): one file each, like meta —
-    // multi-file writes here would trip the fragmentation policy forever
-    // (compact only rewrites codes/, the corpus-sized artifact)
+    // parameter-sized artifacts (k x dim rows): one file each, like meta
     coarse.coalesce(1).write.mode("overwrite").parquet(s"$dir/coarse")
     model.coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_model")
-    // list-aligned write (the compact layout): ~one file per cell dir,
-    // not shuffle-partitions × cells — a fresh save must not instantly
-    // flag IndexMaintenance.needsCompact
     val nLists = coarse.select(col("cluster_id")).distinct().count().toInt
-    indexArtifact(df, idCol, vecCol, coarse, model, residual)
-      .repartition(nLists, col("list_id"))
-      .write.option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile).partitionBy("list_id").mode("overwrite").parquet(s"$dir/codes")
+    IndexLifecycle.aligned(indexArtifact(df, idCol, vecCol, coarse, model,
+      residual), nLists, "list_id").mode("overwrite").parquet(s"$dir/codes")
     Seq(residual).toDF("residual")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
@@ -417,15 +411,19 @@ object ProductQuantizer {
       .head().getAs[Boolean]("residual")
     val coarse = spark.read.parquet(s"$dir/coarse")
     val nLists = coarse.select(col("cluster_id")).distinct().count().toInt
-    indexArtifact(df, idCol, vecCol, coarse,
-        spark.read.parquet(s"$dir/pq_model"), residual)
-      .repartition(nLists, col("list_id"))
-      .write.option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile).partitionBy("list_id").mode("append").parquet(s"$dir/codes")
+    IndexLifecycle.aligned(indexArtifact(df, idCol, vecCol, coarse,
+        spark.read.parquet(s"$dir/pq_model"), residual), nLists, "list_id")
+      .mode("append").parquet(s"$dir/codes")
   }
 
-  private def codesIdCol(codes: DataFrame): String =
-    codes.columns.find(c => c != "codes" && c != "list_id")
-      .getOrElse(throw new IllegalStateException("codes artifact lacks an id column"))
+  /** This family's lifecycle facts: `codes/` carries the caller's id
+    * column, partitioned by cell; the cell count is the coarse model's
+    * cluster count; the two codebooks are the flat parameter artifacts. */
+  val lifecycle: IndexLifecycle.Spec = IndexLifecycle.Spec("pq",
+    Seq(IndexLifecycle.IdArtifact("codes", None, Some("list_id"))),
+    IndexLifecycle.DistinctCount("coarse", "cluster_id"),
+    flatParams = Seq("coarse", "pq_model"),
+    recovered = Seq("codes", "coarse", "pq_model"), IndexAudit.auditPq)
 
   /** The pruned-scan scored frame behind [[probeSaved]]: one row per
     * (query, code in a probed cell) with the asymmetric distance and no
@@ -450,8 +448,8 @@ object ProductQuantizer {
       idFilter: Option[DataFrame] = None): DataFrame = {
     val (codes, probes, m) =
       savedProbePlan(queries, queryIdCol, queryVecCol, spark, dir, nProbe)
-    scoredAgainst(filteredCodes(codes, idFilter), codesIdCol(codes),
-      probes, m)
+    scoredAgainst(filteredCodes(codes, idFilter),
+      lifecycle.membership.idColIn(codes.schema), probes, m)
   }
 
   /** Probe a persisted index. The probed cell ids resolve driver-side
@@ -465,8 +463,8 @@ object ProductQuantizer {
       idFilter: Option[DataFrame] = None): DataFrame = {
     val (codes, probes, m) =
       savedProbePlan(queries, queryIdCol, queryVecCol, spark, dir, nProbe)
-    scoreAgainst(filteredCodes(codes, idFilter), codesIdCol(codes),
-      probes, m, k)
+    scoreAgainst(filteredCodes(codes, idFilter),
+      lifecycle.membership.idColIn(codes.schema), probes, m, k)
   }
 
   /** Apply an optional allowed-id semi-join to a codes scan. */
@@ -476,7 +474,8 @@ object ProductQuantizer {
       require(f.columns.length == 1,
         s"idFilter must be a one-column frame, got ${f.columns.toSeq}")
       codes.join(f.toDF("__allow_id"),
-        col(codesIdCol(codes)) === col("__allow_id"), "left_semi")
+        col(lifecycle.membership.idColIn(codes.schema)) === col("__allow_id"),
+        "left_semi")
     }
 
   /** Shared probe plan over a persisted index: (pruned codes scan,
@@ -499,91 +498,36 @@ object ProductQuantizer {
 
   /** Targeted delete (right-to-be-forgotten): remove `ids` (a one-column
     * frame) from a persisted index without a rebuild — the `codes/`
-    * artifact (the only corpus-sized one) rewrites filtered under the
-    * crash-safe [[StagedSwap]], preserving the list_id partition layout.
-    * The codebooks and coarse model are deliberately untouched: they are
+    * artifact (the only corpus-sized one) rewrites filtered, preserving
+    * the list_id partition layout ([[IndexLifecycle.Spec.delete]]). The
+    * codebooks and coarse model are deliberately untouched: they are
     * distribution fits refit on a maintenance cadence (the [[append]]
     * discipline), and codes are strictly per-row, so post-delete
     * [[probeSaved]] is EXACTLY the pre-delete probe with the deleted ids
-    * removed and ranks recomputed (PqSpec pins it) — a deleted vector
-    * can never surface again. Single-writer, no concurrent append/probe
-    * during the swap. */
+    * removed and ranks recomputed (PqSpec pins it). */
   def delete(spark: org.apache.spark.sql.SparkSession, dir: String,
-      ids: DataFrame): Unit = {
-    require(ids.columns.length == 1,
-      s"ids must be a one-column frame, got ${ids.columns.toSeq}")
-    recover(spark, dir)
-    val del = ids.toDF("__del_id").distinct().cache()
-    try {
-      // same emptying guard as the other families: a zero-row rewrite
-      // under partitionBy writes NO data files, bricking every future
-      // probeSaved/stats with an unreadable-schema error. NOTE this also
-      // rejects an upsert whose batch covers the WHOLE corpus — use a
-      // fresh save for a full refresh.
-      val preCodes = spark.read.parquet(s"$dir/codes")
-      require(preCodes
-          .join(del, col(codesIdCol(preCodes)) === col("__del_id"), "left_anti")
-          .head(1).nonEmpty,
-        "delete would empty the index; drop the index directory instead")
-      StagedSwap.swapSub(spark, dir, "codes", "_del") { tmpDir =>
-        val codes = spark.read.parquet(s"$dir/codes")
-        val idName = codesIdCol(codes)
-        // no repartition: a broadcast anti-join over a list-aligned
-        // layout keeps input partitioning, so the rewrite stays aligned
-        // for free (the TextIndex.delete rationale)
-        codes.join(del, col(idName) === col("__del_id"), "left_anti")
-          .write.option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile).partitionBy("list_id").parquet(tmpDir)
-      }
-    } finally del.unpersist()
-  }
+      ids: DataFrame): Unit =
+    lifecycle.delete(spark, dir, ids)
 
-  /** Writer-restart repair — the [[TextIndex.recover]] discipline on
-    * this family's swapped artifacts (codes, plus the parameter
-    * artifacts [[compact]] may coalesce). */
+  /** [[IndexLifecycle.Spec.recover]] on this family's artifacts. */
   def recover(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    Seq("codes", "coarse", "pq_model")
-      .foreach(StagedSwap.recoverSub(spark, dir, _))
+    lifecycle.recover(spark, dir)
 
-  /** Rewrite append-accreted code partitions to ~one file per cell via
-    * the crash-safe [[StagedSwap]] — same contract as
-    * [[IvfIndex.compact]]. Single-writer, no concurrent append/probe.
-    * Also coalesces multi-file PARAMETER artifacts (coarse, pq_model —
-    * k x dim rows written single-file by today's [[save]], multi-file by
-    * older saves): the fragmentation policy counts every artifact, and a
-    * compact that can't clear a flagged artifact would re-trigger on
-    * every maintenance pass forever — so compact heals everything the
-    * policy measures, a one-time migration for pre-coalesce indexes. */
-  def compact(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    recover(spark, dir)
-    val nLists = spark.read.parquet(s"$dir/coarse")
-      .select(col("cluster_id")).distinct().count().toInt
-    StagedSwap.swapSub(spark, dir, "codes", "_compact") { tmpDir =>
-      spark.read.parquet(s"$dir/codes")
-        .repartition(nLists, col("list_id"))
-        .write.option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile).partitionBy("list_id").parquet(tmpDir)
-    }
-    Seq("coarse", "pq_model").foreach(sub =>
-      IndexMaintenance.coalesceFlatArtifact(spark, dir, sub))
-  }
+  /** Rewrite append-accreted code partitions to ~one file per cell
+    * ([[IndexLifecycle.Spec.compact]]), healing multi-file parameter
+    * artifacts (coarse, pq_model) from older saves too. */
+  def compact(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+    lifecycle.compact(spark, dir)
 
   /** Upsert (replace-or-insert) a batch of vectors — the RE-EMBED path
-    * of the lifecycle: a document was edited, its embedding recomputed,
-    * and the serving index must swap the old vector for the new one
-    * without a rebuild. Exactly delete(batch ids) then append(batch):
-    * existing ids are re-encoded against the SAVED codebooks into their
-    * new cells, absent ids are plain inserts. Contract (PqSpec):
+    * ([[IndexLifecycle.Spec.upsert]]): existing ids are re-encoded
+    * against the SAVED codebooks into their new cells. Contract (PqSpec):
     * post-upsert probe ≡ probe of an index rebuilt with the batch
     * replacing its ids under the same codebooks. Codebooks stay
-    * immutable ([[append]]'s maintenance-cadence discipline) — a
-    * distribution shift big enough to invalidate them is a refit+save,
-    * not an upsert. Crash between the halves leaves the batch ids
-    * absent; the same upsert rerun is idempotent and completes it.
-    * Single-writer. */
+    * immutable — a shift big enough to invalidate them is a refit+save. */
   def upsert(df: DataFrame, idCol: String, vecCol: String,
-      dir: String): Unit = {
-    delete(df.sparkSession, dir, df.select(col(idCol)))
-    append(df, idCol, vecCol, dir)
-  }
+      dir: String): Unit =
+    lifecycle.upsert(df, idCol, dir)(append(df, idCol, vecCol, dir))
 
   /** Operational snapshot of a persisted IVFADC index — one (stat,
     * value) row per metric, exact longs (the [[TextIndex.stats]]

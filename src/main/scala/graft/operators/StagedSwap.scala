@@ -2,9 +2,12 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Crash-safe staged directory swap shared by [[IvfIndex.compact]] and
-  * [[MinHashIndex.compact]]: write the rewritten copy to `tmp`, stage the
-  * live directory aside as `old`, promote `tmp`, drop `old`.
+/** Crash-safe staged directory swap shared by every rewrite of a live
+  * directory — [[IndexLifecycle]]'s deletes and compacts, meta writes,
+  * refits, snapshot restores, sink compaction and the streaming state
+  * stores: write the
+  * rewritten copy to `tmp`, stage the live directory aside as `old`,
+  * promote `tmp`, drop `old`.
   *
   * The dangerous window is between rename(live→old) and rename(tmp→live):
   * a crash there leaves NO live directory, only `old` (the original) and
@@ -18,7 +21,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * restores `old` before throwing, so `live` never stays missing after an
   * exception either.
   *
-  * Single-writer contract (same as the callers'): one compactor at a time.
+  * Single-writer contract (same as the callers'): one swapper at a time.
   */
 object StagedSwap {
 
@@ -189,11 +192,13 @@ object StagedSwap {
     if (fs.exists(live)) { checkedDelete(fs, tmp); checkedDelete(fs, old) }
     write(tmp.toString)
     if (fs.exists(live) && !fs.rename(live, old))
-      throw new java.io.IOException(s"compact: cannot stage $live aside")
+      throw new java.io.IOException(
+        s"swap: cannot stage ${live.getName} aside ($live to $old)")
     if (!fs.rename(tmp, live)) {
       // put the original back before failing — live must never stay missing
       fs.rename(old, live)
-      throw new java.io.IOException(s"compact: cannot promote $tmp to $live")
+      throw new java.io.IOException(
+        s"swap: cannot promote ${live.getName} ($tmp to $live)")
     }
     checkedDelete(fs, old)
   }

@@ -62,13 +62,19 @@ object TextIndex {
     docs.select(col(idCol).as("doc_id"),
       size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"))
 
-  /** Writer-restart repair: recover any crashed swap's leftovers on the
-    * swapped artifacts (postings, docs, meta) BEFORE reading or mutating
-    * — the [[StagedSwap.recoverSub]] contract. Every mutation entry
-    * point calls this; restarting ingest streams call it per batch so a
-    * mid-swap crash is never misread as an absent index. */
+  /** This family's lifecycle facts: docs (the membership sidecar) and
+    * postings carry the ids; buckets come from meta; the one
+    * surviving-docs aggregate is the delete guard and the new meta. */
+  val lifecycle: IndexLifecycle.Spec = IndexLifecycle.Spec("text",
+    Seq(IndexLifecycle.IdArtifact("docs", Some("doc_id"), None),
+      IndexLifecycle.IdArtifact("postings", Some("doc_id"), Some("bucket"))),
+    IndexLifecycle.MetaColumn("n_buckets"), flatParams = Nil,
+    recovered = Seq("postings", "docs", "meta"), IndexAudit.auditText,
+    guard = Some(survivingMeta))
+
+  /** [[IndexLifecycle.Spec.recover]] on this family's artifacts. */
   def recover(spark: SparkSession, path: String): Unit =
-    Seq("postings", "docs", "meta").foreach(StagedSwap.recoverSub(spark, path, _))
+    lifecycle.recover(spark, path)
 
   /** Every meta write goes through [[StagedSwap]] so meta is NEVER
     * half-written: a readable meta therefore means "a save once
@@ -93,16 +99,19 @@ object TextIndex {
     * written LAST (and atomically) — an index without readable meta is
     * by construction a save that never completed, never a served one.
     *
+    * Crash contract: over a FRESH `path` the postings write and the
+    * stats aggregate overlap ([[IndexLifecycle.writeAll]]); over an
+    * existing index everything runs in order — postings, stats
+    * aggregate, docs, meta — because `docs` may read this index and no
+    * commit may recache it under the aggregate. A crash mid-save over
+    * an existing index leaves new artifacts under the old meta; rerun
+    * the save.
+    *
     * Cost shape (r16): TWO tokenization passes over the corpus (the r15
     * form paid three — postings, the docs sidecar, and a third full text
     * scan for the corpus stats; stats now aggregate over the cached
     * narrow (doc_id, dl) sidecar frame, which costs 16 bytes/row to
-    * hold). The postings write repartitions on `bucket` first, so
-    * partitionBy emits ~one file per bucket (the [[compact]] layout) —
-    * the r15 form fanned out shuffle-partitions × buckets small files,
-    * which made a FRESH save instantly flag
-    * [[IndexMaintenance.needsCompact]] and cost a full compact on the
-    * first in-stream maintenance cycle. */
+    * hold). Postings land bucket-aligned ([[IndexLifecycle.aligned]]). */
   def save(docs: DataFrame, idCol: String, textCol: String, path: String,
       nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
@@ -110,17 +119,15 @@ object TextIndex {
     val docRows = docRowsOf(docs, idCol, textCol).persist()
     try {
       // the postings write and the sidecar stats aggregate are the two
-      // tokenization passes — independent reads, so they run as
-      // concurrent jobs (§2.6, r17): the narrow aggregate back-fills the
-      // big write's stage tails instead of paying a separate round-trip.
-      // Ordering constraints preserved: the stats aggregate still runs
-      // BEFORE the sidecar write (the append-path recache discipline —
-      // `docs` may read this index), and meta still lands LAST.
-      val wave = graft.core.Concurrency.runAll(Seq[() => Any](
-        () => postingsOf(docs, idCol, textCol, nBuckets)
-          .repartition(nBuckets, col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket")
-          .option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile)
+      // tokenization passes — independent reads, so on a fresh path they
+      // run as concurrent jobs (§2.6, r17): the narrow aggregate
+      // back-fills the big write's stage tails. Ordering constraints
+      // preserved: the stats aggregate still runs BEFORE the sidecar
+      // write (the append-path recache discipline — `docs` may read this
+      // index), and meta still lands LAST.
+      val wave = IndexLifecycle.writeAll(spark, path, Seq[() => Any](
+        () => IndexLifecycle.aligned(postingsOf(docs, idCol, textCol,
+          nBuckets), nBuckets, "bucket").mode("overwrite")
           .parquet(s"$path/postings"),
         () => docRows.agg(count(lit(1)),
           coalesce(sum(col("dl")), lit(0L))).collect().head))
@@ -142,11 +149,8 @@ object TextIndex {
     recover(spark, path)
     val meta = spark.read.parquet(s"$path/meta").collect().head
     val nBuckets = meta.getInt(2)
-    postingsOf(batch, idCol, textCol, nBuckets)
-      .repartition(nBuckets, col("bucket"))
-      .write.mode("append").partitionBy("bucket")
-      .option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile)
-      .parquet(s"$path/postings")
+    IndexLifecycle.aligned(postingsOf(batch, idCol, textCol, nBuckets),
+      nBuckets, "bucket").mode("append").parquet(s"$path/postings")
     val docRows = docRowsOf(batch, idCol, textCol).persist()
     try {
       // stats aggregate FIRST, sidecar write second: `batch` may read
@@ -156,14 +160,10 @@ object TextIndex {
       // aggregate would recompute over a self-excluding (empty) batch
       // and silently lose the meta increment. Aggregating first pins the
       // cache to the pre-write listing; the write then reuses it.
-      // NOTE (r17): do NOT overlap the postings write with this
-      // aggregate — the seen-set reads postings TOO (docs ∪ postings),
-      // and a concurrent postings commit recaches the sidecar frame
-      // mid-wave: the sidecar write then lands EMPTY (measured live as
-      // q247's fsck failing with every batch-1 posting orphaned). The
-      // strict order postings → aggregate → sidecar → meta is
-      // load-bearing; save() can overlap because a cold-start input
-      // cannot read an index that does not exist yet.
+      // Never overlapped with the postings write: the seen-set reads
+      // postings TOO, and a concurrent postings commit recaches the
+      // sidecar frame mid-wave, landing the sidecar EMPTY (q247's fsck
+      // caught it) — the [[IndexLifecycle.writeAll]] rule.
       val r = docRows.agg(count(lit(1)),
         coalesce(sum(col("dl")), lit(0L))).collect().head
       docRows.write.mode("append").parquet(s"$path/docs")
@@ -172,26 +172,15 @@ object TextIndex {
     } finally docRows.unpersist()
   }
 
-  /** Upsert (replace-or-insert) a batch — the document-EDITED path of
-    * the lifecycle, the one mutation [[append]]+[[delete]] don't cover
-    * alone: re-ingesting a crawl where some documents changed and some
-    * are new. Exactly delete(batch ids) then append(batch): ids already
-    * indexed are replaced by their new text, absent ids are plain
-    * inserts (delete no-ops them), and the corpus stats stay corrected
+  /** Upsert (replace-or-insert) a batch — the document-EDITED path:
+    * re-ingesting a crawl where some documents changed and some are new
+    * ([[IndexLifecycle.Spec.upsert]]); the corpus stats stay corrected
     * through both halves. Contract (TextIndexSpec + the q220 oracle):
     * post-upsert probe ≡ probe of an index rebuilt with the batch
-    * replacing its ids.
-    *
-    * Crash between the halves leaves the batch ids absent under sound
-    * stats (the [[delete]] contract); rerunning the SAME upsert is
-    * idempotent and completes it. Single-writer, like append/delete.
-    * A batch replacing the ENTIRE corpus is rejected by delete's
-    * emptying guard — use [[save]] for a full refresh. */
+    * replacing its ids. */
   def upsert(batch: DataFrame, idCol: String, textCol: String,
-      path: String): Unit = {
-    delete(batch.sparkSession, path, batch.select(col(idCol)))
-    append(batch, idCol, textCol, path)
-  }
+      path: String): Unit =
+    lifecycle.upsert(batch, idCol, path)(append(batch, idCol, textCol, path))
 
   /** Operational snapshot of a persisted index — the serving-dashboard
     * frame every index deployment needs: one (stat, value) row per
@@ -236,128 +225,54 @@ object TextIndex {
   }
 
   /** Compact an index that has accreted small files through [[append]]/
-    * [[upsert]]: every ingest micro-batch adds one file set per bucket
-    * partition, so thousands of batches turn `postings/` into thousands
-    * of tiny files per bucket and the probe's bucket-file pruning
-    * becomes file-open-bound — the [[MinHashIndex.compact]] problem on
-    * the inverted file. Rewrites `postings/` to ~one file per bucket
-    * partition and `docs/` to size-proportional file counts, contents
-    * and meta untouched (spec-pinned: probe AND stats identical
-    * pre/post). Single-writer, staged under the crash-safe
-    * [[StagedSwap]], same as the other families' compacts. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    recover(spark, path)
-    val nBuckets = spark.read.parquet(s"$path/meta").head().getInt(2)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def swap(sub: String)(write: String => Unit): Unit =
-      StagedSwap.swapSub(spark, path, sub, "_compact")(write)
-    // disjoint subdirs, content-preserving rewrites: the two swaps run
-    // as concurrent Spark jobs (§2.6) — a crash leaving one artifact
-    // compacted and the other not is a valid (identical-content) state
-    graft.core.Concurrency.runAll(Seq(
-      () => swap("postings") { tmp =>
-        // repartition on bucket: each task holds whole bucket partitions,
-        // so partitionBy emits ~one file per bucket directory
-        spark.read.parquet(s"$path/postings")
-          .repartition(nBuckets, col("bucket"))
-          .write.partitionBy("bucket")
-          .option("maxRecordsPerFile", graft.core.IndexLayout.maxRecordsPerFile)
-          .parquet(tmp)
-      },
-      () => swap("docs") { tmp =>
-        val live = new org.apache.hadoop.fs.Path(s"$path/docs")
-        val bytes = live.getFileSystem(conf).getContentSummary(live).getLength
-        val nFiles = math.max(1L, bytes / (128L << 20)).toInt
-        spark.read.parquet(s"$path/docs").repartition(nFiles).write.parquet(tmp)
-      }))
-  }
+    * [[upsert]]: `postings/` to ~one file per bucket partition, `docs/`
+    * to size-proportional file counts, contents and meta untouched
+    * (spec-pinned: probe AND stats identical pre/post). See
+    * [[IndexLifecycle.Spec.compact]]. */
+  def compact(spark: SparkSession, path: String): Unit =
+    lifecycle.compact(spark, path)
 
   /** Targeted delete (right-to-be-forgotten): remove `ids` (a one-column
     * frame of doc ids) from the index WITHOUT a corpus rebuild — postings
-    * and the docs sidecar rewrite filtered under the crash-safe
-    * [[StagedSwap]], then meta rewrites with the CORRECTED statistics
-    * (n_docs and sum_dl decremented by exactly the removed documents, so
-    * BM25's idf/avgdl never go stale — a tombstone-only design would
-    * keep scoring deleted mass forever). Contract (TextIndexSpec):
-    * post-delete probe ≡ probe of an index rebuilt without the ids.
+    * and the docs sidecar rewrite filtered ([[IndexLifecycle.Spec.delete]]),
+    * then meta rewrites with the CORRECTED statistics (n_docs and sum_dl
+    * of exactly the surviving documents, so BM25's idf/avgdl never go
+    * stale — a tombstone-only design would keep scoring deleted mass
+    * forever). Contract (TextIndexSpec): post-delete probe ≡ probe of an
+    * index rebuilt without the ids.
     *
-    * Crash windows (the two artifact swaps run CONCURRENTLY, meta last):
-    * any subset of {postings, docs} swapped under the old meta leaves a
-    * structurally sound index (fewer postings under slightly-too-large
-    * stats — the [[append]] stale-stats contract), and re-running the
-    * SAME delete is idempotent and completes the repair, because nothing
-    * is decremented: meta is RECOMPUTED from the surviving sidecar rows
-    * (the anti-join aggregate below — identical on a fresh run and on
-    * every crash-rerun), so a rerun after any crash point converges to
-    * the rebuilt-without-ids state. Same single-writer contract as
-    * [[append]].
-    *
-    * Deleting ids not in the index is a no-op for them. Deleting the
-    * ENTIRE corpus is rejected — an index over nothing has no meaningful
-    * stats; drop the directory instead. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    import spark.implicits._
-    require(ids.columns.length == 1,
-      s"ids must be a one-column frame, got ${ids.columns.toSeq}")
-    recover(spark, path)
-    val del = ids.toDF("__del_id").distinct().cache()
-    try {
-      val nBuckets = spark.read.parquet(s"$path/meta").collect().head.getInt(2)
-      val surviving = spark.read.parquet(s"$path/docs")
-        .join(del, col("doc_id") === col("__del_id"), "left_anti")
-        .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
-        .collect().head
-      require(surviving.getLong(0) > 0,
-        "delete would empty the index; drop the index directory instead")
-      // the row-count guard is not enough: if every SURVIVOR is
-      // token-less (dl = 0 ⇒ no postings rows) the postings rewrite
-      // emits zero rows, partitionBy writes no data files, and every
-      // future probe/stats dies on an unreadable-schema read. The
-      // surviving sum(dl) already answers this for free: a doc emits
-      // postings rows iff it has ≥ 1 token iff its sidecar dl ≥ 1
-      // (postingsOf and docRowsOf derive both from the same tokens()),
-      // so sum(dl) > 0 ⟺ the rewrite keeps ≥ 1 postings row — no
-      // corpus-scale postings anti-join needed before the swap
-      require(surviving.getLong(1) > 0,
-        "delete would leave an index whose surviving documents are all " +
-          "token-less (zero postings rows); drop the index directory " +
-          "and rebuild instead")
-      def swapSub(sub: String)(write: String => Unit): Unit =
-        StagedSwap.swapSub(spark, path, sub, "_del")(write)
-      // the two artifact rewrites touch DISJOINT subdirs and both read
-      // only pre-swap state + the cached delete set — run them as
-      // concurrent Spark jobs (§2.6 overlap). Crash contract unchanged
-      // in kind: any subset of {postings, docs} swapped under the old
-      // meta is structurally sound (the append stale-stats contract; a
-      // band hit whose sidecar row is gone still scores consistently
-      // because postings are self-contained), and re-running the SAME
-      // delete is idempotent and completes the repair.
-      graft.core.Concurrency.runAll(Seq(
-        () => swapSub("postings") { tmp =>
-          // no repartition here: on a bucket-aligned index (save/append/
-          // compact all emit ~one file per bucket) a broadcast anti-join
-          // keeps input partitioning, so the rewrite stays aligned for
-          // free — an explicit exchange measured +20% on the delete-heavy
-          // lifecycle queries for zero file-count benefit
-          spark.read.parquet(s"$path/postings")
-            .join(del, col("doc_id") === col("__del_id"), "left_anti")
-            .write.partitionBy("bucket").parquet(tmp)
-        },
-        () => swapSub("docs") { tmp =>
-          spark.read.parquet(s"$path/docs")
-            .join(del, col("doc_id") === col("__del_id"), "left_anti")
-            .write.parquet(tmp)
-        }))
-      // meta LAST, recomputed from the SURVIVING sidecar rows — never
-      // decremented from the old meta, so a rerun after any crash point
-      // self-heals. The `surviving` aggregate above IS that recompute
-      // (docs anti-join del ≡ the post-swap sidecar, on a fresh run and
-      // on every crash-rerun: an already-filtered docs makes the
-      // anti-join a no-op), so re-reading the swapped sidecar here was a
-      // third corpus-sidecar job for the same two numbers.
-      writeMeta(spark, path, surviving.getLong(0), surviving.getLong(1),
-        nBuckets)
-    } finally del.unpersist()
+    * Crash windows: any subset of {postings, docs} swapped under the old
+    * meta is structurally sound (the [[append]] stale-stats contract),
+    * and rerunning the SAME delete converges, because meta is RECOMPUTED
+    * from the surviving sidecar rows, never decremented. Deleting the
+    * ENTIRE corpus is rejected — drop the directory instead. */
+  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    lifecycle.delete(spark, path, ids)
+
+  /** The delete guard: ONE aggregate over the surviving sidecar rows
+    * (docs anti-join the delete set — the post-swap sidecar on a fresh
+    * run and on every crash-rerun) is both the emptying check and the
+    * recomputed meta written after the rewrites. Rows > 0 alone is not
+    * enough: if every survivor is token-less (dl = 0 ⇒ no postings rows)
+    * the postings rewrite emits no data files and every later read dies
+    * on an unreadable schema. A doc emits postings iff its sidecar
+    * dl ≥ 1 (both derive from the same tokens()), so sum(dl) > 0 ⟺ the
+    * rewrite keeps a postings row — no postings anti-join needed. */
+  private def survivingMeta(spark: SparkSession, path: String,
+      del: DataFrame): () => Unit = {
+    val nBuckets = spark.read.parquet(s"$path/meta").collect().head.getInt(2)
+    val surviving = spark.read.parquet(s"$path/docs")
+      .join(del, col("doc_id") === col("__del_id"), "left_anti")
+      .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
+      .collect().head
+    require(surviving.getLong(0) > 0,
+      "delete would empty the index; drop the index directory instead")
+    require(surviving.getLong(1) > 0,
+      "delete would leave an index whose surviving documents are all " +
+        "token-less (zero postings rows); drop the index directory " +
+        "and rebuild instead")
+    () => writeMeta(spark, path, surviving.getLong(0), surviving.getLong(1),
+      nBuckets)
   }
 
   /** Top-k BM25 over the persisted index — same output contract as

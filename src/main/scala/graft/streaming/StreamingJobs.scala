@@ -63,7 +63,7 @@ object StreamingJobs {
   }
 
   private def maybeCycle(spark: SparkSession,
-      family: graft.operators.Maintenance.IndexFamily, indexPath: String,
+      family: graft.operators.IndexLifecycle.Spec, indexPath: String,
       batchId: Long, policy: Option[MaintenancePolicy]): Unit =
     policy.filter(_.due(batchId)).foreach { p =>
       // cold-start guard: a due batch before the index's first save
@@ -76,6 +76,23 @@ object StreamingJobs {
           p.tag(batchId), p.keepLast, p.protect, p.maxFilesPerDir,
           retakeTag = true)
     }
+
+  /** Whether artifact `sub` of the index at `indexPath` reads. */
+  private def readable(spark: SparkSession, indexPath: String,
+      sub: String): Boolean =
+    try { spark.read.parquet(s"$indexPath/$sub"); true }
+    catch { case _: org.apache.spark.sql.AnalysisException => false }
+
+  /** Opt-in in-stream compaction: one directory listing per batch, and a
+    * compact only once append-accreted files pass the policy threshold
+    * (the stream's foreachBatch IS the index's single writer, so the
+    * swap is safe). */
+  private def autoCompact(spark: SparkSession,
+      family: graft.operators.IndexLifecycle.Spec, indexPath: String,
+      filesPerDir: Option[Int]): Unit =
+    if (filesPerDir.exists(t =>
+        graft.operators.IndexMaintenance.needsCompact(spark, indexPath, t)))
+      family.compact(spark, indexPath)
 
   /** A fenced-out batch is normally checkpoint REPLAY (the engine
     * redelivered a batchId the state already folded) — but batch 0 fenced
@@ -237,14 +254,9 @@ object StreamingJobs {
           val kept = fresh.join(losers, Seq(idCol), "left_anti")
           graft.sinks.Sinks.upsertIgnoreParquet(kept, outPath, Seq(idCol))
           graft.operators.MinHashIndex.append(kept, idCol, textCol, indexPath)
-          // opt-in maintenance, the indexOnArrival knob: per-batch appends
-          // fragment sigs/bands at exactly the text stream's rate; one
-          // listing per batch, compact only past the policy threshold
-          // (this foreachBatch IS the single writer, so the swap is safe)
-          if (autoCompactFilesPerDir.exists(t =>
-              graft.operators.IndexMaintenance.needsCompact(spark, indexPath, t)))
-            graft.operators.MinHashIndex.compact(spark, indexPath)
-          maybeCycle(spark, graft.operators.Maintenance.MinHashFamily,
+          autoCompact(spark, graft.operators.MinHashIndex.lifecycle,
+            indexPath, autoCompactFilesPerDir)
+          maybeCycle(spark, graft.operators.MinHashIndex.lifecycle,
             indexPath, batchId, maintenance)
           // the OUTPUT corpus fragments at the same per-batch rate the
           // index does (upsertIgnoreParquet appends one file set per
@@ -292,9 +304,6 @@ object StreamingJobs {
             try Some(spark.read.parquet(s"$indexPath/$sub")
               .select(col(idName).as("__seen_id")).distinct())
             catch { case _: org.apache.spark.sql.AnalysisException => None }
-          def readable(sub: String) =
-            try { spark.read.parquet(s"$indexPath/$sub"); true }
-            catch { case _: org.apache.spark.sql.AnalysisException => false }
           // cold-start detection keys on META, not on postings/docs:
           // save writes meta LAST and atomically (TextIndex.writeMeta's
           // swap), so unreadable meta after recover() ⟺ no save ever
@@ -312,7 +321,7 @@ object StreamingJobs {
           // index as absent and let save() overwrite the whole corpus
           // with one micro-batch. The sidecar side stays for empty-doc
           // correctness (token-less docs never reach postings).
-          val indexed = if (!readable("meta")) None
+          val indexed = if (!readable(spark, indexPath, "meta")) None
             else (readIds("docs", "doc_id"),
               readIds("postings", "doc_id")) match {
               case (Some(d), Some(p)) => Some(d.unionByName(p).distinct())
@@ -326,13 +335,9 @@ object StreamingJobs {
                 docs(idCol) === col("__seen_id"), "left_anti")
               graft.operators.TextIndex.append(fresh, idCol, textCol, indexPath)
           }
-          // opt-in maintenance: one directory listing per batch; compact
-          // only when append-accreted files pass the policy threshold
-          // (the foreachBatch IS the single writer, so the swap is safe)
-          if (autoCompactFilesPerDir.exists(t =>
-              graft.operators.IndexMaintenance.needsCompact(spark, indexPath, t)))
-            graft.operators.TextIndex.compact(spark, indexPath)
-          maybeCycle(spark, graft.operators.Maintenance.TextFamily,
+          autoCompact(spark, graft.operators.TextIndex.lifecycle,
+            indexPath, autoCompactFilesPerDir)
+          maybeCycle(spark, graft.operators.TextIndex.lifecycle,
             indexPath, batchId, maintenance)
         } finally {
           docs.unpersist()
@@ -362,56 +367,38 @@ object StreamingJobs {
       clearCachePerBatch: Boolean = true,
       autoCompactFilesPerDir: Option[Int] = None,
       maintenance: Option[MaintenancePolicy] = None): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val docs = batch.groupBy(col(idCol))
-          .agg(max(col(textCol)).as(textCol)).persist()
-        try {
-          if (docs.head(1).nonEmpty) {
-            // writer-restart repair FIRST: the exists probe below must
-            // never see a mid-swap missing artifact as an absent index
-            graft.operators.TextIndex.recover(spark, indexPath)
-            def readableSub(sub: String) =
-              try { spark.read.parquet(s"$indexPath/$sub"); true }
-              catch { case _: org.apache.spark.sql.AnalysisException => false }
-            // cold-start keys on META (save's LAST write, atomic under
-            // TextIndex.writeMeta's swap): unreadable meta after
-            // recover() ⟺ no save ever completed here, so save() is
-            // always safe AND self-heals save's own crash windows
-            // (postings written, docs/meta not — previously the require
-            // below misdiagnosed that state as pre-sidecar and wedged
-            // the stream on every restart). With meta present, probe
-            // the docs sidecar: a pre-sidecar-format index (postings +
-            // meta, no docs) can't be repaired here — upsert's delete
-            // half needs the sidecar for stats — so it fails loudly
-            // instead of falling through to save().
-            if (!readableSub("meta"))
-              graft.operators.TextIndex.save(docs, idCol, textCol, indexPath)
-            else {
-              val (hasDocs, hasPostings) =
-                (readableSub("docs"), readableSub("postings"))
-              require(hasDocs || !hasPostings,
-                s"$indexPath has postings but no docs sidecar (pre-sidecar " +
-                  "format or partial manual copy): refusing to overwrite — " +
-                  "backfill docs/ from the corpus, or rebuild with save()")
-              if (hasDocs)
-                graft.operators.TextIndex.upsert(docs, idCol, textCol, indexPath)
-              else // meta-only residue is no index; rebuild it
-                graft.operators.TextIndex.save(docs, idCol, textCol, indexPath)
-            }
-            if (autoCompactFilesPerDir.exists(t =>
-                graft.operators.IndexMaintenance.needsCompact(spark, indexPath, t)))
-              graft.operators.TextIndex.compact(spark, indexPath)
-          }
-          maybeCycle(spark, graft.operators.Maintenance.TextFamily,
-            indexPath, batchId, maintenance)
-        } finally {
-          docs.unpersist()
-          if (clearCachePerBatch) spark.catalog.clearCache()
-        }
+    upsertStream(stream, idCol, textCol, indexPath, checkpoint,
+        clearCachePerBatch, autoCompactFilesPerDir, maintenance,
+        graft.operators.TextIndex.lifecycle) { docs =>
+      val spark = docs.sparkSession
+      // writer-restart repair FIRST: the exists probe below must never
+      // see a mid-swap missing artifact as an absent index
+      graft.operators.TextIndex.recover(spark, indexPath)
+      // cold-start keys on META (save's LAST write, atomic under
+      // TextIndex.writeMeta's swap): unreadable meta after recover() ⟺
+      // no save ever completed here, so save() is always safe AND
+      // self-heals save's own crash windows (postings written, docs/meta
+      // not — previously the require below misdiagnosed that state as
+      // pre-sidecar and wedged the stream on every restart). With meta
+      // present, probe the docs sidecar: a pre-sidecar-format index
+      // (postings + meta, no docs) can't be repaired here — upsert's
+      // delete half needs the sidecar for stats — so it fails loudly
+      // instead of falling through to save().
+      if (!readable(spark, indexPath, "meta"))
+        graft.operators.TextIndex.save(docs, idCol, textCol, indexPath)
+      else {
+        val (hasDocs, hasPostings) = (readable(spark, indexPath, "docs"),
+          readable(spark, indexPath, "postings"))
+        require(hasDocs || !hasPostings,
+          s"$indexPath has postings but no docs sidecar (pre-sidecar " +
+            "format or partial manual copy): refusing to overwrite — " +
+            "backfill docs/ from the corpus, or rebuild with save()")
+        if (hasDocs)
+          graft.operators.TextIndex.upsert(docs, idCol, textCol, indexPath)
+        else // meta-only residue is no index; rebuild it
+          graft.operators.TextIndex.save(docs, idCol, textCol, indexPath)
       }
+    }
 
   /** Continuous near-dup-index maintenance for a MUTABLE corpus —
     * [[upsertOnArrival]]'s discipline for the MinHash index:
@@ -430,41 +417,23 @@ object StreamingJobs {
       clearCachePerBatch: Boolean = true,
       autoCompactFilesPerDir: Option[Int] = None,
       maintenance: Option[MaintenancePolicy] = None): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val docs = batch.groupBy(col(idCol))
-          .agg(max(col(textCol)).as(textCol)).persist()
-        try {
-          if (docs.head(1).nonEmpty) {
-            // writer-restart repair FIRST (the upsert's delete half swaps
-            // sigs/bands; a crash there must not trigger a save overwrite)
-            graft.operators.MinHashIndex.recover(spark, indexPath)
-            // cold-start keys on META (save's LAST write, atomic):
-            // unreadable meta ⟺ no save ever completed, so save() is
-            // safe and self-heals a cold-start save that crashed after
-            // writing sigs — a sigs-keyed probe wedged that state
-            // forever (upsert's first read of the missing meta failed
-            // on every restart)
-            val exists =
-              try { spark.read.parquet(s"$indexPath/meta"); true }
-              catch { case _: org.apache.spark.sql.AnalysisException => false }
-            if (exists)
-              graft.operators.MinHashIndex.upsert(docs, idCol, textCol, indexPath)
-            else
-              graft.operators.MinHashIndex.save(docs, idCol, textCol, indexPath)
-            if (autoCompactFilesPerDir.exists(t =>
-                graft.operators.IndexMaintenance.needsCompact(spark, indexPath, t)))
-              graft.operators.MinHashIndex.compact(spark, indexPath)
-          }
-          maybeCycle(spark, graft.operators.Maintenance.MinHashFamily,
-            indexPath, batchId, maintenance)
-        } finally {
-          docs.unpersist()
-          if (clearCachePerBatch) spark.catalog.clearCache()
-        }
-      }
+    upsertStream(stream, idCol, textCol, indexPath, checkpoint,
+        clearCachePerBatch, autoCompactFilesPerDir, maintenance,
+        graft.operators.MinHashIndex.lifecycle) { docs =>
+      val spark = docs.sparkSession
+      // writer-restart repair FIRST (the upsert's delete half swaps
+      // sigs/bands; a crash there must not trigger a save overwrite)
+      graft.operators.MinHashIndex.recover(spark, indexPath)
+      // cold-start keys on META (save's LAST write, atomic): unreadable
+      // meta ⟺ no save ever completed, so save() is safe and self-heals
+      // a cold-start save that crashed after writing sigs — a sigs-keyed
+      // probe wedged that state forever (upsert's first read of the
+      // missing meta failed on every restart)
+      if (readable(spark, indexPath, "meta"))
+        graft.operators.MinHashIndex.upsert(docs, idCol, textCol, indexPath)
+      else
+        graft.operators.MinHashIndex.save(docs, idCol, textCol, indexPath)
+    }
 
   /** Continuous vector-index maintenance — [[upsertOnArrival]]'s
     * discipline for the persisted IVFADC index: an embedding-service
@@ -488,27 +457,10 @@ object StreamingJobs {
       clearCachePerBatch: Boolean = true,
       autoCompactFilesPerDir: Option[Int] = None,
       maintenance: Option[MaintenancePolicy] = None): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val vecs = batch.groupBy(col(idCol))
-          .agg(max(col(vecCol)).as(vecCol)).persist()
-        try {
-          if (vecs.head(1).nonEmpty) {
-            graft.operators.ProductQuantizer.upsert(
-              vecs, idCol, vecCol, indexPath)
-            if (autoCompactFilesPerDir.exists(t =>
-                graft.operators.IndexMaintenance.needsCompact(spark, indexPath, t)))
-              graft.operators.ProductQuantizer.compact(spark, indexPath)
-          }
-          maybeCycle(spark, graft.operators.Maintenance.PqFamily,
-            indexPath, batchId, maintenance)
-        } finally {
-          vecs.unpersist()
-          if (clearCachePerBatch) spark.catalog.clearCache()
-        }
-      }
+    upsertStream(stream, idCol, vecCol, indexPath, checkpoint,
+      clearCachePerBatch, autoCompactFilesPerDir, maintenance,
+      graft.operators.ProductQuantizer.lifecycle)(
+      graft.operators.ProductQuantizer.upsert(_, idCol, vecCol, indexPath))
 
   /** [[upsertVectorsOnArrival]]'s discipline for the EXACT-vector
     * [[graft.operators.IvfIndex]] (the family q223 oracles): each
@@ -526,23 +478,34 @@ object StreamingJobs {
       clearCachePerBatch: Boolean = true,
       autoCompactFilesPerDir: Option[Int] = None,
       maintenance: Option[MaintenancePolicy] = None): DataStreamWriter[Row] =
+    upsertStream(stream, idCol, vecCol, indexPath, checkpoint,
+      clearCachePerBatch, autoCompactFilesPerDir, maintenance,
+      graft.operators.IvfIndex.lifecycle)(
+      graft.operators.IvfIndex.upsert(_, idCol, vecCol, indexPath))
+
+  /** The upsert streams' shared loop: one row per id (the greatest
+    * payload — the deterministic replay rule), the family's upsert for a
+    * non-empty batch, auto-compact, then the due maintenance cycle. */
+  private def upsertStream(stream: DataFrame, idCol: String,
+      payloadCol: String, indexPath: String, checkpoint: String,
+      clearCachePerBatch: Boolean, autoCompactFilesPerDir: Option[Int],
+      maintenance: Option[MaintenancePolicy],
+      family: graft.operators.IndexLifecycle.Spec)(
+      upsert: DataFrame => Unit): DataStreamWriter[Row] =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val vecs = batch.groupBy(col(idCol))
-          .agg(max(col(vecCol)).as(vecCol)).persist()
+        val rows = batch.groupBy(col(idCol))
+          .agg(max(col(payloadCol)).as(payloadCol)).persist()
         try {
-          if (vecs.head(1).nonEmpty) {
-            graft.operators.IvfIndex.upsert(vecs, idCol, vecCol, indexPath)
-            if (autoCompactFilesPerDir.exists(t =>
-                graft.operators.IndexMaintenance.needsCompact(spark, indexPath, t)))
-              graft.operators.IvfIndex.compact(spark, indexPath)
+          if (rows.head(1).nonEmpty) {
+            upsert(rows)
+            autoCompact(spark, family, indexPath, autoCompactFilesPerDir)
           }
-          maybeCycle(spark, graft.operators.Maintenance.IvfFamily,
-            indexPath, batchId, maintenance)
+          maybeCycle(spark, family, indexPath, batchId, maintenance)
         } finally {
-          vecs.unpersist()
+          rows.unpersist()
           if (clearCachePerBatch) spark.catalog.clearCache()
         }
       }
@@ -564,35 +527,35 @@ object StreamingJobs {
     def idArtifact: String
     def idColName(spark: SparkSession): String
   }
-  /** [[graft.operators.TextIndex]] (BM25) at `path`. */
-  final case class TextIndexAt(path: String) extends ErasureTarget {
-    def family = "text_bm25"
+  /** A persisted index family at `path`: delete, membership rows and
+    * the id artifact all come from the family's lifecycle spec. */
+  sealed abstract class IndexAt(spec: graft.operators.IndexLifecycle.Spec)
+      extends ErasureTarget {
     def delete(spark: SparkSession, ids: DataFrame): Unit =
-      graft.operators.TextIndex.delete(spark, path, ids)
-    def rows(spark: SparkSession): Long =
-      spark.read.parquet(s"$path/docs").count()
-    def idArtifact = "docs"
-    def idColName(spark: SparkSession): String = "doc_id"
+      spec.delete(spark, path, ids)
+    def rows(spark: SparkSession): Long = spec.rows(spark, path)
+    def idArtifact: String = spec.membership.sub
+    def idColName(spark: SparkSession): String = spec.idColName(spark, path)
+  }
+  /** [[graft.operators.TextIndex]] (BM25) at `path`. */
+  final case class TextIndexAt(path: String)
+      extends IndexAt(graft.operators.TextIndex.lifecycle) {
+    def family = "text_bm25"
   }
   /** [[graft.operators.MinHashIndex]] (near-dup) at `path`. */
-  final case class MinHashIndexAt(path: String) extends ErasureTarget {
+  final case class MinHashIndexAt(path: String)
+      extends IndexAt(graft.operators.MinHashIndex.lifecycle) {
     def family = "minhash"
-    def delete(spark: SparkSession, ids: DataFrame): Unit =
-      graft.operators.MinHashIndex.delete(spark, path, ids)
-    def rows(spark: SparkSession): Long =
-      spark.read.parquet(s"$path/sigs").count()
-    def idArtifact = "sigs"
-    def idColName(spark: SparkSession): String = "id"
   }
   /** [[graft.operators.ProductQuantizer]] (IVFADC vectors) at `path`. */
-  final case class PqIndexAt(path: String) extends ErasureTarget {
+  final case class PqIndexAt(path: String)
+      extends IndexAt(graft.operators.ProductQuantizer.lifecycle) {
     def family = "ivfadc"
-    def delete(spark: SparkSession, ids: DataFrame): Unit =
-      graft.operators.ProductQuantizer.delete(spark, path, ids)
-    def rows(spark: SparkSession): Long =
-      spark.read.parquet(s"$path/codes").count()
-    def idArtifact = "codes"
-    def idColName(spark: SparkSession): String = "id"
+  }
+  /** [[graft.operators.IvfIndex]] (exact-vector IVF) at `path`. */
+  final case class IvfIndexAt(path: String)
+      extends IndexAt(graft.operators.IvfIndex.lifecycle) {
+    def family = "ivf_exact"
   }
   /** A plain keyed parquet CORPUS at `path` — the curated-output half of
     * the erasure story the index targets alone miss: [[dedupOnArrival]]'s
@@ -675,25 +638,6 @@ object StreamingJobs {
     def rows(spark: SparkSession): Long = rewrite.rows(spark)
     def idArtifact = "" // bare answers dirs carry no snapshot store
     def idColName(spark: SparkSession): String = hitColumn
-  }
-
-  /** [[graft.operators.IvfIndex]] (exact-vector IVF) at `path`. */
-  final case class IvfIndexAt(path: String) extends ErasureTarget {
-    def family = "ivf_exact"
-    def delete(spark: SparkSession, ids: DataFrame): Unit =
-      graft.operators.IvfIndex.delete(spark, path, ids)
-    def rows(spark: SparkSession): Long =
-      spark.read.parquet(s"$path/lists").count()
-    def idArtifact = "lists"
-    // lists keep the caller's id column name; discover it the way
-    // IvfIndex.delete does — the scalar that isn't the list key
-    def idColName(spark: SparkSession): String =
-      spark.read.parquet(s"$path/lists").schema.fields
-        .find(f => f.name != "list_id" &&
-          !f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-        .map(_.name)
-        .getOrElse(throw new IllegalStateException(
-          s"no id column in $path/lists"))
   }
 
   /** Continuous right-to-be-forgotten propagation — the delete half of

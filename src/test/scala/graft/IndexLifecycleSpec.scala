@@ -159,7 +159,7 @@ class IndexLifecycleSpec extends SparkSpec {
     def night(): Unit = {
       // the single nightly call: recover -> compact-if-needed -> fsck
       // gate -> incremental snapshot -> prune to two generations
-      Maintenance.cycle(spark, Maintenance.TextFamily, idx,
+      Maintenance.cycle(spark, TextIndex.lifecycle, idx,
         s"night$day", keepLast = 2)
       day += 1
       Thread.sleep(20) // separate promotion mtimes for retention order
@@ -215,7 +215,7 @@ class IndexLifecycleSpec extends SparkSpec {
       "restored generation == batch rebuild of the full three-day corpus")
 
     // and the next nightly cycle still passes its fsck gate
-    Maintenance.cycle(spark, Maintenance.TextFamily, idx, "night3",
+    Maintenance.cycle(spark, TextIndex.lifecycle, idx, "night3",
       keepLast = 2)
   }
 }

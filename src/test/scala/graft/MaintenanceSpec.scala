@@ -25,7 +25,7 @@ class MaintenanceSpec extends SparkSpec {
     TextIndex.save(docs.filter($"doc_id" <= 10), "doc_id", "text", path)
     def probe() = TextIndex.probe(spark, path, Seq("spark"), k = 10)
       .collect().toSeq
-    def night(tag: String) = Maintenance.cycle(spark, Maintenance.TextFamily,
+    def night(tag: String) = Maintenance.cycle(spark, TextIndex.lifecycle,
         path, tag, keepLast = 2)
       .as[(String, Boolean, Long, String, Long, String)].collect().head
     val n1 = night("d1")
@@ -57,7 +57,7 @@ class MaintenanceSpec extends SparkSpec {
       "snapshots remain the restore candidates") {
     val path = Files.createTempDirectory("mx_abort").toString
     TextIndex.save(docs, "doc_id", "text", path)
-    Maintenance.cycle(spark, Maintenance.TextFamily, path, "good",
+    Maintenance.cycle(spark, TextIndex.lifecycle, path, "good",
       keepLast = 3)
     // corrupt BETWEEN artifacts: drop a doc from the sidecar only
     val side = spark.read.parquet(s"$path/docs").cache()
@@ -67,7 +67,7 @@ class MaintenanceSpec extends SparkSpec {
     side.unpersist()
     spark.catalog.refreshByPath(path)
     val e = intercept[IllegalStateException] {
-      Maintenance.cycle(spark, Maintenance.TextFamily, path, "bad",
+      Maintenance.cycle(spark, TextIndex.lifecycle, path, "bad",
         keepLast = 3)
     }
     assert(e.getMessage.contains("fsck failed"))
@@ -76,7 +76,7 @@ class MaintenanceSpec extends SparkSpec {
       "no snapshot of the corrupt generation; the good one stands")
     // the documented repair: restore the standing snapshot, rerun
     IndexSnapshots.restore(spark, path, "good")
-    Maintenance.cycle(spark, Maintenance.TextFamily, path, "bad",
+    Maintenance.cycle(spark, TextIndex.lifecycle, path, "bad",
       keepLast = 3)
     assert(IndexSnapshots.list(spark, path).count() === 2L)
   }
@@ -85,15 +85,15 @@ class MaintenanceSpec extends SparkSpec {
       "without it the duplicate tag fails loudly") {
     val path = Files.createTempDirectory("mx_retake").toString
     TextIndex.save(docs, "doc_id", "text", path)
-    Maintenance.cycle(spark, Maintenance.TextFamily, path, "latest",
+    Maintenance.cycle(spark, TextIndex.lifecycle, path, "latest",
       keepLast = 5)
     intercept[IllegalArgumentException] {
-      Maintenance.cycle(spark, Maintenance.TextFamily, path, "latest",
+      Maintenance.cycle(spark, TextIndex.lifecycle, path, "latest",
         keepLast = 5)
     }
     TextIndex.delete(spark, path,
       docs.filter($"doc_id" % 5 === 0).select($"doc_id"))
-    Maintenance.cycle(spark, Maintenance.TextFamily, path, "latest",
+    Maintenance.cycle(spark, TextIndex.lifecycle, path, "latest",
       keepLast = 5, retakeTag = true)
     // the retaken tag serves the NEW generation
     val atLatest = IndexSnapshots.at(spark, path, "latest")
@@ -121,8 +121,9 @@ class MaintenanceSpec extends SparkSpec {
       corpus, "vec_id", "embedding", nLists = 4, iters = 2)
     graft.operators.IvfIndex.save(corpus, "vec_id", "embedding", im, ivf)
     for ((fam, p) <- Seq(
-        (Maintenance.MinHashFamily: Maintenance.IndexFamily) -> mh,
-        Maintenance.PqFamily -> pq, Maintenance.IvfFamily -> ivf)) {
+        graft.operators.MinHashIndex.lifecycle -> mh,
+        graft.operators.ProductQuantizer.lifecycle -> pq,
+        graft.operators.IvfIndex.lifecycle -> ivf)) {
       val r = Maintenance.cycle(spark, fam, p, "n1", keepLast = 1)
         .as[(String, Boolean, Long, String, Long, String)].collect().head
       assert(r._4 === "n1" && r._3 >= 3L, s"${fam.name}: $r")

@@ -148,7 +148,7 @@ class ProbeServingSpec extends SparkSpec {
     val (idx, out, ckpt) = (s"$dir/index", s"$dir/out", s"$dir/ckpt")
     TextIndex.save(docs, "doc_id", "text", idx)
     // night 0: the cycle freezes generation 0 under the rolling tag
-    Maintenance.cycle(spark, Maintenance.TextFamily, idx, "latest",
+    Maintenance.cycle(spark, TextIndex.lifecycle, idx, "latest",
       keepLast = 3)
     val source = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Seq[String])]
@@ -176,7 +176,7 @@ class ProbeServingSpec extends SparkSpec {
       // night 1: the cycle RETAKES the tag over the mutated live index;
       // the serving stream must pick the new generation up on its next
       // batch without a restart
-      Maintenance.cycle(spark, Maintenance.TextFamily, idx, "latest",
+      Maintenance.cycle(spark, TextIndex.lifecycle, idx, "latest",
         keepLast = 3, retakeTag = true)
       source.addData((3L, Seq("spark", "join")))
       q.processAllAvailable()
