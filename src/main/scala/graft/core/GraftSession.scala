@@ -25,11 +25,11 @@ object GraftSession {
     * generates 3,548 distinct classes at sf0.001 and 3,537 at sf0.01; the
     * six bench queries alone generate 131. At 100 entries every class was
     * evicted before its reuse, so every repeated query recompiled all of
-    * its code (7,900 compiles in a second catalog pass at sf0.001; 275 now,
-    * 230 of them in the three streaming queries, whose batches Spark runs
-    * under a per-query class loader that is part of the cache key). 4096
-    * holds the whole catalog for +24 MB of Metaspace (234 vs 210 MB after
-    * two passes). The conf is static: Spark sizes the cache once, at the
+    * its code (7,900 compiles in a second catalog pass at sf0.001; 275
+    * with this cache, 230 of them in the three streaming queries — see
+    * [[local]]'s artifact-isolation setting for those). 4096 holds the
+    * whole catalog for +24 MB of Metaspace (234 vs 210 MB after two
+    * passes). The conf is static: Spark sizes the cache once, at the
     * JVM's first code generation, so it only takes effect when this
     * factory builds the JVM's first session. */
   val CodegenCacheEntries = 4096
@@ -68,6 +68,15 @@ object GraftSession {
       // so the same stage got a new id, and a recompile, on reruns (q85,
       // q77, q116). Unsuffixed names make the source independent of it.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // Spark's cache key also holds the task thread's context class
+      // loader. With artifact isolation on, every session's jobs carry its
+      // session UUID, the executor keeps one class loader per UUID, and
+      // each streaming query runs on a cloned session with a new UUID — so
+      // every stream start recompiled (and re-JITted) all its executor-side
+      // classes. graft adds no session artifacts (jars, files), so one
+      // shared loader loses nothing, and a restarted stream compiles
+      // nothing (CodegenCacheSpec).
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

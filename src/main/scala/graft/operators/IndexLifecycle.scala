@@ -89,7 +89,7 @@ object IndexLifecycle {
       try {
         val commit = guard.getOrElse(keepsARow _)(spark, path, del)
         fanOut(idArtifacts.map(a => () =>
-          StagedSwap.swapSub(spark, path, a.sub, "_del") { tmp =>
+          StagedSwap.subdir(spark, path, a.sub, "_del").swap { tmp =>
             val live = spark.read.parquet(s"$path/${a.sub}")
             writer(live.join(del,
               col(a.idColIn(live.schema)) === col("__del_id"), "left_anti"),
@@ -138,7 +138,7 @@ object IndexLifecycle {
       recover(spark, path)
       val n = partitionCount(spark, path)
       val partitioned = idArtifacts.flatMap(a => a.key.map(k => () =>
-        StagedSwap.swapSub(spark, path, a.sub, "_compact")(
+        StagedSwap.subdir(spark, path, a.sub, "_compact").swap(
           aligned(spark.read.parquet(s"$path/${a.sub}"), n, k).parquet(_))))
       val flat = (idArtifacts.filter(_.key.isEmpty).map(_.sub) ++ flatParams)
         .flatMap(resized(spark, path, _))
@@ -156,7 +156,7 @@ object IndexLifecycle {
         val target = math.max(1L,
           fs.getContentSummary(p).getLength / (128L << 20)).toInt
         if (IndexMaintenance.dataFiles(fs, p)._2 <= target) None
-        else Some(() => StagedSwap.swapSub(spark, path, sub, "_compact")(
+        else Some(() => StagedSwap.subdir(spark, path, sub, "_compact").swap(
           writer(spark.read.parquet(p.toString).repartition(target), None)
             .parquet(_)))
       }

@@ -308,12 +308,10 @@ object IndexSnapshots {
     // concurrently; the crash contract is unchanged — the subdirs were
     // never swapped atomically TOGETHER (a crash can leave a mixed
     // generation either way) and rerunning the SAME restore converges it
-    graft.core.Concurrency.runAll(snapSubs.map { case (name, src) => () => {
-      val live = new Path(root, name)
-      val tmp = new Path(root, s"${name}_rst")
-      val old = new Path(root, s"${name}_old")
-      StagedSwap.swap(f, live, tmp, old)(t => copyDir(f, src, new Path(t), conf))
-    }})
+    graft.core.Concurrency.runAll(snapSubs.map { case (name, src) => () =>
+      StagedSwap.subdir(spark, path, name, "_rst")
+        .swap(t => copyDir(f, src, new Path(t), conf))
+    })
     val snapNames = snapSubs.map(_._1).toSet
     artifactDirs(f, root).filterNot(p => snapNames.contains(p.getName))
       .foreach { extra =>
@@ -322,8 +320,8 @@ object IndexSnapshots {
       }
     // the swaps moved files BEHIND Spark's back (FileUtil + renames, not
     // Spark writes, which self-refresh): any plan cached over the old
-    // generation (e.g. TextIndex.probe's pruned-postings cache) would
-    // keep serving pre-restore rows — re-read it from the restored files
+    // generation (e.g. a caller's cached frame over the index's postings)
+    // would keep serving pre-restore rows — re-read it from the restored files
     spark.catalog.refreshByPath(path)
   }
 

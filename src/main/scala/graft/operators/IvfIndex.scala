@@ -271,7 +271,7 @@ object IvfIndex {
     val current = spark.read.parquet(s"$dir/lists").drop("list_id")
     val model = fit(current, idCol, vecCol, k, iters, trainCap)
     def swapIn(sub: String)(write: String => Unit): Unit =
-      StagedSwap.swapSub(spark, dir, sub, "_compact")(write)
+      StagedSwap.subdir(spark, dir, sub, "_compact").swap(write)
     // lists first (its write READS the live lists dir); the later swaps
     // re-read only the freshly swapped lists
     swapIn("lists")(IndexLifecycle.aligned(

@@ -76,7 +76,7 @@ object MinHashIndex {
         () => sigs.write.mode("overwrite").parquet(s"$path/sigs"),
         () => IndexLifecycle.aligned(banded(sigs, "id", k, bands), bands,
           "band_idx").mode("overwrite").parquet(s"$path/bands")))
-      StagedSwap.swapSub(spark, path, "meta", "_del") { tmp =>
+      StagedSwap.subdir(spark, path, "meta", "_del").swap { tmp =>
         Seq((n, k, bands, seed)).toDF("n", "k", "bands", "seed")
           .coalesce(1).write.parquet(tmp)
       }

@@ -202,7 +202,7 @@ object QuantileSketch {
     import spark.implicits._
     val rows = Seq((s.capacity, s.buf.toSeq, s.levels.map(_.toSeq).toSeq,
       s.n, s.err))
-    StagedSwap.swapSub(spark, path, "summary", "_del") { tmp =>
+    StagedSwap.subdir(spark, path, "summary", "_del").swap { tmp =>
       rows.toDF("capacity", "buf", "levels", "n", "err")
         .coalesce(1).write.parquet(tmp)
     }
@@ -280,7 +280,7 @@ object QuantileSketch {
     * [[StagedSwap]], like [[saveSummary]]). */
   def saveGrouped(spark: SparkSession, store: DataFrame,
       path: String): Unit =
-    StagedSwap.swapSub(spark, path, "summaries", "_del") { tmp =>
+    StagedSwap.subdir(spark, path, "summaries", "_del").swap { tmp =>
       store.write.parquet(tmp)
     }
 

@@ -89,7 +89,7 @@ object TextIndex {
   private def writeMeta(spark: SparkSession, path: String, n: Long,
       sdl: Long, nBuckets: Int): Unit = {
     import spark.implicits._
-    StagedSwap.swapSub(spark, path, "meta", "_del") { tmp =>
+    StagedSwap.subdir(spark, path, "meta", "_del").swap { tmp =>
       Seq((n, sdl, nBuckets)).toDF("n_docs", "sum_dl", "n_buckets")
         .coalesce(1).write.parquet(tmp)
     }

@@ -39,8 +39,7 @@ object Sinks {
     // Only a genuinely-absent table counts as first write; any other read
     // failure (corrupt footer, incompatible schema) must surface rather
     // than silently appending the whole batch and breaking idempotence.
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val corpus = graft.operators.StagedSwap.sibling(spark, path)
     // Repair a crashed [[compactParquet]] swap BEFORE the existence probe.
     // A crash between the swap's two renames leaves `path` MISSING with
     // the whole corpus sitting in `_old`/`_del`; reading exists() first
@@ -52,11 +51,9 @@ object Sinks {
     // first and the crashed swap is repaired before any append can
     // recreate live; a no-op (a handful of exists calls) on every clean
     // batch. Single-writer like the compactor itself.
-    graft.operators.StagedSwap.recover(fs, hPath,
-      new org.apache.hadoop.fs.Path(path + "_del"),
-      new org.apache.hadoop.fs.Path(path + "_old"))
+    corpus.recover()
     val existing =
-      if (fs.exists(hPath)) { spark.catalog.refreshByPath(path); spark.read.parquet(path) }
+      if (corpus.exists) { spark.catalog.refreshByPath(path); spark.read.parquet(path) }
       else incoming.limit(0)
     newRowsOnly(existing, incoming, keys)
       .write.mode(SaveMode.Append).parquet(path)
@@ -93,18 +90,26 @@ object Sinks {
       path: String, targetBytesPerFile: Long = 128L * 1024 * 1024): Unit = {
     require(targetBytesPerFile > 0,
       s"targetBytesPerFile must be positive, got $targetBytesPerFile")
-    val live = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "_del")
-    val old = new org.apache.hadoop.fs.Path(path + "_old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.StagedSwap.recover(fs, live, tmp, old)
-    require(fs.exists(live), s"no corpus at $path")
-    val bytes = fs.getContentSummary(live).getLength
-    val n = math.max(1L,
-      (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
-    graft.operators.StagedSwap.swap(fs, live, tmp, old) { dir =>
+    rewriteCorpus(spark, path) { (corpus, dir) =>
+      val bytes = corpus.fs.getContentSummary(corpus.live).getLength
+      val n = math.max(1L,
+        (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
       spark.read.parquet(path).repartition(n).write.parquet(dir)
     }
+  }
+
+  /** Rewrite the parquet corpus at `path` under its
+    * [[graft.operators.StagedSwap.sibling]] swap: recover a crashed
+    * earlier rewrite first, require the corpus, `write(corpus, tmpDir)`
+    * the new copy (the live corpus is intact while it runs), promote it,
+    * and refresh Spark's listing caches after the out-of-band move. */
+  private[graft] def rewriteCorpus(spark: org.apache.spark.sql.SparkSession,
+      path: String)(
+      write: (graft.operators.StagedSwap.Staged, String) => Unit): Unit = {
+    val corpus = graft.operators.StagedSwap.sibling(spark, path)
+    corpus.recover()
+    require(corpus.exists, s"no corpus at $path")
+    corpus.swap(write(corpus, _))
     spark.catalog.refreshByPath(path)
   }
 

@@ -112,6 +112,55 @@ object StreamingJobs {
         "an EXISTING state — statePath and checkpoint must be created and " +
         "destroyed together; new data is being dropped, not folded")
 
+  /** The one staged-state fold behind every streaming sketch job. It
+    * recovers a crashed swap BEFORE choosing between merge and a fresh
+    * start: a crash in swap's rename window leaves `state` absent with
+    * the full state in `.state_tmp`/`.state_old`, and reading
+    * exists(state) first would silently restart the history from this
+    * batch alone. Then it reads the prior state once, fences out a
+    * redelivered batch, merges, and promotes the merged state in one
+    * [[graft.operators.StagedSwap]] swap — state and fence together, so
+    * they can never disagree. Single-writer: one stream per statePath.
+    *
+    * `read` turns the prior state's rows into the family's committed
+    * batch id and its merge input; an idempotent merge reports -1 and is
+    * never fenced. `merge` builds the next state from the prior merge
+    * input, if any, and runs only for a batch that passes the fence. */
+  private def foldState[S](batch: DataFrame, batchId: Long,
+      statePath: String)(read: DataFrame => (Long, S))(
+      merge: Option[S] => DataFrame): Unit = {
+    val spark = batch.sparkSession
+    val state = graft.operators.StagedSwap.state(spark, statePath)
+    state.recover()
+    val prior =
+      if (state.exists) Some(read(spark.read.parquet(state.live.toString)))
+      else None
+    val committed = prior.fold(-1L)(_._1)
+    if (batchId <= committed)
+      warnIfMismatchedCheckpoint(batchId, committed, statePath)
+    else {
+      val next = merge(prior.map(_._2))
+      state.swap(next.write.parquet(_))
+    }
+  }
+
+  /** The state a [[foldState]] job last promoted under `statePath`,
+    * resolved without mutating anything
+    * ([[graft.operators.StagedSwap.Staged.readable]]): a reader racing
+    * the writer's rename window reads the surviving copy and leaves the
+    * repair to the writer's own restart. */
+  private def foldedState(spark: SparkSession, statePath: String,
+      what: String): DataFrame =
+    spark.read.parquet(graft.operators.StagedSwap.state(spark, statePath)
+      .readable(s"no $what state under $statePath").toString)
+
+  /** A `foreachBatch` writer under `checkpoint`: `run(batch, batchId)`
+    * per micro-batch. */
+  private def eachBatch(stream: DataFrame, checkpoint: String)(
+      run: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream.option("checkpointLocation", checkpoint)
+      .foreachBatch(run)
+
   /** T2: at-least-once → effectively-once via event-time watermark + keyed
     * dedup. State is bounded by the watermark horizon — the streaming
     * equivalent of the JDBC ON CONFLICT absorption. */
@@ -181,11 +230,9 @@ object StreamingJobs {
     * effectively-once delivery into the table. */
   def idempotentParquetSink(stream: DataFrame, path: String,
       keys: Seq[String], checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sinks.Sinks.upsertIgnoreParquet(batch, path, keys)
-      }
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      graft.sinks.Sinks.upsertIgnoreParquet(batch, path, keys)
+    }
 
   /** Continuous-ingest NEAR-dup gate — the streaming face of the
     * persisted MinHash index ([[graft.operators.MinHashIndex]]): per
@@ -222,53 +269,51 @@ object StreamingJobs {
       autoCompactFilesPerDir: Option[Int] = None,
       maintenance: Option[MaintenancePolicy] = None,
       outCompactFiles: Option[Int] = None): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // the intra-batch stage must judge near-dups by the SAME hash
-        // parameters the index was built with, or same-batch and
-        // cross-batch copies get two different similarity measures
-        val (n, k, bands, seed) =
-          graft.operators.MinHashIndex.params(spark, indexPath)
-        // replay-safe probe: a crashed prior attempt may have appended
-        // PART of this very batch's band rows before dying — a hit
-        // against a doc's own id is that artifact, not evidence the
-        // standing corpus held the content, and treating it as "seen"
-        // would drop the doc while leaving its index entry partial
-        // (under-indexed forever). Ids identify documents stably across
-        // redelivery — the same contract the output upsert keys on.
-        val hits = graft.operators.MinHashIndex.probe(
-            batch, idCol, textCol, indexPath, minJac)
-          .filter(col("corpus_id") =!= col(idCol))
-          .select(col(idCol)).distinct()
-        val fresh = batch.join(hits, Seq(idCol), "left_anti").persist()
-        try {
-          val pairs = graft.operators.Dedup.minhashNearDupPairs(
-            fresh, idCol, textCol, n = n, k = k, bands = bands,
-            minJac = minJac, seed = seed)
-          val losers = graft.operators.Components
-            .connectedComponents(pairs, "id_a", "id_b")
-            .filter(col("node") =!= col("component"))
-            .select(col("node").as(idCol))
-          val kept = fresh.join(losers, Seq(idCol), "left_anti")
-          graft.sinks.Sinks.upsertIgnoreParquet(kept, outPath, Seq(idCol))
-          graft.operators.MinHashIndex.append(kept, idCol, textCol, indexPath)
-          autoCompact(spark, graft.operators.MinHashIndex.lifecycle,
-            indexPath, autoCompactFilesPerDir)
-          maybeCycle(spark, graft.operators.MinHashIndex.lifecycle,
-            indexPath, batchId, maintenance)
-          // the OUTPUT corpus fragments at the same per-batch rate the
-          // index does (upsertIgnoreParquet appends one file set per
-          // batch) — same files-per-dir policy, same one-listing cost
-          if (outCompactFiles.exists(t =>
-              graft.sinks.Sinks.corpusDataFiles(spark, outPath) > t))
-            graft.sinks.Sinks.compactParquet(spark, outPath)
-        } finally {
-          fresh.unpersist()
-          if (clearCachePerBatch) spark.catalog.clearCache()
-        }
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // the intra-batch stage must judge near-dups by the SAME hash
+      // parameters the index was built with, or same-batch and
+      // cross-batch copies get two different similarity measures
+      val (n, k, bands, seed) =
+        graft.operators.MinHashIndex.params(spark, indexPath)
+      // replay-safe probe: a crashed prior attempt may have appended
+      // PART of this very batch's band rows before dying — a hit
+      // against a doc's own id is that artifact, not evidence the
+      // standing corpus held the content, and treating it as "seen"
+      // would drop the doc while leaving its index entry partial
+      // (under-indexed forever). Ids identify documents stably across
+      // redelivery — the same contract the output upsert keys on.
+      val hits = graft.operators.MinHashIndex.probe(
+          batch, idCol, textCol, indexPath, minJac)
+        .filter(col("corpus_id") =!= col(idCol))
+        .select(col(idCol)).distinct()
+      val fresh = batch.join(hits, Seq(idCol), "left_anti").persist()
+      try {
+        val pairs = graft.operators.Dedup.minhashNearDupPairs(
+          fresh, idCol, textCol, n = n, k = k, bands = bands,
+          minJac = minJac, seed = seed)
+        val losers = graft.operators.Components
+          .connectedComponents(pairs, "id_a", "id_b")
+          .filter(col("node") =!= col("component"))
+          .select(col("node").as(idCol))
+        val kept = fresh.join(losers, Seq(idCol), "left_anti")
+        graft.sinks.Sinks.upsertIgnoreParquet(kept, outPath, Seq(idCol))
+        graft.operators.MinHashIndex.append(kept, idCol, textCol, indexPath)
+        autoCompact(spark, graft.operators.MinHashIndex.lifecycle,
+          indexPath, autoCompactFilesPerDir)
+        maybeCycle(spark, graft.operators.MinHashIndex.lifecycle,
+          indexPath, batchId, maintenance)
+        // the OUTPUT corpus fragments at the same per-batch rate the
+        // index does (upsertIgnoreParquet appends one file set per
+        // batch) — same files-per-dir policy, same one-listing cost
+        if (outCompactFiles.exists(t =>
+            graft.sinks.Sinks.corpusDataFiles(spark, outPath) > t))
+          graft.sinks.Sinks.compactParquet(spark, outPath)
+      } finally {
+        fresh.unpersist()
+        if (clearCachePerBatch) spark.catalog.clearCache()
       }
+    }
 
   /** Continuous search-index maintenance — [[dedupOnArrival]]'s
     * continuous-ingest discipline applied to the persisted BM25 inverted
@@ -290,60 +335,58 @@ object StreamingJobs {
       clearCachePerBatch: Boolean = true,
       autoCompactFilesPerDir: Option[Int] = None,
       maintenance: Option[MaintenancePolicy] = None): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val docs = batch.dropDuplicates(idCol).persist()
-        try {
-          // writer-restart repair FIRST: a crash inside a prior batch's
-          // auto-compact (or any other swap) must not be misread below
-          // as "index absent" and overwritten by save()
-          graft.operators.TextIndex.recover(spark, indexPath)
-          def readIds(sub: String, idName: String) =
-            try Some(spark.read.parquet(s"$indexPath/$sub")
-              .select(col(idName).as("__seen_id")).distinct())
-            catch { case _: org.apache.spark.sql.AnalysisException => None }
-          // cold-start detection keys on META, not on postings/docs:
-          // save writes meta LAST and atomically (TextIndex.writeMeta's
-          // swap), so unreadable meta after recover() ⟺ no save ever
-          // completed here — re-running save() cannot overwrite a live
-          // corpus, and it SELF-HEALS save's own crash windows (postings
-          // written, docs/meta not), which previously wedged the stream:
-          // the partial postings made the batch look fully "seen", the
-          // empty append then failed reading the missing meta, forever.
-          // seen-set = docs sidecar ∪ postings distinct. The union is
-          // load-bearing twice over: (a) append commits postings BEFORE
-          // the docs sidecar, so after a crash in that window a
-          // docs-only seen-set would re-append the redelivered batch and
-          // DOUBLE its tf/df — postings must count as "seen" too;
-          // (b) a docs-only check would also treat a pre-sidecar-format
-          // index as absent and let save() overwrite the whole corpus
-          // with one micro-batch. The sidecar side stays for empty-doc
-          // correctness (token-less docs never reach postings).
-          val indexed = if (!readable(spark, indexPath, "meta")) None
-            else (readIds("docs", "doc_id"),
-              readIds("postings", "doc_id")) match {
-              case (Some(d), Some(p)) => Some(d.unionByName(p).distinct())
-              case (d, p) => d.orElse(p)
-            }
-          indexed match {
-            case None =>
-              graft.operators.TextIndex.save(docs, idCol, textCol, indexPath)
-            case Some(seen) =>
-              val fresh = docs.join(seen,
-                docs(idCol) === col("__seen_id"), "left_anti")
-              graft.operators.TextIndex.append(fresh, idCol, textCol, indexPath)
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val docs = batch.dropDuplicates(idCol).persist()
+      try {
+        // writer-restart repair FIRST: a crash inside a prior batch's
+        // auto-compact (or any other swap) must not be misread below
+        // as "index absent" and overwritten by save()
+        graft.operators.TextIndex.recover(spark, indexPath)
+        def readIds(sub: String, idName: String) =
+          try Some(spark.read.parquet(s"$indexPath/$sub")
+            .select(col(idName).as("__seen_id")).distinct())
+          catch { case _: org.apache.spark.sql.AnalysisException => None }
+        // cold-start detection keys on META, not on postings/docs:
+        // save writes meta LAST and atomically (TextIndex.writeMeta's
+        // swap), so unreadable meta after recover() ⟺ no save ever
+        // completed here — re-running save() cannot overwrite a live
+        // corpus, and it SELF-HEALS save's own crash windows (postings
+        // written, docs/meta not), which previously wedged the stream:
+        // the partial postings made the batch look fully "seen", the
+        // empty append then failed reading the missing meta, forever.
+        // seen-set = docs sidecar ∪ postings distinct. The union is
+        // load-bearing twice over: (a) append commits postings BEFORE
+        // the docs sidecar, so after a crash in that window a
+        // docs-only seen-set would re-append the redelivered batch and
+        // DOUBLE its tf/df — postings must count as "seen" too;
+        // (b) a docs-only check would also treat a pre-sidecar-format
+        // index as absent and let save() overwrite the whole corpus
+        // with one micro-batch. The sidecar side stays for empty-doc
+        // correctness (token-less docs never reach postings).
+        val indexed = if (!readable(spark, indexPath, "meta")) None
+          else (readIds("docs", "doc_id"),
+            readIds("postings", "doc_id")) match {
+            case (Some(d), Some(p)) => Some(d.unionByName(p).distinct())
+            case (d, p) => d.orElse(p)
           }
-          autoCompact(spark, graft.operators.TextIndex.lifecycle,
-            indexPath, autoCompactFilesPerDir)
-          maybeCycle(spark, graft.operators.TextIndex.lifecycle,
-            indexPath, batchId, maintenance)
-        } finally {
-          docs.unpersist()
-          if (clearCachePerBatch) spark.catalog.clearCache()
+        indexed match {
+          case None =>
+            graft.operators.TextIndex.save(docs, idCol, textCol, indexPath)
+          case Some(seen) =>
+            val fresh = docs.join(seen,
+              docs(idCol) === col("__seen_id"), "left_anti")
+            graft.operators.TextIndex.append(fresh, idCol, textCol, indexPath)
         }
+        autoCompact(spark, graft.operators.TextIndex.lifecycle,
+          indexPath, autoCompactFilesPerDir)
+        maybeCycle(spark, graft.operators.TextIndex.lifecycle,
+          indexPath, batchId, maintenance)
+      } finally {
+        docs.unpersist()
+        if (clearCachePerBatch) spark.catalog.clearCache()
       }
+    }
 
   /** Continuous index maintenance for a MUTABLE corpus — the edit path
     * [[indexOnArrival]] deliberately refuses (its seen-set SKIPS known
@@ -492,23 +535,21 @@ object StreamingJobs {
       maintenance: Option[MaintenancePolicy],
       family: graft.operators.IndexLifecycle.Spec)(
       upsert: DataFrame => Unit): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val rows = batch.groupBy(col(idCol))
-          .agg(max(col(payloadCol)).as(payloadCol)).persist()
-        try {
-          if (rows.head(1).nonEmpty) {
-            upsert(rows)
-            autoCompact(spark, family, indexPath, autoCompactFilesPerDir)
-          }
-          maybeCycle(spark, family, indexPath, batchId, maintenance)
-        } finally {
-          rows.unpersist()
-          if (clearCachePerBatch) spark.catalog.clearCache()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val rows = batch.groupBy(col(idCol))
+        .agg(max(col(payloadCol)).as(payloadCol)).persist()
+      try {
+        if (rows.head(1).nonEmpty) {
+          upsert(rows)
+          autoCompact(spark, family, indexPath, autoCompactFilesPerDir)
         }
+        maybeCycle(spark, family, indexPath, batchId, maintenance)
+      } finally {
+        rows.unpersist()
+        if (clearCachePerBatch) spark.catalog.clearCache()
       }
+    }
 
   /** An erasure fan-out target for [[forgetOnArrival]] — one case per
     * persisted index family, each delegating to that index's idempotent
@@ -571,33 +612,17 @@ object StreamingJobs {
   final case class ParquetCorpusAt(path: String, idColumn: String)
       extends ErasureTarget {
     def family = "parquet_corpus"
-    private def paths = {
-      val live = new org.apache.hadoop.fs.Path(path)
-      (live,
-        new org.apache.hadoop.fs.Path(path + "_del"),
-        new org.apache.hadoop.fs.Path(path + "_old"))
-    }
     def delete(spark: SparkSession, ids: DataFrame): Unit = {
-      val (live, tmp, old) = paths
-      val f = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.operators.StagedSwap.recover(f, live, tmp, old)
-      require(f.exists(live), s"no corpus at $path")
       val del = ids.toDF("__del_id").distinct()
-      graft.operators.StagedSwap.swap(f, live, tmp, old) { dir =>
+      graft.sinks.Sinks.rewriteCorpus(spark, path) { (_, dir) =>
         spark.read.parquet(path)
           .join(del, col(idColumn) === col("__del_id"), "left_anti")
           .write.parquet(dir)
       }
-      spark.catalog.refreshByPath(path)
     }
-    def rows(spark: SparkSession): Long = {
-      val (live, tmp, old) = paths
-      val f = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val src = graft.operators.StagedSwap.readable(f, live, tmp, old)
-        .getOrElse(throw new java.io.FileNotFoundException(
-          s"no corpus at $path"))
-      spark.read.parquet(src.toString).count()
-    }
+    def rows(spark: SparkSession): Long = spark.read.parquet(
+      graft.operators.StagedSwap.sibling(spark, path)
+        .readable(s"no corpus at $path").toString).count()
     def idArtifact = "" // bare corpus dirs carry no snapshot store
     def idColName(spark: SparkSession): String = idColumn
   }
@@ -691,42 +716,40 @@ object StreamingJobs {
     require(targets.nonEmpty, "forgetOnArrival needs at least one target")
     require(targets.map(_.path).distinct.length == targets.length,
       s"duplicate erasure-target paths: ${targets.map(_.path)}")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val ids = batch.select(col(idCol)).distinct().persist()
-        try {
-          if (ids.head(1).nonEmpty) {
-            val nIds = ids.count()
-            val audit = targets.flatMap { t =>
-              val before = if (auditPath.isDefined) t.rows(spark) else 0L
-              t.delete(spark, ids)
-              val deleteRow = (batchId, t.family, t.path, nIds, before,
-                if (auditPath.isDefined) t.rows(spark) else 0L)
-              if (!scrubSnapshots) Seq(deleteRow)
-              else {
-                val tagsBefore =
-                  graft.operators.IndexSnapshots.list(spark, t.path).count()
-                val dropped = graft.operators.IndexSnapshots.scrubSnapshots(
-                  spark, t.path, ids, t.idArtifact, t.idColName(spark))
-                Seq(deleteRow,
-                  (batchId, s"${t.family}:snapshots", t.path, nIds,
-                    tagsBefore, tagsBefore - dropped.size))
-              }
-            }
-            auditPath.foreach { p =>
-              audit.toDF("batch_id", "family", "path", "ids_requested",
-                  "rows_before", "rows_after")
-                .coalesce(1).write.mode("append").parquet(p)
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val ids = batch.select(col(idCol)).distinct().persist()
+      try {
+        if (ids.head(1).nonEmpty) {
+          val nIds = ids.count()
+          val audit = targets.flatMap { t =>
+            val before = if (auditPath.isDefined) t.rows(spark) else 0L
+            t.delete(spark, ids)
+            val deleteRow = (batchId, t.family, t.path, nIds, before,
+              if (auditPath.isDefined) t.rows(spark) else 0L)
+            if (!scrubSnapshots) Seq(deleteRow)
+            else {
+              val tagsBefore =
+                graft.operators.IndexSnapshots.list(spark, t.path).count()
+              val dropped = graft.operators.IndexSnapshots.scrubSnapshots(
+                spark, t.path, ids, t.idArtifact, t.idColName(spark))
+              Seq(deleteRow,
+                (batchId, s"${t.family}:snapshots", t.path, nIds,
+                  tagsBefore, tagsBefore - dropped.size))
             }
           }
-        } finally {
-          ids.unpersist()
-          if (clearCachePerBatch) spark.catalog.clearCache()
+          auditPath.foreach { p =>
+            audit.toDF("batch_id", "family", "path", "ids_requested",
+                "rows_before", "rows_after")
+              .coalesce(1).write.mode("append").parquet(p)
+          }
         }
+      } finally {
+        ids.unpersist()
+        if (clearCachePerBatch) spark.catalog.clearCache()
       }
+    }
   }
 
   /** Streaming retrieval SERVING — the read side of the index lifecycle
@@ -793,32 +816,30 @@ object StreamingJobs {
       snapshotTag: Option[String] = None,
       snapshotMaxViews: Int = 2,
       outCompactFiles: Option[Int] = None): DataStreamWriter[Row] =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val qs = batch.groupBy(col(queryIdCol))
-          .agg(max(col(termsCol)).as(termsCol))
-          .persist()
-        try {
-          if (qs.head(1).nonEmpty) {
-            val servePath = resolveServePath(spark, indexPath,
-              snapshotTag, snapshotMaxViews)
-            val topk = graft.operators.TextIndex.probeAll(
-              qs, queryIdCol, termsCol, servePath, k, k1, b, maxDfFrac)
-            graft.sinks.Sinks.upsertIgnoreParquet(
-              topk, outPath, Seq("query_id", "rank"))
-            // the answers dir accretes one file set per batch, same as
-            // every keyed-append sink — same files-per-dir valve
-            if (outCompactFiles.exists(t =>
-                graft.sinks.Sinks.corpusDataFiles(spark, outPath) > t))
-              graft.sinks.Sinks.compactParquet(spark, outPath)
-          }
-        } finally {
-          qs.unpersist()
-          if (clearCachePerBatch) spark.catalog.clearCache()
+    eachBatch(queries, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val qs = batch.groupBy(col(queryIdCol))
+        .agg(max(col(termsCol)).as(termsCol))
+        .persist()
+      try {
+        if (qs.head(1).nonEmpty) {
+          val servePath = resolveServePath(spark, indexPath,
+            snapshotTag, snapshotMaxViews)
+          val topk = graft.operators.TextIndex.probeAll(
+            qs, queryIdCol, termsCol, servePath, k, k1, b, maxDfFrac)
+          graft.sinks.Sinks.upsertIgnoreParquet(
+            topk, outPath, Seq("query_id", "rank"))
+          // the answers dir accretes one file set per batch, same as
+          // every keyed-append sink — same files-per-dir valve
+          if (outCompactFiles.exists(t =>
+              graft.sinks.Sinks.corpusDataFiles(spark, outPath) > t))
+            graft.sinks.Sinks.compactParquet(spark, outPath)
         }
+      } finally {
+        qs.unpersist()
+        if (clearCachePerBatch) spark.catalog.clearCache()
       }
+    }
 
   /** Per-batch generation resolution for the serving jobs: a tag
     * resolves through [[graft.operators.IndexSnapshots.at]] (with the
@@ -857,30 +878,28 @@ object StreamingJobs {
       snapshotTag: Option[String] = None,
       snapshotMaxViews: Int = 2,
       outCompactFiles: Option[Int] = None): DataStreamWriter[Row] =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val qs = batch.groupBy(col(queryIdCol))
-          .agg(max(col(vecCol)).as(vecCol))
-          .persist()
-        try {
-          if (qs.head(1).nonEmpty) {
-            val servePath = resolveServePath(spark, indexPath,
-              snapshotTag, snapshotMaxViews)
-            val topk = graft.operators.ProductQuantizer.probeSaved(
-              qs, queryIdCol, vecCol, spark, servePath, k, nProbe, idFilter)
-            graft.sinks.Sinks.upsertIgnoreParquet(
-              topk, outPath, Seq("query_id", "rank"))
-            if (outCompactFiles.exists(t =>
-                graft.sinks.Sinks.corpusDataFiles(spark, outPath) > t))
-              graft.sinks.Sinks.compactParquet(spark, outPath)
-          }
-        } finally {
-          qs.unpersist()
-          if (clearCachePerBatch) spark.catalog.clearCache()
+    eachBatch(queries, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val qs = batch.groupBy(col(queryIdCol))
+        .agg(max(col(vecCol)).as(vecCol))
+        .persist()
+      try {
+        if (qs.head(1).nonEmpty) {
+          val servePath = resolveServePath(spark, indexPath,
+            snapshotTag, snapshotMaxViews)
+          val topk = graft.operators.ProductQuantizer.probeSaved(
+            qs, queryIdCol, vecCol, spark, servePath, k, nProbe, idFilter)
+          graft.sinks.Sinks.upsertIgnoreParquet(
+            topk, outPath, Seq("query_id", "rank"))
+          if (outCompactFiles.exists(t =>
+              graft.sinks.Sinks.corpusDataFiles(spark, outPath) > t))
+            graft.sinks.Sinks.compactParquet(spark, outPath)
         }
+      } finally {
+        qs.unpersist()
+        if (clearCachePerBatch) spark.catalog.clearCache()
       }
+    }
 
   /** Stream-static enrichment join: per micro-batch broadcast-hash join
     * against a (small) dimension table — no state store involved. */
@@ -904,66 +923,22 @@ object StreamingJobs {
   def distinctOnArrival(stream: DataFrame, keys: Seq[String],
       valueCol: String, statePath: String, checkpoint: String,
       lgK: Int = 12): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fresh = graft.operators.IncrementalDistinct
-          .state(batch, keys, valueCol, lgK)
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val live = new org.apache.hadoop.fs.Path(statePath, "state")
-        val tmp = new org.apache.hadoop.fs.Path(statePath, ".state_tmp")
-        val old = new org.apache.hadoop.fs.Path(statePath, ".state_old")
-        // recover a crashed predecessor BEFORE deciding merge-vs-fresh: a
-        // crash in swap's rename window leaves `live` absent with the full
-        // state sitting in tmp/old — reading exists(live) first would
-        // silently restart the distinct history from this batch alone
-        // (swap() recovers too, but by then the merge input is chosen)
-        graft.operators.StagedSwap.recover(fs, live, tmp, old)
-        val merged =
-          if (fs.exists(live))
-            graft.operators.IncrementalDistinct.merge(
-              Seq(spark.read.parquet(live.toString), fresh))
-          else fresh
-        graft.operators.StagedSwap.swap(fs, live, tmp, old)(dir =>
-          merged.write.parquet(dir))
-      }
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val fresh = graft.operators.IncrementalDistinct
+        .state(batch, keys, valueCol, lgK)
+      // a replayed batch moves no register: the merge needs no fence
+      foldState(batch, batchId, statePath)(prior => (-1L, prior))(
+        _.fold(fresh)(p => graft.operators.IncrementalDistinct.merge(Seq(p, fresh))))
+    }
 
   /** Read the current estimates off a [[distinctOnArrival]] state path.
-    * Resolves the directory with the NON-MUTATING
-    * [[graft.operators.StagedSwap.readable]]: a writer crash in swap's
-    * rename window leaves `state` absent with the complete copy in
-    * `.state_tmp`/`.state_old`, and a reader must see that state, not an
-    * ENOENT — but it must not run recover()'s renames, because a reader
-    * racing a LIVE writer inside that same window would steal the
-    * promote and crash the stream (repair belongs to the single writer's
-    * own restart). Fails loudly when no copy exists at all. */
-  def distinctEstimates(spark: SparkSession, statePath: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = graft.operators.StagedSwap.readable(fs,
-      new org.apache.hadoop.fs.Path(statePath, "state"),
-      new org.apache.hadoop.fs.Path(statePath, ".state_tmp"),
-      new org.apache.hadoop.fs.Path(statePath, ".state_old"))
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"no distinct state under $statePath"))
-    graft.operators.IncrementalDistinct.estimate(readState(spark, fs, src))
-  }
-
-  /** Read a resolved state directory. A crashed swap's surviving copy may
-    * sit in a dot-prefixed staging directory (`.state_tmp`/`.state_old`),
-    * which Spark's hidden-path filter rejects as a root path — so list the
-    * part files and pass them explicitly (the filter checks only leaf
-    * names, and `part-*.parquet` is visible). */
-  private def readState(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path): DataFrame =
-    if (src.getName.startsWith(".")) {
-      val parts = fs.listStatus(src).map(_.getPath.toString)
-        .filter(_.split('/').last.startsWith("part-"))
-      spark.read.parquet(parts.toIndexedSeq: _*)
-    } else spark.read.parquet(src.toString)
+    * A writer crash in swap's rename window leaves `state` absent with
+    * the complete copy in `.state_tmp`/`.state_old`: the reader sees that
+    * copy, not an ENOENT, and never repairs ([[foldedState]]). Fails
+    * loudly when no copy exists at all. */
+  def distinctEstimates(spark: SparkSession, statePath: String): DataFrame =
+    graft.operators.IncrementalDistinct.estimate(
+      foldedState(spark, statePath, "distinct"))
 
   /** Streaming frequent-items maintenance — [[graft.operators.HeavyHitters]]'
     * Misra–Gries summary folded continuously: per micro-batch, the batch's
@@ -990,11 +965,8 @@ object StreamingJobs {
   def heavyHittersOnArrival(stream: DataFrame, itemCol: String,
       capacity: Int, statePath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldHeavyHitters(batch, batchId, itemCol, capacity, statePath)
-      }
+    eachBatch(stream, checkpoint)(
+      foldHeavyHitters(_, _, itemCol, capacity, statePath))
 
   /** One micro-batch fold — exposed for redelivery tests: calling it
     * twice with the same batchId must leave the state bit-identical. */
@@ -1002,14 +974,6 @@ object StreamingJobs {
       itemCol: String, capacity: Int, statePath: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(statePath, "state")
-    val tmp = new org.apache.hadoop.fs.Path(statePath, ".state_tmp")
-    val old = new org.apache.hadoop.fs.Path(statePath, ".state_old")
-    // recover BEFORE reading the fence: a crash in the rename window must
-    // not look like "no state yet" (the distinctOnArrival lesson)
-    graft.operators.StagedSwap.recover(fs, live, tmp, old)
     // The fence must survive an EMPTY summary: an empty first micro-batch,
     // or a capacity-full decrement step that zeroes every counter (which
     // MG's algebra permits), yields zero data rows — if the fence lived
@@ -1019,50 +983,30 @@ object StreamingJobs {
     // real item because summarize() groups non-null values) carrying the
     // committed batchId; data rows carry it too, redundantly. committed is
     // read as max over all rows, so either form of the state is fenced.
-    val prior: Option[(Long, Map[String, Long])] =
-      if (fs.exists(live)) {
-        val rows = spark.read.parquet(live.toString)
-          .select($"item", $"est_count", $"batch_id")
-          .as[(Option[String], Long, Long)].collect()
-        Some((rows.iterator.map(_._3).foldLeft(-1L)(math.max),
-          rows.iterator.collect { case (Some(k), c, _) => k -> c }.toMap))
-      } else None
-    val committed = prior.map(_._1).getOrElse(-1L)
-    if (batchId <= committed) { // redelivered batch: fenced out
-      warnIfMismatchedCheckpoint(batchId, committed, statePath); return
+    foldState(batch, batchId, statePath) { prior =>
+      val rows = prior.select($"item", $"est_count", $"batch_id")
+        .as[(Option[String], Long, Long)].collect()
+      (rows.iterator.map(_._3).foldLeft(-1L)(math.max),
+        rows.iterator.collect { case (Some(k), c, _) => k -> c }.toMap)
+    } { prior =>
+      val batchCounts = graft.operators.HeavyHitters
+        .summarize(batch, itemCol, capacity)
+        .as[(String, Long)].collect().toMap
+      val merged = graft.operators.HeavyHitters.mergeCounts(
+        prior.getOrElse(Map.empty), batchCounts, capacity)
+      ((None: Option[String], 0L, batchId) +:
+        merged.toSeq.map { case (k, c) => (Option(k), c, batchId) })
+        .toDF("item", "est_count", "batch_id").coalesce(1)
     }
-    val batchCounts = graft.operators.HeavyHitters
-      .summarize(batch, itemCol, capacity)
-      .as[(String, Long)].collect().toMap
-    val merged = graft.operators.HeavyHitters.mergeCounts(
-      prior.map(_._2).getOrElse(Map.empty), batchCounts, capacity)
-    val outRows = (None: Option[String], 0L, batchId) +:
-      merged.toSeq.map { case (k, c) => (Option(k), c, batchId) }
-    graft.operators.StagedSwap.swap(fs, live, tmp, old)(dir =>
-      outRows.toDF("item", "est_count", "batch_id")
-        .coalesce(1).write.parquet(dir))
   }
 
   /** Current estimates off a [[heavyHittersOnArrival]] state path,
-    * heaviest first. Non-mutating crash-window tolerance via
-    * [[graft.operators.StagedSwap.readable]] — same race rationale as
-    * [[distinctEstimates]]. Filters out the fence sentinel row. */
-  def heavyHitterEstimates(spark: SparkSession, statePath: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = graft.operators.StagedSwap.readable(fs,
-      new org.apache.hadoop.fs.Path(statePath, "state"),
-      new org.apache.hadoop.fs.Path(statePath, ".state_tmp"),
-      new org.apache.hadoop.fs.Path(statePath, ".state_old"))
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"no heavy-hitters state under $statePath"))
-    readState(spark, fs, src)
-      .filter(org.apache.spark.sql.functions.col("item").isNotNull)
-      .select(org.apache.spark.sql.functions.col("item"),
-        org.apache.spark.sql.functions.col("est_count"))
-      .orderBy(org.apache.spark.sql.functions.col("est_count").desc,
-        org.apache.spark.sql.functions.col("item"))
-  }
+    * heaviest first, read like [[distinctEstimates]]. Filters out the
+    * fence sentinel row. */
+  def heavyHitterEstimates(spark: SparkSession, statePath: String): DataFrame =
+    foldedState(spark, statePath, "heavy-hitters")
+      .filter(col("item").isNotNull).select(col("item"), col("est_count"))
+      .orderBy(col("est_count").desc, col("item"))
 
   /** Streaming quantile maintenance — [[graft.operators.QuantileSketch]]
     * folded continuously: per micro-batch, ONE distributed sketch
@@ -1084,11 +1028,8 @@ object StreamingJobs {
   def quantilesOnArrival(stream: DataFrame, valueCol: String,
       capacity: Int, statePath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldQuantiles(batch, batchId, valueCol, capacity, statePath)
-      }
+    eachBatch(stream, checkpoint)(
+      foldQuantiles(_, _, valueCol, capacity, statePath))
 
   /** One micro-batch fold — exposed for redelivery tests: calling it
     * twice with the same batchId must leave the state bit-identical. */
@@ -1096,51 +1037,29 @@ object StreamingJobs {
       valueCol: String, capacity: Int, statePath: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(statePath, "state")
-    val tmp = new org.apache.hadoop.fs.Path(statePath, ".state_tmp")
-    val old = new org.apache.hadoop.fs.Path(statePath, ".state_old")
-    graft.operators.StagedSwap.recover(fs, live, tmp, old)
-    val prior: Option[(Long, graft.operators.QuantileSketch.Summary)] =
-      if (fs.exists(live)) {
-        val r = spark.read.parquet(live.toString).head()
-        Some((r.getAs[Long]("batch_id"),
-          graft.operators.QuantileSketch.summaryOfRow(r)))
-      } else None
-    if (prior.exists(batchId <= _._1)) { // redelivered: fenced out
-      warnIfMismatchedCheckpoint(batchId, prior.get._1, statePath); return
+    foldState(batch, batchId, statePath) { prior =>
+      val r = prior.head()
+      (r.getAs[Long]("batch_id"), graft.operators.QuantileSketch.summaryOfRow(r))
+    } { prior =>
+      val batchSummary =
+        graft.operators.QuantileSketch.sketch(batch, valueCol, capacity)
+      val merged = prior.fold(batchSummary)(
+        graft.operators.QuantileSketch.merge(_, batchSummary))
+      Seq((merged.capacity, merged.buf.toList,
+          merged.levels.map(_.toList).toList, merged.n, merged.err, batchId))
+        .toDF("capacity", "buf", "levels", "n", "err", "batch_id").coalesce(1)
     }
-    val batchSummary =
-      graft.operators.QuantileSketch.sketch(batch, valueCol, capacity)
-    val merged = prior match {
-      case Some((_, p)) => graft.operators.QuantileSketch.merge(p, batchSummary)
-      case None => batchSummary
-    }
-    val outRow = Seq((merged.capacity, merged.buf.toList,
-      merged.levels.map(_.toList).toList, merged.n, merged.err, batchId))
-    graft.operators.StagedSwap.swap(fs, live, tmp, old)(dir =>
-      outRow.toDF("capacity", "buf", "levels", "n", "err", "batch_id")
-        .coalesce(1).write.parquet(dir))
   }
 
   /** Current quantile estimates off a [[quantilesOnArrival]] state path:
     * one (p, n, err, q) row per requested p. Non-mutating crash-window
-    * tolerance via [[graft.operators.StagedSwap.readable]]. */
+    * tolerance via [[foldedState]]. */
   def quantileEstimates(spark: SparkSession, statePath: String,
       ps: Seq[Double]): DataFrame = {
     import spark.implicits._
     require(ps.nonEmpty, "at least one quantile requested")
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = graft.operators.StagedSwap.readable(fs,
-      new org.apache.hadoop.fs.Path(statePath, "state"),
-      new org.apache.hadoop.fs.Path(statePath, ".state_tmp"),
-      new org.apache.hadoop.fs.Path(statePath, ".state_old"))
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"no quantile state under $statePath"))
     val s = graft.operators.QuantileSketch.summaryOfRow(
-      spark.read.parquet(src.toString).head())
+      foldedState(spark, statePath, "quantile").head())
     ps.map(p => (p, s.n, s.err, s.quantile(p)))
       .toDF("p", "n", "err", "q").orderBy(col("p"))
   }
@@ -1173,12 +1092,8 @@ object StreamingJobs {
   def groupedQuantilesOnArrival(stream: DataFrame, valueCol: String,
       byCol: String, capacity: Int, statePath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldGroupedQuantiles(batch, batchId, valueCol, byCol, capacity,
-          statePath)
-      }
+    eachBatch(stream, checkpoint)(
+      foldGroupedQuantiles(_, _, valueCol, byCol, capacity, statePath))
 
   /** One micro-batch fold — exposed for redelivery tests: calling it
     * twice with the same batchId must leave the state bit-identical. */
@@ -1187,54 +1102,33 @@ object StreamingJobs {
       statePath: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(statePath, "state")
-    val tmp = new org.apache.hadoop.fs.Path(statePath, ".state_tmp")
-    val old = new org.apache.hadoop.fs.Path(statePath, ".state_old")
-    graft.operators.StagedSwap.recover(fs, live, tmp, old)
-    val prior: Option[DataFrame] =
-      if (fs.exists(live)) Some(spark.read.parquet(live.toString)) else None
-    val fence = prior.map(_.agg(max(col("batch_id"))).head().getLong(0))
-    if (fence.exists(batchId <= _)) { // redelivered: fenced out
-      warnIfMismatchedCheckpoint(batchId, fence.get, statePath); return
+    foldState(batch, batchId, statePath)(prior =>
+      (prior.agg(max(col("batch_id"))).head().getLong(0), prior)) { prior =>
+      val batchStore = graft.operators.QuantileSketch
+        .summarizeToStore(batch, valueCol, byCol, capacity)
+      val merged = prior.fold(batchStore)(p =>
+        graft.operators.QuantileSketch.mergeGrouped(
+          p.filter(col("g").isNotNull).drop("batch_id"), batchStore))
+      val sentinel = Seq((null: String, capacity, Seq.empty[Long],
+          Seq.empty[Seq[Long]], 0L, 0L))
+        .toDF("g", "capacity", "buf", "levels", "n", "err")
+      // the write's lineage READS the live dir it will replace — StagedSwap
+      // writes tmp fully (live untouched) before the promote rename
+      merged.unionByName(sentinel).withColumn("batch_id", lit(batchId))
     }
-    val batchStore = graft.operators.QuantileSketch
-      .summarizeToStore(batch, valueCol, byCol, capacity)
-    val merged = prior match {
-      case Some(p) => graft.operators.QuantileSketch.mergeGrouped(
-        p.filter(col("g").isNotNull).drop("batch_id"), batchStore)
-      case None => batchStore
-    }
-    val sentinel = Seq((null: String, capacity, Seq.empty[Long],
-        Seq.empty[Seq[Long]], 0L, 0L))
-      .toDF("g", "capacity", "buf", "levels", "n", "err")
-    val out = merged.unionByName(sentinel)
-      .withColumn("batch_id", lit(batchId))
-    // the write's lineage READS the live dir it will replace — StagedSwap
-    // writes tmp fully (live untouched) before the promote rename
-    graft.operators.StagedSwap.swap(fs, live, tmp, old)(dir =>
-      out.write.parquet(dir))
   }
 
   /** Current per-stratum estimates off a [[groupedQuantilesOnArrival]]
     * state path: one (byCol, p, n, q) row per stratum × p —
     * [[graft.operators.QuantileSketch.quantilesOfStore]]'s shape, the
     * q235 read surface. Non-mutating crash-window tolerance via
-    * [[graft.operators.StagedSwap.readable]]. */
+    * [[foldedState]]. */
   def groupedQuantileEstimates(spark: SparkSession, statePath: String,
       byCol: String, ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty, "at least one quantile requested")
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = graft.operators.StagedSwap.readable(fs,
-      new org.apache.hadoop.fs.Path(statePath, "state"),
-      new org.apache.hadoop.fs.Path(statePath, ".state_tmp"),
-      new org.apache.hadoop.fs.Path(statePath, ".state_old"))
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"no grouped quantile state under $statePath"))
     graft.operators.QuantileSketch.quantilesOfStore(
-        spark.read.parquet(src.toString).filter(col("g").isNotNull), byCol, ps)
+        foldedState(spark, statePath, "grouped quantile")
+          .filter(col("g").isNotNull), byCol, ps)
       .orderBy(col(byCol), col("p"))
   }
 
@@ -1255,11 +1149,8 @@ object StreamingJobs {
   def histogramOnArrival(stream: DataFrame, valueCol: String, nBins: Int,
       lo: Double, hi: Double, statePath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldHistogram(batch, batchId, valueCol, nBins, lo, hi, statePath)
-      }
+    eachBatch(stream, checkpoint)(
+      foldHistogram(_, _, valueCol, nBins, lo, hi, statePath))
 
   /** One micro-batch fold — exposed for redelivery tests: calling it
     * twice with the same batchId must leave the state bit-identical. */
@@ -1268,36 +1159,20 @@ object StreamingJobs {
       statePath: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(statePath, "state")
-    val tmp = new org.apache.hadoop.fs.Path(statePath, ".state_tmp")
-    val old = new org.apache.hadoop.fs.Path(statePath, ".state_old")
-    graft.operators.StagedSwap.recover(fs, live, tmp, old)
-    val prior: Option[(Long, Map[Long, Long])] =
-      if (fs.exists(live)) {
-        val rows = spark.read.parquet(live.toString)
-          .select($"bin", $"n", $"batch_id")
-          .as[(Long, Long, Long)].collect()
-        Some((rows.iterator.map(_._3).foldLeft(-1L)(math.max),
-          rows.iterator.collect { case (b, n, _) if b >= 0 => b -> n }.toMap))
-      } else None
-    if (batchId <= prior.map(_._1).getOrElse(-1L)) { // fenced out
-      warnIfMismatchedCheckpoint(batchId, prior.map(_._1).getOrElse(-1L),
-        statePath); return
+    foldState(batch, batchId, statePath) { prior =>
+      val rows = prior.select($"bin", $"n", $"batch_id")
+        .as[(Long, Long, Long)].collect()
+      (rows.iterator.map(_._3).foldLeft(-1L)(math.max),
+        rows.iterator.collect { case (b, n, _) if b >= 0 => b -> n }.toMap)
+    } { prior =>
+      val before = prior.getOrElse(Map.empty)
+      val batchCounts = graft.operators.Drift
+        .binCounts(batch, valueCol, nBins, lo, hi)
+        .as[(Long, Long)].collect().toMap // ≤ nBins entries — param-bounded
+      val merged = (before.keySet ++ batchCounts.keySet).toSeq.sorted.map(b =>
+        (b, before.getOrElse(b, 0L) + batchCounts.getOrElse(b, 0L), batchId))
+      ((-1L, 0L, batchId) +: merged).toDF("bin", "n", "batch_id").coalesce(1)
     }
-    val batchCounts = graft.operators.Drift
-      .binCounts(batch, valueCol, nBins, lo, hi)
-      .as[(Long, Long)].collect().toMap // ≤ nBins entries — param-bounded
-    val merged = (prior.map(_._2).getOrElse(Map.empty).keySet ++ batchCounts.keySet)
-      .toSeq.sorted.map { b =>
-        (b, prior.map(_._2).getOrElse(Map.empty).getOrElse(b, 0L) +
-          batchCounts.getOrElse(b, 0L), batchId)
-      }
-    val outRows = (-1L, 0L, batchId) +: merged
-    graft.operators.StagedSwap.swap(fs, live, tmp, old)(dir =>
-      outRows.toDF("bin", "n", "batch_id")
-        .coalesce(1).write.parquet(dir))
   }
 
   /** The drift frame of a [[histogramOnArrival]] state against a static
@@ -1306,24 +1181,19 @@ object StreamingJobs {
     * same as the other estimate readers. */
   def histogramDrift(spark: SparkSession, statePath: String,
       baseline: DataFrame, valueCol: String, nBins: Int, lo: Double,
-      hi: Double, threshold: Double = 0.01, eps: Double = 1e-9): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = graft.operators.StagedSwap.readable(fs,
-      new org.apache.hadoop.fs.Path(statePath, "state"),
-      new org.apache.hadoop.fs.Path(statePath, ".state_tmp"),
-      new org.apache.hadoop.fs.Path(statePath, ".state_old"))
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"no histogram state under $statePath"))
-    val cur = readState(spark, fs, src)
-      .filter(org.apache.spark.sql.functions.col("bin") >= 0)
-      .select(org.apache.spark.sql.functions.col("bin"),
-        org.apache.spark.sql.functions.col("n").as("n_cur"))
+      hi: Double, threshold: Double = 0.01, eps: Double = 1e-9): DataFrame =
     graft.operators.Drift.driftFromCounts(
       graft.operators.Drift.binCounts(baseline, valueCol, nBins, lo, hi)
         .withColumnRenamed("n", "n_base"),
-      cur, nBins, lo, hi, threshold, eps)
-  }
+      histogramCounts(spark, statePath).withColumnRenamed("n", "n_cur"),
+      nBins, lo, hi, threshold, eps)
+
+  /** The (bin, n) data rows of a [[histogramOnArrival]] state, without
+    * the fence sentinel. */
+  private def histogramCounts(spark: SparkSession,
+      statePath: String): DataFrame =
+    foldedState(spark, statePath, "histogram")
+      .filter(col("bin") >= 0).select(col("bin"), col("n"))
 
   /** [[histogramOnArrival]] with the monitoring loop closed: after each
     * fold, the cumulative state is compared against the static baseline
@@ -1340,23 +1210,21 @@ object StreamingJobs {
       channel: String = "#drift", threshold: Double = 0.01)
       : DataStreamWriter[Row] = {
     val fired = scala.collection.mutable.Set.empty[Long]
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldHistogram(batch, batchId, valueCol, nBins, lo, hi, statePath)
-        val drifted = histogramDrift(batch.sparkSession, statePath,
-            baseline, valueCol, nBins, lo, hi, threshold)
-          .filter(col("drifted"))
-          .select(col("bin"), col("lo_edge"), col("hi_edge"),
-            col("p_base"), col("p_cur"))
-          .collect() // ≤ nBins rows — parameter-bounded
-        drifted.foreach { r =>
-          val bin = r.getLong(0)
-          if (fired.add(bin)) hook.send(
-            f"drift: $valueCol bin $bin [${r.getDouble(1)}%.1f, ${r.getDouble(2)}%.1f) " +
-              f"share ${r.getDouble(3)}%.4f -> ${r.getDouble(4)}%.4f", channel)
-        }
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      foldHistogram(batch, batchId, valueCol, nBins, lo, hi, statePath)
+      val drifted = histogramDrift(batch.sparkSession, statePath,
+          baseline, valueCol, nBins, lo, hi, threshold)
+        .filter(col("drifted"))
+        .select(col("bin"), col("lo_edge"), col("hi_edge"),
+          col("p_base"), col("p_cur"))
+        .collect() // ≤ nBins rows — parameter-bounded
+      drifted.foreach { r =>
+        val bin = r.getLong(0)
+        if (fired.add(bin)) hook.send(
+          f"drift: $valueCol bin $bin [${r.getDouble(1)}%.1f, ${r.getDouble(2)}%.1f) " +
+            f"share ${r.getDouble(3)}%.4f -> ${r.getDouble(4)}%.4f", channel)
       }
+    }
   }
 
   case class CusumEvent(key: Long, ts: java.sql.Timestamp, tie: Long, v: Double)
@@ -1412,20 +1280,9 @@ object StreamingJobs {
     * where KLL/t-digest compaction would be merge-order-dependent).
     * Error ≤ one bin width; non-mutating read. */
   def histogramQuantiles(spark: SparkSession, statePath: String,
-      nBins: Int, lo: Double, hi: Double, ps: Seq[Double]): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = graft.operators.StagedSwap.readable(fs,
-      new org.apache.hadoop.fs.Path(statePath, "state"),
-      new org.apache.hadoop.fs.Path(statePath, ".state_tmp"),
-      new org.apache.hadoop.fs.Path(statePath, ".state_old"))
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"no histogram state under $statePath"))
+      nBins: Int, lo: Double, hi: Double, ps: Seq[Double]): DataFrame =
     graft.operators.Drift.binnedQuantiles(
-      readState(spark, fs, src)
-        .filter(org.apache.spark.sql.functions.col("bin") >= 0),
-      nBins, lo, hi, ps)
-  }
+      histogramCounts(spark, statePath), nBins, lo, hi, ps)
 
   case class HoltEvent(key: Long, ts: java.sql.Timestamp, tie: Long, v: Double)
   case class HoltPoint(key: Long, rn: Long, vu: Long, level: Long,

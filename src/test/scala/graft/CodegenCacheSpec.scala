@@ -2,11 +2,16 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
+
+import graft.streaming.StreamingJobs
 
 /** The session's codegen class cache holds the engine's working set: a
   * query rerun after more than Spark's default 100 other generated
-  * classes finds every one of its own classes still compiled. */
+  * classes finds every one of its own classes still compiled, and a
+  * streaming query restarted on a fresh checkpoint finds the classes its
+  * previous run compiled. */
 class CodegenCacheSpec extends SparkSpec {
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -34,5 +39,25 @@ class CodegenCacheSpec extends SparkSpec {
     val again = run("q1_agg")
     assert(compiles - rerunFrom == 0, "q1_agg recompiled on its rerun")
     assert(again == first)
+  }
+
+  test("a streaming query restarted on a fresh checkpoint compiles nothing") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def runOnce(): Long = {
+      val dir = java.nio.file.Files.createTempDirectory("codegen_stream").toString
+      val source = MemoryStream[String]
+      val from = compiles
+      val q = StreamingJobs.heavyHittersOnArrival(source.toDF().toDF("item"),
+        "item", capacity = 8, s"$dir/state", s"$dir/ckpt").start()
+      try {
+        source.addData(Seq.fill(5)("a") ++ Seq.fill(3)("b"): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      compiles - from
+    }
+    runOnce()
+    val second = runOnce()
+    assert(second == 0, s"the restarted stream recompiled $second classes")
   }
 }
