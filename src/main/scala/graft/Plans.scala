@@ -10,7 +10,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * action its `run` launched. Those actions carry the plans no returned
   * frame shows — index saves, appends and deletes (q213, q220), the
   * KMeans update aggregates (q81), stats collects. With no names it walks
-  * the whole catalog and ends with the native Catalyst as-of join.
+  * the whole catalog.
   * Usage: runMain graft.Plans [sfDir] [queryName...] */
 object Plans {
   private val Marker = "__plans_marker"
@@ -41,18 +41,6 @@ object Plans {
       println(s"\n===== ${q.name} =====")
       println(q.run(spark, sfDir).queryExecution.explainString(FormattedMode))
       actionPlans().foreach(println)
-    }
-    if (only.isEmpty) {
-      // the native Catalyst as-of join (not a SparkEntry query: q34 keeps
-      // the composed default) — AsOfJoinExec with one exchange+sort per side
-      println(s"\n===== native_asof (q34 route via AsOfJoinExec) =====")
-      val events = graft.core.Tables.events(spark, sfDir)
-        .selectExpr("event_id", "user_id", "ts")
-      val orders = graft.core.Tables.orders(spark, sfDir)
-      println(graft.plans.NativeAsOfJoin.asOf(events, orders, "user_id",
-          "o_custkey", "ts", "o_orderdate", "o_orderkey",
-          Seq("o_orderkey", "o_totalprice"))
-        .queryExecution.explainString(FormattedMode))
     }
     spark.stop()
   }

@@ -15,6 +15,8 @@ import org.apache.spark.sql.SparkSession
   *     engines (our DuckDB oracle runs naive/UTC).
   *   - a codegen class cache sized to the catalog's working set (see
   *     [[CodegenCacheEntries]]), with class names that do not vary per run.
+  *   - graft's SQL functions and planner strategies
+  *     ([[graft.plans.GraftExtensions]]), installed once at build time.
   */
 object GraftSession {
 
@@ -54,6 +56,7 @@ object GraftSession {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
+      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

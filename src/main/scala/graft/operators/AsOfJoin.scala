@@ -1,29 +1,35 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.PlanBridge
+
+import graft.plans.AsOfJoinPlan
 
 /** As-of join: each left row picks up the most recent right row for its key
   * with rightTs <= leftTs (the canonical time-series enrichment operator —
   * trades→quotes, events→latest-state).
   *
-  * Spark has no native as-of join; the options (SURVEY preference order):
-  *  (a) compose built-ins — done here via the union + last-non-null-window
-  *      technique: tag both sides, union, sort within key by (ts, side),
-  *      carry the last right payload forward. ONE shuffle + in-partition
-  *      sort, no range explosion — the same plan shape a custom SparkPlan
-  *      would produce, so (c) a bespoke physical operator isn't justified.
-  *  (b) the naive theta-join (l.ts >= r.ts) + top-1-per-pair explodes to
-  *      |left| x |right-rows-per-key| before pruning; acceptable only as an
-  *      oracle/verification formulation (that's exactly how the DuckDB
-  *      oracle for q34 is written).
+  * Spark has no as-of join, so graft plans its own Catalyst operator:
+  * [[AsOfJoinPlan]] → `AsOfJoinStrategy` → `AsOfJoinExec`, a
+  * per-partition streaming merge behind one hash exchange and sort per
+  * side (see plans/AsOfJoinPlan for the semantics and the plan shape).
+  * The strategy ships in `GraftExtensions`, which `GraftSession.local`
+  * installs. The naive theta-join (l.ts >= r.ts) + top-1-per-pair
+  * explodes to |left| x |right-rows-per-key| before pruning; it is only
+  * the oracle's formulation (the DuckDB oracle for q34 is written that
+  * way).
   *
-  * Determinism: right rows order by (ts, tieCol), so equal-ts right rows
-  * resolve to the largest tieCol; a right row at exactly leftTs matches
-  * ("<=" semantics: right sorts before left at equal ts). The whole right
-  * payload travels as ONE struct so every output column comes from the same
-  * right row even when payload values are null.
+  * Determinism: equal-ts right rows resolve to the largest tieCol; a right
+  * row at exactly leftTs matches ("<=" semantics). The whole right payload
+  * comes from one right row, even when payload values are null.
+  *
+  * The two keys, and the two timestamps, are compared in their common
+  * type — the type a union of the two columns would give them (an int
+  * key against a long one compares as long; a TIMESTAMP_NTZ against a
+  * TIMESTAMP reads as local time in the session time zone).
   */
 object AsOfJoin {
 
@@ -35,31 +41,29 @@ object AsOfJoin {
     val leftCols = left.columns.toSeq
     require(payload.forall(!leftCols.contains(_)),
       s"payload columns ${payload.filter(leftCols.contains)} collide with left columns; alias them first")
-    val reserved = Set("__k", "__ts", "__side", "__tie", "__p", "__last")
-    require(leftCols.forall(!reserved.contains(_)) && payload.forall(!reserved.contains(_)),
-      s"column names $reserved are reserved by asOf")
-    val payloadStruct = struct(payload.map(col): _*)
-    // side 0 = right (sorts before left at equal ts -> "<=" semantics).
-    // Null-ts right rows are dropped up front: they would sort NULLS FIRST
-    // (before every left row) and leak their payload as if they occurred at
-    // the beginning of time, violating the rightTs <= leftTs contract.
-    val taggedRight = right.filter(col(rightTs).isNotNull).select(
-      (col(rightKey).as("__k") +: col(rightTs).as("__ts") +: lit(0).as("__side") +:
-        col(tieCol).cast("long").as("__tie") +: payloadStruct.as("__p") +:
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
-    val nullPayload = lit(null).cast(
-      org.apache.spark.sql.types.StructType(
-        payload.map(c => right.schema(c).copy(name = c))))
-    val taggedLeft = left.select(
-      (col(leftKey).as("__k") +: col(leftTs).as("__ts") +: lit(1).as("__side") +:
-        lit(Long.MaxValue).as("__tie") +: nullPayload.as("__p") +:
-        leftCols.map(col)): _*)
-    val w = Window.partitionBy(col("__k"))
-      .orderBy(col("__ts").asc, col("__side").asc, col("__tie").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    taggedRight.unionByName(taggedLeft)
-      .withColumn("__last", last(col("__p"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select(leftCols.map(col) ++ payload.map(c => col(s"__last.$c").as(c)): _*)
+    val spark = left.sparkSession
+    val common = left.select(col(leftKey).as("k"), col(leftTs).as("t"))
+      .unionByName(right.select(col(rightKey).as("k"), col(rightTs).as("t")))
+      .schema.map(_.dataType)
+    val zone = Some(spark.conf.get("spark.sql.session.timeZone"))
+    val lPlan = PlanBridge.analyzed(left)
+    // self-join safety: re-alias the right side when attribute ids overlap
+    // with the left (BindReferences would otherwise bind ambiguously)
+    val rightPlan0 = PlanBridge.analyzed(right)
+    val rPlan =
+      if (rightPlan0.outputSet.intersect(lPlan.outputSet).isEmpty) rightPlan0
+      else PlanBridge.analyzed(right.select(right.columns.map(c => col(c).as(c)): _*))
+    def attr(plan: LogicalPlan, name: String): Attribute =
+      plan.output.find(_.name == name).getOrElse(throw new IllegalArgumentException(
+        s"column '$name' not found among ${plan.output.map(_.name)}"))
+    def typed(plan: LogicalPlan, name: String, i: Int): Expression = {
+      val a = attr(plan, name)
+      if (a.dataType == common(i)) a else Cast(a, common(i), zone)
+    }
+    PlanBridge.ofRows(spark, AsOfJoinPlan(
+      typed(lPlan, leftKey, 0), typed(rPlan, rightKey, 0),
+      typed(lPlan, leftTs, 1), typed(rPlan, rightTs, 1),
+      attr(rPlan, tieCol), payload.map(attr(rPlan, _)),
+      lPlan, rPlan))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Concurrency, IndexLayout}
 
@@ -80,12 +81,17 @@ object IndexLifecycle {
       * lifecycle queries). Any subset of the artifacts swapped is a sound
       * index (probes join artifacts on id, so an id gone from one never
       * surfaces), and rerunning the SAME delete completes it. Absent ids
-      * are no-ops; an emptying delete is rejected (drop the directory). */
+      * are no-ops; an emptying delete is rejected (drop the directory).
+      * The distinct ids are cached for the guard and the rewrites, unless
+      * the caller cached `ids` itself to share one id set among several
+      * deletes (a second cache of the same plan would only be refused). */
     def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
       require(ids.columns.length == 1,
         s"ids must be a one-column frame, got ${ids.columns.toSeq}")
       recover(spark, path)
-      val del = ids.toDF("__del_id").distinct().cache()
+      val owned = ids.storageLevel == StorageLevel.NONE
+      val del0 = ids.toDF("__del_id").distinct()
+      val del = if (owned) del0.cache() else del0
       try {
         val commit = guard.getOrElse(keepsARow _)(spark, path, del)
         fanOut(idArtifacts.map(a => () =>
@@ -96,7 +102,7 @@ object IndexLifecycle {
               a.key).parquet(tmp)
           }))
         commit()
-      } finally del.unpersist()
+      } finally if (owned) del.unpersist()
     }
 
     /** The default emptying guard: a zero-row rewrite under partitionBy
@@ -126,11 +132,11 @@ object IndexLifecycle {
 
     /** Compact an index that appends have fragmented: each partitioned
       * id artifact is rewritten to ~one file per partition, and each
-      * flat artifact to max(1, bytes / 128 MiB) files when it holds more
-      * — so compact clears everything [[IndexMaintenance]]'s policy flags
-      * (a flagged artifact compact never rewrote would re-trigger
-      * auto-compact every pass). Contents are preserved exactly. Each
-      * rewrite stages into a sibling directory and swaps via
+      * flat artifact to [[IndexMaintenance.targetFiles]] files when it
+      * holds more — so compact clears everything [[IndexMaintenance]]'s
+      * policy flags (a flagged artifact compact never rewrote would
+      * re-trigger auto-compact every pass). Contents are preserved
+      * exactly. Each rewrite stages into a sibling directory and swaps via
       * [[StagedSwap]], so a crash is repaired by the next [[recover]];
       * the rewrites run as concurrent jobs (one artifact compacted and
       * another not is a valid state). */
@@ -153,8 +159,8 @@ object IndexLifecycle {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) None
       else {
-        val target = math.max(1L,
-          fs.getContentSummary(p).getLength / (128L << 20)).toInt
+        val target =
+          IndexMaintenance.targetFiles(fs.getContentSummary(p).getLength)
         if (IndexMaintenance.dataFiles(fs, p)._2 <= target) None
         else Some(() => StagedSwap.subdir(spark, path, sub, "_compact").swap(
           writer(spark.read.parquet(p.toString).repartition(target), None)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Maintenance-policy observation for the persisted indexes — the glue
@@ -25,31 +25,49 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fragmentation signal (the probe-side cost it tracks is file opens
   * per pruned partition read). Flat artifact dirs (sigs/, docs/) count
   * as one leaf. Snapshot stores and crashed-swap staging dirs are
-  * ignored, same exclusions as [[IndexSnapshots]]. */
+  * ignored: the artifacts are the ones [[IndexSnapshots]] copies. */
 object IndexMaintenance {
 
-  private def excludedSuffixes = StagedSwap.allStagingSuffixes
+  /** Bytes per output file of every compaction. */
+  private val TargetFileBytes = 128L << 20
 
-  private[operators] def dataFiles(f: org.apache.hadoop.fs.FileSystem,
-      dir: Path): (Long, Long) = {
-    // (leaf dirs, data files): a partitioned artifact's leaves are its
-    // partition dirs; a flat artifact is its own single leaf
-    val children = f.listStatus(dir).toSeq
-      // skip committer scratch (_temporary) and hidden dirs, matching
-      // the file-level filter and Spark's own reader convention
-      .filterNot(st => st.isDirectory &&
-        (st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith(".")))
-    val (subdirs, files) = children.partition(_.isDirectory)
-    val dataHere = files.count { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (subdirs.isEmpty) (1L, dataHere.toLong)
+  /** (leaf dirs, data files) under `dir`: a partitioned artifact's leaves
+    * are its partition dirs; a flat artifact is its own single leaf.
+    * Committer scratch (`_temporary`) and hidden dirs and files are
+    * skipped, Spark's own reader convention. The one data-file filter of
+    * every compaction: the index families', sink [[graft.sinks.Compaction]]
+    * and [[graft.sinks.Sinks.compactParquet]]. */
+  private[graft] def dataFiles(f: FileSystem, dir: Path): (Long, Long) = {
+    def hidden(st: FileStatus) =
+      st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith(".")
+    val (subdirs, files) = f.listStatus(dir).toSeq.filterNot(hidden)
+      .partition(_.isDirectory)
+    if (subdirs.isEmpty) (1L, files.size.toLong)
     else {
       val leaves = subdirs.map(s => dataFiles(f, s.getPath))
-      (leaves.map(_._1).sum, leaves.map(_._2).sum + dataHere)
+      (leaves.map(_._1).sum, leaves.map(_._2).sum + files.size)
     }
   }
+
+  /** Data files in the directory at `path`; 0 when it is absent. Pure
+    * driver work (one listing, no Spark job): safe once per micro-batch. */
+  def dataFiles(spark: SparkSession, path: String): Long = {
+    val p = new Path(path)
+    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (f.exists(p)) dataFiles(f, p)._2 else 0L
+  }
+
+  /** The one fragmentation test: more than `maxFilesPerDir` data files
+    * per leaf dir. For a single partition dir, more than `maxFilesPerDir`
+    * files. */
+  private[graft] def fragmented(leaves: Long, files: Long,
+      maxFilesPerDir: Int): Boolean =
+    files > maxFilesPerDir.toLong * leaves
+
+  /** The one output size of every compaction: max(1, ⌈bytes / 128 MiB⌉)
+    * files. */
+  private[graft] def targetFiles(bytes: Long): Int =
+    math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes).toInt
 
   /** One row per artifact directory: (artifact, leaf_dirs, data_files,
     * needs_compact) with needs_compact = data_files > maxFilesPerDir ×
@@ -67,17 +85,10 @@ object IndexMaintenance {
     require(maxFilesPerDir >= 1, s"maxFilesPerDir must be >= 1")
     val root = new Path(path)
     val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(f.exists(root), s"no index at $path")
-    f.listStatus(root).toSeq
-      .filter(_.isDirectory).map(_.getPath)
-      .filterNot(p => p.getName == IndexSnapshots.snapDirName ||
-        p.getName.startsWith("."))
-      .filterNot(p => excludedSuffixes.exists(p.getName.endsWith))
-      .sortBy(_.getName)
-      .map { a =>
-        val (leaves, files) = dataFiles(f, a)
-        (a.getName, leaves, files, files > maxFilesPerDir.toLong * leaves)
-      }
+    IndexSnapshots.artifactDirs(f, root).sortBy(_.getName).map { a =>
+      val (leaves, files) = dataFiles(f, a)
+      (a.getName, leaves, files, fragmented(leaves, files, maxFilesPerDir))
+    }
   }
 
   /** True when ANY artifact is fragmented past the threshold — the

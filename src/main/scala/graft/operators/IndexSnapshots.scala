@@ -67,8 +67,9 @@ object IndexSnapshots {
 
   /** Live artifact subdirectories of the index root: every child
     * directory that is not the snapshot store, not a hidden/staging
-    * dir, and not a crashed swap's leftover. */
-  private def artifactDirs(f: FileSystem, root: Path): Seq[Path] = {
+    * dir, and not a crashed swap's leftover. [[IndexMaintenance]] lists
+    * the same set. */
+  private[operators] def artifactDirs(f: FileSystem, root: Path): Seq[Path] = {
     require(f.exists(root), s"no index at $root")
     f.listStatus(root).toSeq
       .filter(_.isDirectory)

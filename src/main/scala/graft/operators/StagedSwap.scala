@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 
 /** Crash-safe staged directory swap shared by every rewrite of a live
   * directory — [[IndexLifecycle]]'s deletes and compacts, meta writes,
@@ -113,18 +113,26 @@ object StagedSwap {
       *
       * Check-then-read race (inherent to a no-lock design): between this
       * exists(live) and the caller's actual read, a concurrent writer's
-      * swap can rename `live` away, so the read can still fail with
-      * FileNotFoundException even after resolving to `live`. The
-      * non-mutating design removes the promote-steal hazard, not reader
-      * crashes — callers racing a live writer must catch
-      * FileNotFoundException, re-resolve, and retry once (the swap window
-      * is two renames wide, so a single re-resolution always lands on a
-      * complete copy). */
+      * swap can rename `live` away. Readers therefore load through
+      * [[read]], which re-resolves and retries once; the non-mutating
+      * design removes the promote-steal hazard, the retry the reader
+      * crash. */
     def readable(missing: => String): Path =
       if (fs.exists(live)) live
       else if (fs.exists(tmp) && fs.exists(new Path(tmp, "_SUCCESS"))) tmp
       else if (fs.exists(old)) old
       else throw new java.io.FileNotFoundException(missing)
+
+    /** Load the readable copy ([[readable]]) with `load`. If the copy
+      * vanishes under the load — a live writer's swap renamed it — resolve
+      * again and load once more: the swap window is two renames wide, so
+      * the second resolution lands on a complete copy. The retry covers
+      * resolution and whatever `load` itself lists or reads (for
+      * `spark.read.parquet`, the file listing); a lazy frame scanned
+      * after a later swap can still fail. */
+    def read[T](missing: => String)(load: Path => T): T =
+      try load(readable(missing))
+      catch { case e: Exception if vanished(e) => load(readable(missing)) }
 
     /** Run one swap: recover a crashed predecessor, clear leftovers (only
       * with `live` confirmed present), `write` the new copy to `tmp`, then
@@ -173,6 +181,21 @@ object StagedSwap {
     staged(spark, new Path(statePath, "state"),
       new Path(statePath, ".state_tmp"), new Path(statePath, ".state_old"))
 
+  /** A table's partition dir `live`, staged through `<tmpRoot>/<name>`
+    * and `<oldRoot>/<name>` — hidden roots beside the partitions, which
+    * Spark's file index ignores. The roots are created here: a rename
+    * into a missing parent returns false on strict-rename filesystems
+    * (HDFS, object stores), which would abort the swap after its
+    * rewrite. */
+  def underRoots(spark: SparkSession, live: Path, tmpRoot: Path,
+      oldRoot: Path): Staged = {
+    val st = staged(spark, live, new Path(tmpRoot, live.getName),
+      new Path(oldRoot, live.getName))
+    st.fs.mkdirs(tmpRoot)
+    st.fs.mkdirs(oldRoot)
+    st
+  }
+
   /** Writer-restart recovery for one artifact subdir under the shared
     * naming convention, without knowing WHICH mutation crashed: find the
     * surviving tmp candidate among [[tmpSuffixes]] (single-writer ⇒ at
@@ -215,15 +238,15 @@ object StagedSwap {
     }
   }
 
-  /** [[Staged.recover]] over a caller-built triple (sink compaction's
-    * per-partition staging roots). */
-  def recover(fs: FileSystem, live: Path, tmp: Path, old: Path): Unit =
-    Staged(fs, live, tmp, old).recover()
-
-  /** [[Staged.swap]] over a caller-built triple. */
-  def swap(fs: FileSystem, live: Path, tmp: Path, old: Path)(
-      write: String => Unit): Unit =
-    Staged(fs, live, tmp, old).swap(write)
+  /** A path that disappeared under a read: `FileNotFoundException`, or
+    * the `PATH_NOT_FOUND` analysis error `spark.read` raises for a
+    * missing root, possibly as the cause of another exception. */
+  private def vanished(e: Throwable): Boolean = e match {
+    case null => false
+    case _: java.io.FileNotFoundException => true
+    case a: AnalysisException if a.getCondition == "PATH_NOT_FOUND" => true
+    case _ => vanished(e.getCause)
+  }
 
   /** Delete that fails loudly: a `false` return with the path still
     * present (permissions, open handles, an object-store hiccup) would

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -9,13 +8,12 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
-/** Whole-operator as-of join as a first-class Catalyst citizen — the (c)
-  * extension tier from SURVEY §0: custom LogicalPlan → SparkStrategy →
-  * SparkPlan, complementing the composed union+window form in
-  * operators.AsOfJoin (which remains the default; see its Scaladoc for why
-  * composition is usually enough).
+/** The as-of join behind `operators.AsOfJoin.asOf`, as a first-class
+  * Catalyst citizen — the (c) extension tier from SURVEY §0: custom
+  * LogicalPlan → SparkStrategy → SparkPlan.
   *
-  * What the native operator buys over the composition:
+  * What it buys over composing built-ins (a union of both sides plus a
+  * last-non-null window):
   *  - no union materialization: left rows never widen to carry null
   *    payload slots through the sort, right rows never carry null left
   *    columns — the shuffle moves each side's own schema only;
@@ -30,13 +28,15 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   *    exchange per side + in-partition sort, identical shuffle volume to
   *    the composed form minus the null padding.
   *
-  * Semantics (kept bit-identical to operators.AsOfJoin.asOf, which the
-  * spec asserts): each left row picks up the payload of the latest right
-  * row with the same key and rightTs <= leftTs; equal-ts right rows
-  * resolve to the largest tie value; left rows with no qualifying right
-  * row (or a null left timestamp) get all-null payload; null-ts right
-  * rows are dropped up front; null keys group together (window-partition
-  * semantics, not SQL-join null semantics).
+  * Semantics (AsOfJoinPlanSpec pins them against the composed form):
+  * each left row picks up the payload of the latest right row with the
+  * same key and rightTs <= leftTs; equal-ts right rows resolve to the
+  * largest tie value; left rows with no qualifying right row (or a null
+  * left timestamp) get all-null payload; null-ts right rows are dropped
+  * up front; null keys group together (window-partition semantics, not
+  * SQL-join null semantics). The two keys share one type, and so do the
+  * two timestamps: the entry casts each pair to its common type, so
+  * equal keys hash to one partition.
   */
 case class AsOfJoinPlan(
     leftKey: Expression, rightKey: Expression,
@@ -54,59 +54,13 @@ case class AsOfJoinPlan(
 }
 
 /** Plans [[AsOfJoinPlan]] as [[AsOfJoinExec]]; a no-op for everything
-  * else. Injected per-session by `GraftStrategies.ensure` (or via
-  * `GraftExtensions` at builder time). */
+  * else. Injected by [[GraftExtensions]]. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: AsOfJoinPlan =>
       AsOfJoinExec(p.leftKey, p.rightKey, p.leftTs, p.rightTs, p.tie,
         p.payload, planLater(p.left), planLater(p.right)) :: Nil
     case _ => Nil
-  }
-}
-
-object GraftStrategies {
-  /** Idempotently add the graft planner strategies to a live session. */
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
-  }
-}
-
-/** DataFrame entry point for the native as-of join — same signature and
-  * bit-identical semantics as `operators.AsOfJoin.asOf` (the composed
-  * union+window form, which stays the default; AsOfJoinPlanSpec pins
-  * equality across the full semantic matrix). Use this form when the null
-  * padding of the union materially widens the shuffle — wide left schemas
-  * against wide right payloads. */
-object NativeAsOfJoin {
-
-  def asOf(left: DataFrame, right: DataFrame, leftKey: String,
-      rightKey: String, leftTs: String, rightTs: String, tieCol: String,
-      payload: Seq[String]): DataFrame = {
-    val leftCols = left.columns.toSeq
-    require(payload.forall(!leftCols.contains(_)),
-      s"payload columns ${payload.filter(leftCols.contains)} collide with left columns; alias them first")
-    val spark = left.sparkSession
-    GraftStrategies.ensure(spark)
-    val lPlan = org.apache.spark.sql.graftshim.PlanBridge.analyzed(left)
-    // self-join safety: re-alias the right side when attribute ids overlap
-    // with the left (BindReferences would otherwise bind ambiguously)
-    val rightPlan0 = org.apache.spark.sql.graftshim.PlanBridge.analyzed(right)
-    val rPlan =
-      if (rightPlan0.outputSet.intersect(lPlan.outputSet).isEmpty) rightPlan0
-      else org.apache.spark.sql.graftshim.PlanBridge.analyzed(
-        right.select(right.columns.map(c =>
-          org.apache.spark.sql.functions.col(c).as(c)): _*))
-    def attr(plan: LogicalPlan, name: String): Attribute =
-      plan.output.find(_.name == name).getOrElse(throw new IllegalArgumentException(
-        s"column '$name' not found among ${plan.output.map(_.name)}"))
-    org.apache.spark.sql.graftshim.PlanBridge.ofRows(spark, AsOfJoinPlan(
-      attr(lPlan, leftKey), attr(rPlan, rightKey),
-      attr(lPlan, leftTs), attr(rPlan, rightTs),
-      attr(rPlan, tieCol), payload.map(attr(rPlan, _)),
-      lPlan, rPlan))
   }
 }
 

@@ -12,9 +12,11 @@ import Exact._
 object AdvancedQueries extends QueryModule {
 
   /** As-of join: each event enriched with the user's latest order at or
-    * before the event time. Engine side: single-shuffle union+window
-    * (operators/AsOfJoin); oracle side: the naive theta-join + top-1 —
-    * different algorithms, same relation. */
+    * before the event time. Engine side: the native as-of merge
+    * (operators/AsOfJoin, one exchange and sort per side); oracle side:
+    * the naive theta-join + top-1 — different algorithms, same relation.
+    * `ts` is a TIMESTAMP and `o_orderdate` a TIMESTAMP_NTZ: the join
+    * compares them as TIMESTAMPs in the session zone (UTC). */
   private def q34AsOf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val events = Tables.events(spark, dir)
@@ -30,7 +32,7 @@ object AdvancedQueries extends QueryModule {
   }
 
   // The oracle intentionally uses the explosive formulation (theta join +
-  // row_number) — an independent algorithm validating the windowed one.
+  // row_number) — an independent algorithm validating the merge.
   private val q34Sql =
     """SELECT event_id, user_id, ts_s, o_orderkey, o_totalprice FROM (
       |  SELECT e.event_id, e.user_id,

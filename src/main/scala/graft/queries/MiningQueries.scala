@@ -400,8 +400,8 @@ object MiningQueries extends QueryModule {
       |ORDER BY domain""".stripMargin
 
   /** Last-touch marketing attribution: every purchase picks up the most
-    * recent at-or-before click by the same user via the as-of join (ONE
-    * shuffle + in-partition sort — [[graft.operators.AsOfJoin]]), then
+    * recent at-or-before click by the same user via the as-of join (one
+    * exchange + in-partition sort per side — [[graft.operators.AsOfJoin]]), then
     * buckets as 'click' when the touch landed within a 7-day window,
     * 'organic' otherwise. Value mass and touch-to-purchase lag both stay
     * exact integers (1e-3 value units / µs); nothing divides. The oracle
@@ -1557,14 +1557,13 @@ object MiningQueries extends QueryModule {
 
   /** The engine's SQL surface end to end: the query text itself runs
     * through `spark.sql` against a temp view, using the REGISTERED graft
-    * kernels (luhn_valid, hamming64 — [[graft.plans.GraftExtensions]]),
-    * not the DataFrame API. Pins that a SQL-only user of the library gets
+    * kernels (luhn_valid, hamming64 — [[graft.plans.GraftExtensions]],
+    * which every graft session is built with), not the DataFrame API. Pins that a SQL-only user of the library gets
     * the same codegen kernels and the same answers the Column API gives —
     * the q168 fingerprint synthesis reused so DuckDB can replay both
     * functions relationally (Luhn as the q163 list_transform fold,
     * hamming as bit_count∘xor). */
   private def q182SqlSurface(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark) // idempotent re-register
     Tables.documents(spark, dir).createOrReplaceTempView("docs_sql_surface")
     spark.sql(
       """SELECT doc_id,

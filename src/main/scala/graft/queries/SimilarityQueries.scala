@@ -1395,15 +1395,18 @@ object SimilarityQueries extends QueryModule {
     // round-trips per family at fixture scale. Each leg keeps ITS OWN
     // save → append → delete → audit order; the audit frames' values
     // collect eagerly inside the leg, so the final unionAll is over
-    // local rows and the result is bit-identical.
+    // local rows and the result is bit-identical. Two families delete
+    // each corpus's ids: one cached id set per corpus serves both
+    // (IndexLifecycle.delete reads a cached id set as is).
+    val docDel = docs.filter($"doc_id" % 7 === 0).select($"doc_id").cache()
+    val embDel = emb.filter($"vec_id" % 7 === 0).select($"vec_id").cache()
     val fText = () => {
       val tPath = graft.core.Scratch.dir(dir, "fsck_tx")
       graft.operators.TextIndex.save(
         docs.filter($"doc_id" % 2 === 0), "doc_id", "text", tPath)
       graft.operators.TextIndex.append(
         docs.filter($"doc_id" % 2 === 1), "doc_id", "text", tPath)
-      graft.operators.TextIndex.delete(spark, tPath,
-        docs.filter($"doc_id" % 7 === 0).select($"doc_id"))
+      graft.operators.TextIndex.delete(spark, tPath, docDel)
       graft.operators.IndexAudit.auditText(spark, tPath)
     }
     val fMh = () => {
@@ -1412,8 +1415,7 @@ object SimilarityQueries extends QueryModule {
         docs.filter($"doc_id" % 2 === 0), "doc_id", "text", mPath)
       graft.operators.MinHashIndex.append(
         docs.filter($"doc_id" % 2 === 1), "doc_id", "text", mPath)
-      graft.operators.MinHashIndex.delete(spark, mPath,
-        docs.filter($"doc_id" % 7 === 0).select($"doc_id"))
+      graft.operators.MinHashIndex.delete(spark, mPath, docDel)
       graft.operators.IndexAudit.auditMinHash(spark, mPath)
     }
     val fPq = () => {
@@ -1427,8 +1429,7 @@ object SimilarityQueries extends QueryModule {
         coarse, pq, pPath, residual = false)
       graft.operators.ProductQuantizer.append(
         emb.filter($"vec_id" % 2 === 1), "vec_id", "embedding", pPath)
-      graft.operators.ProductQuantizer.delete(spark, pPath,
-        emb.filter($"vec_id" % 7 === 0).select($"vec_id"))
+      graft.operators.ProductQuantizer.delete(spark, pPath, embDel)
       graft.operators.IndexAudit.auditPq(spark, pPath)
     }
     val fIvf = () => {
@@ -1436,13 +1437,13 @@ object SimilarityQueries extends QueryModule {
       val ivf = graft.operators.IvfIndex.fit(
         emb, "vec_id", "embedding", nLists = 8, iters = 2)
       graft.operators.IvfIndex.save(emb, "vec_id", "embedding", ivf, iPath)
-      graft.operators.IvfIndex.delete(spark, iPath,
-        emb.filter($"vec_id" % 7 === 0).select($"vec_id"))
+      graft.operators.IvfIndex.delete(spark, iPath, embDel)
       graft.operators.IndexAudit.auditIvf(spark, iPath)
     }
-    graft.core.Concurrency.runAll(Seq(fText, fMh, fPq, fIvf))
+    try graft.core.Concurrency.runAll(Seq(fText, fMh, fPq, fIvf))
       .reduce(_ unionAll _)
       .orderBy($"family", $"check")
+    finally { docDel.unpersist(); embDel.unpersist() }
   }
 
   /** Every audit value recomputed from the corpora minus the deleted

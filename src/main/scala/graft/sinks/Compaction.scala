@@ -1,10 +1,9 @@
 package graft.sinks
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-import graft.operators.StagedSwap
+import graft.operators.{IndexMaintenance, StagedSwap}
 
 /** Small-file compaction for date-partitioned parquet datasets — the
   * maintenance job every continuously-ingesting 100 TB table needs:
@@ -15,17 +14,19 @@ import graft.operators.StagedSwap
   * object store's LIST calls.
   *
   * Each partition directory is rewritten independently:
-  * read → coalesce(⌈bytes/targetBytes⌉) → write-to-tmp → crash-safe
-  * [[StagedSwap]] promote. Readers never observe a partial partition:
-  * the swap is two renames, and a crash anywhere leaves either the old
-  * files or a recoverable tmp/old pair that the NEXT compaction run (or
-  * any other StagedSwap caller) restores before touching anything.
+  * read → coalesce([[IndexMaintenance.targetFiles]]) → write-to-tmp →
+  * crash-safe [[StagedSwap]] promote. Readers never observe a partial
+  * partition: the swap is two renames, and a crash anywhere leaves
+  * either the old files or a recoverable tmp/old pair that the NEXT
+  * compaction run (or any other StagedSwap caller) restores before
+  * touching anything.
   * Staging directories live under dot-prefixed siblings
   * (`.compact_tmp/`, `.compact_old/`), which Spark's file index ignores,
   * so a concurrent reader of the table root never lists half-written
   * data.
   *
-  * Only partitions whose file count exceeds `maxFiles` are touched —
+  * Only partitions whose file count exceeds `maxFiles` are touched (the
+  * [[IndexMaintenance.fragmented]] rule for one leaf dir) —
   * compaction is incremental by construction, and re-running it is a
   * no-op on already-compact partitions (idempotent maintenance cron).
   * Partition values are taken from directory names, never parsed from
@@ -39,14 +40,14 @@ object Compaction {
       filesAfter: Int, bytes: Long, compacted: Boolean)
 
   def compactDatePartitions(spark: SparkSession, root: String,
-      targetBytes: Long = 128L * 1024 * 1024,
       maxFiles: Int = 4): Seq[PartitionReport] = {
-    require(targetBytes > 0 && maxFiles > 0, "targetBytes and maxFiles must be positive")
+    require(maxFiles > 0, "maxFiles must be positive")
     val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration: Configuration)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmpRoot = new Path(rootPath, ".compact_tmp")
     val oldRoot = new Path(rootPath, ".compact_old")
+    def staged(name: String) =
+      StagedSwap.underRoots(spark, new Path(rootPath, name), tmpRoot, oldRoot)
 
     def childNames(p: Path): Seq[String] =
       if (!fs.exists(p)) Seq.empty
@@ -61,37 +62,23 @@ object Compaction {
     // anything else touches the table.
     val names = (childNames(rootPath) ++ childNames(tmpRoot) ++ childNames(oldRoot))
       .filter(isPartitionName).distinct.sorted
-    names.foreach { n =>
-      val live = new Path(rootPath, n)
-      if (!fs.exists(live))
-        StagedSwap.recover(fs, live, new Path(tmpRoot, n), new Path(oldRoot, n))
-    }
+    names.filterNot(n => fs.exists(new Path(rootPath, n)))
+      .foreach(staged(_).recover())
 
     names.filter(n => fs.exists(new Path(rootPath, n))).map { name =>
       val dir = new Path(rootPath, name)
-      def dataFiles = fs.listStatus(dir).toSeq.filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      val before = dataFiles
-      val bytes = before.map(_.getLen).sum
-      if (before.size <= maxFiles) {
-        PartitionReport(name, before.size, before.size, bytes, compacted = false)
+      val (leaves, before) = IndexMaintenance.dataFiles(fs, dir)
+      val bytes = fs.getContentSummary(dir).getLength
+      if (!IndexMaintenance.fragmented(leaves, before, maxFiles)) {
+        PartitionReport(name, before.toInt, before.toInt, bytes, compacted = false)
       } else {
-        val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-        val tmp = new Path(tmpRoot, name)
-        val old = new Path(oldRoot, name)
-        // both staging parents must pre-exist: rename() into a missing
-        // parent returns false on strict-rename filesystems (HDFS/object
-        // stores), which would abort the swap after the rewrite work
-        fs.mkdirs(tmp.getParent)
-        fs.mkdirs(old.getParent)
-        StagedSwap.swap(fs, dir, tmp, old) { tmpDir =>
+        staged(name).swap { tmpDir =>
           spark.read.parquet(dir.toString)
-            .coalesce(nOut)
+            .coalesce(IndexMaintenance.targetFiles(bytes))
             .write.mode("overwrite").parquet(tmpDir)
         }
-        PartitionReport(name, before.size, dataFiles.size, bytes, compacted = true)
+        PartitionReport(name, before.toInt,
+          IndexMaintenance.dataFiles(fs, dir)._2.toInt, bytes, compacted = true)
       }
     }
   }

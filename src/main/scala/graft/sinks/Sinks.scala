@@ -59,22 +59,6 @@ object Sinks {
       .write.mode(SaveMode.Append).parquet(path)
   }
 
-  /** Data-file count of a bare (flat) parquet corpus dir — the
-    * fragmentation signal for [[compactParquet]], the
-    * [[graft.operators.IndexMaintenance]] files-per-dir policy without
-    * artifact subdirs. Pure driver work (one listing, no Spark job):
-    * safe to call once per micro-batch. Zero when the dir is absent. */
-  def corpusDataFiles(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).count { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.toLong
-  }
-
   /** Rewrite a keyed parquet corpus dir into size-targeted files — the
     * small-files valve for [[upsertIgnoreParquet]]'s per-batch appends:
     * a long-running ingest accretes ~one file set per micro-batch, and
@@ -82,21 +66,17 @@ object Sinks {
     * rewrite runs under the [[graft.operators.StagedSwap]] swap
     * (recover-first; a crash at any point leaves the previous corpus
     * servable and the rerun converges), sizes the output at
-    * ceil(bytes / targetBytesPerFile) files from one metadata listing,
-    * and refreshes Spark's listing caches after the out-of-band move.
-    * Content-preserving and idempotent; single-writer like every
-    * rewrite here. */
+    * [[graft.operators.IndexMaintenance.targetFiles]] files from one
+    * metadata listing, and refreshes Spark's listing caches after the
+    * out-of-band move. Content-preserving and idempotent; single-writer
+    * like every rewrite here. */
   def compactParquet(spark: org.apache.spark.sql.SparkSession,
-      path: String, targetBytesPerFile: Long = 128L * 1024 * 1024): Unit = {
-    require(targetBytesPerFile > 0,
-      s"targetBytesPerFile must be positive, got $targetBytesPerFile")
+      path: String): Unit =
     rewriteCorpus(spark, path) { (corpus, dir) =>
-      val bytes = corpus.fs.getContentSummary(corpus.live).getLength
-      val n = math.max(1L,
-        (bytes + targetBytesPerFile - 1) / targetBytesPerFile).toInt
+      val n = graft.operators.IndexMaintenance.targetFiles(
+        corpus.fs.getContentSummary(corpus.live).getLength)
       spark.read.parquet(path).repartition(n).write.parquet(dir)
     }
-  }
 
   /** Rewrite the parquet corpus at `path` under its
     * [[graft.operators.StagedSwap.sibling]] swap: recover a crashed

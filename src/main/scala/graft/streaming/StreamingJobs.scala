@@ -77,11 +77,14 @@ object StreamingJobs {
           retakeTag = true)
     }
 
-  /** Whether artifact `sub` of the index at `indexPath` reads. */
-  private def readable(spark: SparkSession, indexPath: String,
-      sub: String): Boolean =
-    try { spark.read.parquet(s"$indexPath/$sub"); true }
-    catch { case _: org.apache.spark.sql.AnalysisException => false }
+  /** Whether the index at `indexPath` has artifact `sub`. Callers run
+    * the family's recover() first, so a crashed swap is repaired and a
+    * present artifact is a promoted, complete one. */
+  private def hasArtifact(spark: SparkSession, indexPath: String,
+      sub: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(indexPath, sub)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   /** Opt-in in-stream compaction: one directory listing per batch, and a
     * compact only once append-accreted files pass the policy threshold
@@ -93,6 +96,15 @@ object StreamingJobs {
     if (filesPerDir.exists(t =>
         graft.operators.IndexMaintenance.needsCompact(spark, indexPath, t)))
       family.compact(spark, indexPath)
+
+  /** Opt-in compaction of a keyed-append output corpus (answers, curated
+    * docs): it accretes one file set per batch like the index does, so
+    * the same files-per-dir rule and one listing per batch decide. */
+  private def compactOutput(spark: SparkSession, outPath: String,
+      maxFiles: Option[Int]): Unit =
+    if (maxFiles.exists(t => graft.operators.IndexMaintenance.fragmented(
+        1L, graft.operators.IndexMaintenance.dataFiles(spark, outPath), t)))
+      graft.sinks.Sinks.compactParquet(spark, outPath)
 
   /** A fenced-out batch is normally checkpoint REPLAY (the engine
     * redelivered a batchId the state already folded) — but batch 0 fenced
@@ -146,13 +158,14 @@ object StreamingJobs {
 
   /** The state a [[foldState]] job last promoted under `statePath`,
     * resolved without mutating anything
-    * ([[graft.operators.StagedSwap.Staged.readable]]): a reader racing
-    * the writer's rename window reads the surviving copy and leaves the
-    * repair to the writer's own restart. */
+    * ([[graft.operators.StagedSwap.Staged.read]]): a reader racing the
+    * writer's rename window reads the surviving copy, retrying once if
+    * the swap moves it, and leaves the repair to the writer's own
+    * restart. */
   private def foldedState(spark: SparkSession, statePath: String,
       what: String): DataFrame =
-    spark.read.parquet(graft.operators.StagedSwap.state(spark, statePath)
-      .readable(s"no $what state under $statePath").toString)
+    graft.operators.StagedSwap.state(spark, statePath)
+      .read(s"no $what state under $statePath")(p => spark.read.parquet(p.toString))
 
   /** A `foreachBatch` writer under `checkpoint`: `run(batch, batchId)`
     * per micro-batch. */
@@ -303,12 +316,7 @@ object StreamingJobs {
           indexPath, autoCompactFilesPerDir)
         maybeCycle(spark, graft.operators.MinHashIndex.lifecycle,
           indexPath, batchId, maintenance)
-        // the OUTPUT corpus fragments at the same per-batch rate the
-        // index does (upsertIgnoreParquet appends one file set per
-        // batch) — same files-per-dir policy, same one-listing cost
-        if (outCompactFiles.exists(t =>
-            graft.sinks.Sinks.corpusDataFiles(spark, outPath) > t))
-          graft.sinks.Sinks.compactParquet(spark, outPath)
+        compactOutput(spark, outPath, outCompactFiles)
       } finally {
         fresh.unpersist()
         if (clearCachePerBatch) spark.catalog.clearCache()
@@ -349,7 +357,7 @@ object StreamingJobs {
           catch { case _: org.apache.spark.sql.AnalysisException => None }
         // cold-start detection keys on META, not on postings/docs:
         // save writes meta LAST and atomically (TextIndex.writeMeta's
-        // swap), so unreadable meta after recover() ⟺ no save ever
+        // swap), so a missing meta after recover() ⟺ no save ever
         // completed here — re-running save() cannot overwrite a live
         // corpus, and it SELF-HEALS save's own crash windows (postings
         // written, docs/meta not), which previously wedged the stream:
@@ -364,7 +372,7 @@ object StreamingJobs {
         // index as absent and let save() overwrite the whole corpus
         // with one micro-batch. The sidecar side stays for empty-doc
         // correctness (token-less docs never reach postings).
-        val indexed = if (!readable(spark, indexPath, "meta")) None
+        val indexed = if (!hasArtifact(spark, indexPath, "meta")) None
           else (readIds("docs", "doc_id"),
             readIds("postings", "doc_id")) match {
             case (Some(d), Some(p)) => Some(d.unionByName(p).distinct())
@@ -418,7 +426,7 @@ object StreamingJobs {
       // see a mid-swap missing artifact as an absent index
       graft.operators.TextIndex.recover(spark, indexPath)
       // cold-start keys on META (save's LAST write, atomic under
-      // TextIndex.writeMeta's swap): unreadable meta after recover() ⟺
+      // TextIndex.writeMeta's swap): a missing meta after recover() ⟺
       // no save ever completed here, so save() is always safe AND
       // self-heals save's own crash windows (postings written, docs/meta
       // not — previously the require below misdiagnosed that state as
@@ -427,11 +435,11 @@ object StreamingJobs {
       // (postings + meta, no docs) can't be repaired here — upsert's
       // delete half needs the sidecar for stats — so it fails loudly
       // instead of falling through to save().
-      if (!readable(spark, indexPath, "meta"))
+      if (!hasArtifact(spark, indexPath, "meta"))
         graft.operators.TextIndex.save(docs, idCol, textCol, indexPath)
       else {
-        val (hasDocs, hasPostings) = (readable(spark, indexPath, "docs"),
-          readable(spark, indexPath, "postings"))
+        val (hasDocs, hasPostings) = (hasArtifact(spark, indexPath, "docs"),
+          hasArtifact(spark, indexPath, "postings"))
         require(hasDocs || !hasPostings,
           s"$indexPath has postings but no docs sidecar (pre-sidecar " +
             "format or partial manual copy): refusing to overwrite — " +
@@ -467,12 +475,12 @@ object StreamingJobs {
       // writer-restart repair FIRST (the upsert's delete half swaps
       // sigs/bands; a crash there must not trigger a save overwrite)
       graft.operators.MinHashIndex.recover(spark, indexPath)
-      // cold-start keys on META (save's LAST write, atomic): unreadable
+      // cold-start keys on META (save's LAST write, atomic): a missing
       // meta ⟺ no save ever completed, so save() is safe and self-heals
       // a cold-start save that crashed after writing sigs — a sigs-keyed
       // probe wedged that state forever (upsert's first read of the
       // missing meta failed on every restart)
-      if (readable(spark, indexPath, "meta"))
+      if (hasArtifact(spark, indexPath, "meta"))
         graft.operators.MinHashIndex.upsert(docs, idCol, textCol, indexPath)
       else
         graft.operators.MinHashIndex.save(docs, idCol, textCol, indexPath)
@@ -620,9 +628,9 @@ object StreamingJobs {
           .write.parquet(dir)
       }
     }
-    def rows(spark: SparkSession): Long = spark.read.parquet(
+    def rows(spark: SparkSession): Long =
       graft.operators.StagedSwap.sibling(spark, path)
-        .readable(s"no corpus at $path").toString).count()
+        .read(s"no corpus at $path")(p => spark.read.parquet(p.toString).count())
     def idArtifact = "" // bare corpus dirs carry no snapshot store
     def idColName(spark: SparkSession): String = idColumn
   }
@@ -829,11 +837,7 @@ object StreamingJobs {
             qs, queryIdCol, termsCol, servePath, k, k1, b, maxDfFrac)
           graft.sinks.Sinks.upsertIgnoreParquet(
             topk, outPath, Seq("query_id", "rank"))
-          // the answers dir accretes one file set per batch, same as
-          // every keyed-append sink — same files-per-dir valve
-          if (outCompactFiles.exists(t =>
-              graft.sinks.Sinks.corpusDataFiles(spark, outPath) > t))
-            graft.sinks.Sinks.compactParquet(spark, outPath)
+          compactOutput(spark, outPath, outCompactFiles)
         }
       } finally {
         qs.unpersist()
@@ -891,9 +895,7 @@ object StreamingJobs {
             qs, queryIdCol, vecCol, spark, servePath, k, nProbe, idFilter)
           graft.sinks.Sinks.upsertIgnoreParquet(
             topk, outPath, Seq("query_id", "rank"))
-          if (outCompactFiles.exists(t =>
-              graft.sinks.Sinks.corpusDataFiles(spark, outPath) > t))
-            graft.sinks.Sinks.compactParquet(spark, outPath)
+          compactOutput(spark, outPath, outCompactFiles)
         }
       } finally {
         qs.unpersist()

@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.AsOfJoin
-import graft.plans.NativeAsOfJoin
 
 /** The native Catalyst as-of join (plans.AsOfJoinPlan / AsOfJoinExec) must
   * be bit-identical to the composed union+window form across the full
@@ -40,9 +39,9 @@ class AsOfJoinPlanSpec extends SparkSpec {
 
   private def assertSameAsComposed(left: DataFrame, right: DataFrame,
       payload: Seq[String]): Unit = {
-    val native = NativeAsOfJoin.asOf(left, right, "sym", "sym", "tts", "qts",
+    val native = AsOfJoin.asOf(left, right, "sym", "sym", "tts", "qts",
       "qid", payload)
-    val composed = AsOfJoin.asOf(left, right, "sym", "sym", "tts", "qts",
+    val composed = ComposedAsOfJoin.asOf(left, right, "sym", "sym", "tts", "qts",
       "qid", payload)
     assert(native.columns.toSeq === composed.columns.toSeq)
     assert(sortedRows(native) === sortedRows(composed))
@@ -51,7 +50,7 @@ class AsOfJoinPlanSpec extends SparkSpec {
   test("matrix: at-or-before pick, equal-ts tie-break, unmatched keys, left-outer totality") {
     assertSameAsComposed(trades, quotes, Seq("price", "source"))
     // and the absolute values, not just agreement with the composed form
-    val got = NativeAsOfJoin.asOf(trades, quotes, "sym", "sym", "tts", "qts",
+    val got = AsOfJoin.asOf(trades, quotes, "sym", "sym", "tts", "qts",
         "qid", Seq("price", "source"))
       .select($"tid", $"price", $"source")
       .as[(Long, Option[Double], Option[String])].collect()
@@ -69,7 +68,7 @@ class AsOfJoinPlanSpec extends SparkSpec {
       ("A", ts("2024-01-01 11:00:00"), 2L, None: Option[Double], Some("mm2")))
       .toDF("sym", "qts", "qid", "price", "source")
     val t = Seq(("A", ts("2024-01-01 11:30:00"), 100L)).toDF("sym", "tts", "tid")
-    val row = NativeAsOfJoin.asOf(t, q, "sym", "sym", "tts", "qts", "qid",
+    val row = AsOfJoin.asOf(t, q, "sym", "sym", "tts", "qts", "qid",
       Seq("price", "source")).head()
     assert(row.isNullAt(row.fieldIndex("price")))
     assert(row.getAs[String]("source") === "mm2")
@@ -86,7 +85,7 @@ class AsOfJoinPlanSpec extends SparkSpec {
       ("A", null.asInstanceOf[Timestamp], 101L), // null left ts -> null payload
       ("A", ts("2024-01-01 11:00:00"), 102L))
       .toDF("sym", "tts", "tid")
-    val got = NativeAsOfJoin.asOf(t, q, "sym", "sym", "tts", "qts", "qid",
+    val got = AsOfJoin.asOf(t, q, "sym", "sym", "tts", "qts", "qid",
         Seq("price"))
       .select($"tid", $"price").as[(Long, Option[Double])].collect().toMap
     assert(got(100L) === None, "null-ts quote must not leak as an early match")
@@ -104,7 +103,7 @@ class AsOfJoinPlanSpec extends SparkSpec {
       (null.asInstanceOf[String], ts("2024-01-01 11:00:00"), 100L),
       ("A", ts("2024-01-01 11:00:00"), 101L))
       .toDF("sym", "tts", "tid")
-    val got = NativeAsOfJoin.asOf(t, q, "sym", "sym", "tts", "qts", "qid",
+    val got = AsOfJoin.asOf(t, q, "sym", "sym", "tts", "qts", "qid",
         Seq("price"))
       .select($"tid", $"price").as[(Long, Option[Double])].collect().toMap
     assert(got(100L) === Some(42.0), "null left key matches null right key")
@@ -135,7 +134,7 @@ class AsOfJoinPlanSpec extends SparkSpec {
   }
 
   test("plan: AsOfJoinExec with one exchange + sort per side, left rows never widened") {
-    val df = NativeAsOfJoin.asOf(trades, quotes, "sym", "sym", "tts", "qts",
+    val df = AsOfJoin.asOf(trades, quotes, "sym", "sym", "tts", "qts",
       "qid", Seq("price", "source"))
     df.collect() // finalize any adaptive plan before inspecting
     def unwrap(p: org.apache.spark.sql.execution.SparkPlan): org.apache.spark.sql.execution.SparkPlan =
@@ -160,6 +159,48 @@ class AsOfJoinPlanSpec extends SparkSpec {
         .select($"event_id", $"user_id",
           date_format($"ts", "yyyy-MM-dd HH:mm:ss").as("ts_s"),
           $"o_orderkey", $"o_totalprice"))
-    assert(shape(NativeAsOfJoin.asOf) === shape(AsOfJoin.asOf))
+    assert(shape(AsOfJoin.asOf) === shape(ComposedAsOfJoin.asOf))
+  }
+
+  test("an int left key against a long right key compares in the common type") {
+    // equal keys of different types must land in one partition and compare
+    // equal, as the composed form's union widens them
+    val q = spark.range(400).select((col("id") % 50).as("sym"),
+      timestamp_seconds(lit(1704067200L) + col("id") * 60).as("qts"),
+      col("id").as("qid"), col("id").cast("double").as("price"))
+    val t = spark.range(300).select((col("id") % 50).cast("int").as("sym"),
+      timestamp_seconds(lit(1704067200L) + col("id") * 97).as("tts"),
+      col("id").as("tid"))
+    val native = AsOfJoin.asOf(t, q, "sym", "sym", "tts", "qts", "qid",
+      Seq("price"))
+    assert(native.schema("sym").dataType.typeName === "integer")
+    assert(native.filter($"price".isNotNull).count() === 300L)
+    assertSameAsComposed(t, q, Seq("price"))
+  }
+
+  test("a TIMESTAMP against a TIMESTAMP_NTZ reads the NTZ side in the session zone") {
+    // a private session, so the zone change reaches no other suite; the
+    // setting is still put back afterwards
+    val s = spark.newSession()
+    import s.implicits._
+    val zone = "spark.sql.session.timeZone"
+    val prior = s.conf.get(zone)
+    s.conf.set(zone, "America/Los_Angeles")
+    try {
+      // wall-clock quotes, hourly: 04:00 in Los Angeles is 12:00Z in January
+      val q = (0 until 24).map(h => ("A",
+          java.time.LocalDateTime.parse(f"2024-01-01T$h%02d:00:00"), h.toLong, h.toDouble))
+        .toDF("sym", "qts", "qid", "price")
+      val t = Seq(("A", java.time.Instant.parse("2024-01-01T12:30:00Z"), 100L),
+          ("A", java.time.Instant.parse("2024-01-01T20:15:00Z"), 101L))
+        .toDF("sym", "tts", "tid")
+      assert(q.schema("qts").dataType.typeName === "timestamp_ntz")
+      assert(t.schema("tts").dataType.typeName === "timestamp")
+      val got = AsOfJoin.asOf(t, q, "sym", "sym", "tts", "qts", "qid",
+          Seq("price"))
+        .select($"tid", $"price").as[(Long, Double)].collect().toMap
+      assert(got === Map(100L -> 4.0, 101L -> 12.0))
+      assertSameAsComposed(t, q, Seq("price"))
+    } finally s.conf.set(zone, prior)
   }
 }

@@ -233,7 +233,6 @@ class DedupSpec extends SparkSpec {
     // a null ELEMENT fails loudly instead of reading an undefined value
     // into a silently-garbage count (the check is static-type-gated, so
     // containsNull=false producers like shingle_hashes pay nothing)
-    graft.plans.GraftExtensions.register(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT sorted_intersect_count(array(1L, CAST(NULL AS BIGINT)), " +
         "array(1L, 2L))").collect()

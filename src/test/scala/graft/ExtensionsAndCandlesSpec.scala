@@ -5,7 +5,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
 import graft.streaming.StreamingCandles
 import graft.streaming.StreamingCandles.{Candle, Tick}
 
@@ -13,7 +12,6 @@ class ExtensionsAndCandlesSpec extends SparkSpec {
   import spark.implicits._
 
   test("SQL functions registered via GraftExtensions match the column API") {
-    GraftExtensions.register(spark)
     graft.core.Tables.embeddings(spark, sfDir).limit(20)
       .createOrReplaceTempView("emb_ext")
     val viaSql = spark.sql(
@@ -31,7 +29,6 @@ class ExtensionsAndCandlesSpec extends SparkSpec {
   }
 
   test("simhash64 and minhash_sig are SQL-callable") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT simhash64(array('a','b','c')) fp,
         |  size(minhash_sig(array('a b c', 'b c d'))) k,
@@ -41,7 +38,6 @@ class ExtensionsAndCandlesSpec extends SparkSpec {
   }
 
   test("char_counts is SQL-callable and matches the Column form") {
-    GraftExtensions.register(spark)
     val viaSql = spark.sql("SELECT char_counts('aabbbc') AS c").head().getSeq[Long](0)
     val viaCol = Seq(Tuple1("aabbbc")).toDF("t")
       .select(graft.functions.expressions.TextExpressions.char_counts($"t"))
@@ -50,7 +46,6 @@ class ExtensionsAndCandlesSpec extends SparkSpec {
   }
 
   test("nfc_normalize is SQL-callable and matches the Column form") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT nfc_normalize('Café') n1, nfc_normalize('Å') n2").head()
     assert(r.getString(0) === "Café")
@@ -58,7 +53,6 @@ class ExtensionsAndCandlesSpec extends SparkSpec {
   }
 
   test("luhn_valid, hamming64, and the URL trio are SQL-callable") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT luhn_valid('4111111111111111') ok,
         |  luhn_valid('4111111111111112') bad,
@@ -76,7 +70,6 @@ class ExtensionsAndCandlesSpec extends SparkSpec {
   }
 
   test("shingle_hashes is SQL-callable and matches the Column form") {
-    GraftExtensions.register(spark)
     val viaSql = spark.sql(
       "SELECT shingle_hashes(array('a','b','c','a','b'), 2) AS sh").head().getSeq[Long](0)
     val viaCol = Seq(Tuple1(Seq("a", "b", "c", "a", "b"))).toDF("t")
@@ -87,14 +80,12 @@ class ExtensionsAndCandlesSpec extends SparkSpec {
   }
 
   test("minhash_sig of an empty shingle set is null, not a colliding sentinel") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT minhash_sig(array_remove(array('x'), 'x')) AS sig").head()
     assert(r.isNullAt(0))
   }
 
   test("gram_hashes + multiplicity_stats are SQL-callable") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT multiplicity_stats(gram_hashes(array('a','b','a','b','a'), 2)) AS ms")
       .head().getSeq[Long](0)
@@ -103,7 +94,6 @@ class ExtensionsAndCandlesSpec extends SparkSpec {
   }
 
   test("lsh_buckets is SQL-callable and matches the Column form") {
-    GraftExtensions.register(spark)
     graft.core.Tables.embeddings(spark, sfDir).limit(5)
       .createOrReplaceTempView("emb_lsh")
     val viaSql = spark.sql(
@@ -118,7 +108,6 @@ class ExtensionsAndCandlesSpec extends SparkSpec {
   }
 
   test("non-constant n/k/seed arguments fail with a clear plan-time error") {
-    GraftExtensions.register(spark)
     val e1 = intercept[Exception] {
       spark.sql("SELECT shingle_hashes(array('a','b'), CAST(id AS INT)) FROM range(3)")
         .collect()

@@ -351,7 +351,7 @@ class MinHashIndexSpec extends SparkSpec {
     } finally q.stop()
     // without the knob, six appended batches would hold >= 6 file sets;
     // the policy bounds the dir while preserving every kept row
-    assert(graft.sinks.Sinks.corpusDataFiles(spark, out) <= 4L,
+    assert(graft.operators.IndexMaintenance.dataFiles(spark, out) <= 4L,
       "the output corpus must stay compacted under the policy")
     assert(spark.read.parquet(out).select($"doc_id").as[Long]
       .collect().toSet === (0 until 6).flatMap(b =>
@@ -457,7 +457,6 @@ class MinHashIndexSpec extends SparkSpec {
       assert(r.getDouble(0) === r.getDouble(1)) // exact, not approx
     }
     // and it is registered as a SQL function
-    graft.plans.GraftExtensions.register(spark)
     val viaSql = spark.sql("SELECT sig_agreement(array(1L, 2L, 3L, 4L), " +
       "array(1L, 9L, 3L, 8L))").head().getDouble(0)
     assert(viaSql === 0.5)

@@ -126,7 +126,7 @@ class ProbeServingSpec extends SparkSpec {
         q.processAllAvailable()
       }
     } finally q.stop()
-    assert(graft.sinks.Sinks.corpusDataFiles(spark, out) <= 4L,
+    assert(graft.operators.IndexMaintenance.dataFiles(spark, out) <= 4L,
       "the answers dir must stay compacted under the policy")
     val served = spark.read.parquet(out)
       .select($"query_id", $"doc_id", $"score", $"rank")

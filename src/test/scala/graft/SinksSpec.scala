@@ -49,7 +49,7 @@ class SinksSpec extends SparkSpec {
     Sinks.upsertIgnoreParquet(replay, dir, Seq("uuid"))
     assert(spark.read.parquet(dir).count() === 120)
     // and a subsequent compact sees the repaired corpus, not an empty one
-    Sinks.compactParquet(spark, dir, targetBytesPerFile = 1L << 20)
+    Sinks.compactParquet(spark, dir)
     assert(spark.read.parquet(dir).count() === 120)
   }
 

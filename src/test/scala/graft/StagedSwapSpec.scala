@@ -8,6 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.StagedSwap
+import graft.operators.StagedSwap.Staged
 
 /** Direct unit coverage of the crash-recovery state machine shared by
   * [[graft.operators.IvfIndex.compact]] and
@@ -57,7 +58,7 @@ class StagedSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (fs, live, tmp, old) = fixture()
     // first materialization crashed mid-write: task files exist, no marker
     writeDir(fs, tmp, "part-00000" -> "truncated prefix")
-    StagedSwap.recover(fs, live, tmp, old)
+    Staged(fs, live, tmp, old).recover()
     assert(!fs.exists(live), "a possibly-truncated tmp must never become live")
     assert(!fs.exists(tmp), "the incomplete write is cleared for the rerun")
   }
@@ -65,7 +66,7 @@ class StagedSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("lone tmp WITH _SUCCESS is a completed write and is promoted to live") {
     val (fs, live, tmp, old) = fixture()
     writeDir(fs, tmp, "part-00000" -> "full dataset", "_SUCCESS" -> "")
-    StagedSwap.recover(fs, live, tmp, old)
+    Staged(fs, live, tmp, old).recover()
     assert(fs.exists(live), "a committer-marked tmp is salvaged")
     assert(!fs.exists(tmp))
     assert(readFile(fs, new Path(live, "part-00000")) === "full dataset")
@@ -76,11 +77,11 @@ class StagedSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
     writeDir(fs, live, "part-00000" -> "current")
     writeDir(fs, tmp, "part-00000" -> "newer", "_SUCCESS" -> "")
     writeDir(fs, old, "part-00000" -> "older")
-    StagedSwap.recover(fs, live, tmp, old)
+    Staged(fs, live, tmp, old).recover()
     assert(readFile(fs, new Path(live, "part-00000")) === "current",
       "an existing live is never replaced by recover; swap() owns that transition")
     // swap() then clears the leftovers before writing
-    StagedSwap.swap(fs, live, tmp, old)(dir => writeDir(fs, new Path(dir), "part-00000" -> "v2"))
+    Staged(fs, live, tmp, old).swap(dir => writeDir(fs, new Path(dir), "part-00000" -> "v2"))
     assert(readFile(fs, new Path(live, "part-00000")) === "v2")
     assert(!fs.exists(tmp) && !fs.exists(old))
   }
@@ -89,7 +90,7 @@ class StagedSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (fs, live, tmp, old) = fixture()
     writeDir(fs, tmp, "part-00000" -> "truncated prefix")
     var wrote = false
-    StagedSwap.swap(fs, live, tmp, old) { dir =>
+    Staged(fs, live, tmp, old).swap { dir =>
       wrote = true
       writeDir(fs, new Path(dir), "part-00000" -> "recomputed", "_SUCCESS" -> "")
     }
@@ -101,7 +102,7 @@ class StagedSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (fs, live, tmp, old) = fixture()
     writeDir(fs, tmp, "part-00000" -> "new copy", "_SUCCESS" -> "")
     writeDir(fs, old, "part-00000" -> "original")
-    StagedSwap.recover(fs, live, tmp, old)
+    Staged(fs, live, tmp, old).recover()
     assert(readFile(fs, new Path(live, "part-00000")) === "new copy",
       "tmp is complete and newer; it wins over old")
     assert(!fs.exists(tmp) && !fs.exists(old))
@@ -111,7 +112,7 @@ class StagedSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (fs, live, tmp, old) = fixture()
     writeDir(fs, tmp, "part-00000" -> "no success marker")
     writeDir(fs, old, "part-00000" -> "original")
-    StagedSwap.recover(fs, live, tmp, old)
+    Staged(fs, live, tmp, old).recover()
     assert(readFile(fs, new Path(live, "part-00000")) === "original",
       "a _SUCCESS-less tmp is never promoted, even beside old")
     assert(!fs.exists(tmp) && !fs.exists(old))
@@ -120,7 +121,7 @@ class StagedSwapSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("old-only crash state restores old as live") {
     val (fs, live, tmp, old) = fixture()
     writeDir(fs, old, "part-00000" -> "original")
-    StagedSwap.recover(fs, live, tmp, old)
+    Staged(fs, live, tmp, old).recover()
     assert(readFile(fs, new Path(live, "part-00000")) === "original")
     assert(!fs.exists(old))
   }
@@ -196,5 +197,44 @@ class StagedSwapRecoverSubSpec extends SparkSpec {
     assert(fs.exists(new Path(s"$root/sub_compact")))
     assert(fs.exists(new Path(s"$root/sub_del")))
     fs.delete(new Path(root), true)
+  }
+}
+
+/** [[StagedSwap.Staged.read]]: a reader whose load lands inside a live
+  * writer's rename window — after rename(live→old), before
+  * rename(tmp→live) — gets the pre- or post-swap rows, never an
+  * exception. */
+class StagedSwapReadSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def corpus(): StagedSwap.Staged = {
+    val root = Files.createTempDirectory("staged_read").toString
+    StagedSwap.sibling(spark, s"$root/corpus")
+  }
+
+  test("a read racing the swap's first rename retries once onto a complete copy") {
+    val st = corpus()
+    Seq(1L, 2L, 3L).toDF("id").write.parquet(st.live.toString)
+    // the writer's complete new copy, committed before its renames start
+    Seq(4L, 5L).toDF("id").write.parquet(st.tmp.toString)
+    var loads = 0
+    val got = st.read("no corpus") { p =>
+      loads += 1
+      // the writer's rename(live→old) lands between resolution and read
+      if (loads == 1) assert(st.fs.rename(st.live, st.old))
+      spark.read.parquet(p.toString).as[Long].collect().toSet
+    }
+    assert(got === Set(1L, 2L, 3L) || got === Set(4L, 5L), got)
+    assert(loads === 2, "the vanished copy is resolved again exactly once")
+    st.fs.delete(st.live.getParent, true)
+  }
+
+  test("a copy that is genuinely absent still fails with the caller's message") {
+    val st = corpus()
+    val e = intercept[java.io.FileNotFoundException] {
+      st.read("no corpus here")(p => spark.read.parquet(p.toString).count())
+    }
+    assert(e.getMessage === "no corpus here")
+    st.fs.delete(st.live.getParent, true)
   }
 }

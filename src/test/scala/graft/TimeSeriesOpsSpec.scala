@@ -3,10 +3,9 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.core.Tables
-import graft.operators.{TimeSeriesOps, TopK}
+import graft.operators.TimeSeriesOps
 
 class TimeSeriesOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -74,20 +73,6 @@ class TimeSeriesOpsSpec extends SparkSpec {
       .as[(String, Timestamp)].collect().toSet
     assert(got === Set(("m1", ts("2024-01-07 00:00:00")),
       ("m3", ts("2024-01-01 00:00:00"))))
-  }
-
-  test("heap top-k aggregator equals the window-function form") {
-    val events = Tables.events(spark, sfDir)
-    val triples = events.select($"user_id", $"event_id", $"value")
-      .as[(Long, Long, Double)]
-    val viaAgg = TopK.topKPerGroup(triples, k = 3).collect().toSet
-    val w = Window.partitionBy($"user_id").orderBy($"value".desc, $"event_id".asc)
-    val viaWindow = events
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= 3)
-      .select($"user_id", $"rank", $"event_id", $"value")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(viaAgg === viaWindow)
   }
 
   test("rollingAnomalies: a planted spike flags; steady traffic does not") {
@@ -175,13 +160,5 @@ class TimeSeriesOpsSpec extends SparkSpec {
       .select($"rn", $"vu", $"forecast").as[(Long, Long, Long)].collect().toSeq)
     assert(hwErr < holtErr / 2,
       s"seasonal forecasts must beat trend-only by 2x on a sawtooth: $hwErr vs $holtErr")
-  }
-
-  test("top-k aggregator handles groups smaller than k and score ties") {
-    val ds = Seq((1L, 10L, 5.0), (1L, 11L, 5.0), (2L, 20L, 1.0))
-      .toDS()
-    val got = TopK.topKPerGroup(ds, k = 3).collect().toSet
-    // ties broken by smaller id first
-    assert(got === Set((1L, 1L, 10L, 5.0), (1L, 2L, 11L, 5.0), (2L, 1L, 20L, 1.0)))
   }
 }
