@@ -35,6 +35,7 @@ class IndexAuditSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$path/docs")
     val f1 = failing(IndexAudit.auditText(spark, path))
     assert(f1.contains("orphan_postings") && f1.contains("n_docs"), f1.toString)
+    assert(f1 === Set("n_docs", "sum_dl", "orphan_postings"), f1.toString)
     side.unpersist()
     // heal, then corruption 2: a posting physically in the WRONG bucket
     // partition (invisible to every pruned probe)
@@ -58,6 +59,36 @@ class IndexAuditSpec extends SparkSpec {
     spark.catalog.refreshByPath(path)
     val f = failing(IndexAudit.auditText(spark, path))
     assert(f === Set("dl_mismatch"), f.toString)
+  }
+
+  test("text: a tokened doc whose postings vanished is caught") {
+    val path = Files.createTempDirectory("fsck_miss").toString
+    TextIndex.save(docs, "doc_id", "text", path)
+    // plant: doc 1 keeps its sidecar row but loses every posting (a
+    // partial rewrite that dropped its rows) -> it can never be retrieved
+    val postings = spark.read.parquet(s"$path/postings").cache()
+    postings.count()
+    postings.filter($"doc_id" =!= 1L)
+      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/postings")
+    postings.unpersist()
+    spark.catalog.refreshByPath(path)
+    val f = failing(IndexAudit.auditText(spark, path))
+    assert(f === Set("missing_postings"), f.toString)
+  }
+
+  test("minhash: band rows for an id absent from sigs are caught") {
+    val path = Files.createTempDirectory("fsck_orph").toString
+    MinHashIndex.save(docs, "doc_id", "text", path)
+    // plant: a full band set for id 9999, which has no signature (a
+    // delete that rewrote sigs but missed bands)
+    val bands = spark.read.parquet(s"$path/bands").filter($"id" === 1L)
+      .withColumn("id", lit(9999L)).cache()
+    bands.count()
+    bands.write.mode("append").partitionBy("band_idx").parquet(s"$path/bands")
+    bands.unpersist()
+    spark.catalog.refreshByPath(path)
+    val f = failing(IndexAudit.auditMinHash(spark, path))
+    assert(f === Set("orphan_band_ids"), f.toString)
   }
 
   test("minhash: healthy passes; a sig row with no bands and a partial " +
@@ -136,5 +167,14 @@ class IndexAuditSpec extends SparkSpec {
     val f = failing(IndexAudit.auditIvf(spark, path))
     assert(f === Set("vector_rows", "unknown_list_ids"), f.toString)
     one.unpersist()
+    // heal, then plant an EMPTY centroids artifact with the same schema:
+    // no list is probeable, and every list id is unknown
+    IvfIndex.save(corpus, "vec_id", "embedding", model, path)
+    val schema = spark.read.parquet(s"$path/centroids").schema
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      schema).write.mode("overwrite").parquet(s"$path/centroids")
+    spark.catalog.refreshByPath(path)
+    val f2 = failing(IndexAudit.auditIvf(spark, path))
+    assert(f2 === Set("centroid_rows", "unknown_list_ids"), f2.toString)
   }
 }
