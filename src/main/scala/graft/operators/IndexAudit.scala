@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.Concurrency
+import IndexLifecycle.{Param, Params}
 
 /** fsck for the persisted index families — cross-ARTIFACT consistency
   * the per-family `stats` dashboards don't check (stats reads each
@@ -10,8 +13,10 @@ import org.apache.spark.sql.functions._
   * surgery, or object-store mishaps, and trusts the index only when
   * every row passes.
   *
-  * Output contract (all four auditors): one (family, check, value,
-  * pass) row per invariant, exact longs — `value` is the observed
+  * Each family declares its invariants as [[Check]]s on its
+  * [[IndexLifecycle.Spec]] and [[run]] evaluates them for every family.
+  * Output contract: one (family, check, value, pass) row per check,
+  * in declaration order, exact longs — `value` is the observed
   * count (a corpus-anchored total for count checks, a VIOLATION count
   * for membership/placement checks, so healthy indexes show the corpus
   * number or 0) and `pass` the invariant verdict. On a healthy index
@@ -20,8 +25,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: id-column joins and aggregates only — no text, no
   * vectors, no signatures move; the widest check is one corpus-scale
-  * anti-join on doc ids. Placement checks (bucket = hash(term),
-  * code width) are row-local codegen predicates under a count.
+  * join on doc ids. Placement checks (bucket = hash(term), code
+  * width) are row-local codegen predicates under a count. Every
+  * artifact is read at most twice: the checks that aggregate its rows
+  * fuse into one job, and the join checks between two artifacts fuse
+  * into one full outer join of their distinct frames, each side
+  * computed once inside that query (text reads postings twice, not
+  * once per check). The jobs run concurrently (§2.6).
   *
   * What each family checks and why it can break:
   *  - Text: meta's (n_docs, sum_dl) vs the docs sidecar (a crash
@@ -46,131 +56,126 @@ import org.apache.spark.sql.functions._
   *  - IVF: duplicate vector ids; list_id domain vs centroids. */
 object IndexAudit {
 
-  private def row(spark: SparkSession, family: String, check: String,
-      value: Long, pass: Boolean): DataFrame = {
-    import spark.implicits._
-    Seq((family, check, value, pass)).toDF("family", "check", "value", "pass")
-  }
+  /** One declared fsck invariant; `name` is its row's `check`. */
+  sealed trait Check { def name: String }
 
-  private def unionAll(rows: Seq[DataFrame]): DataFrame =
-    rows.reduce(_ unionAll _)
+  /** A check aggregating the rows of one artifact `sub`: all of an
+    * artifact's are one job. */
+  sealed trait OnRows extends Check { def sub: String }
+
+  /** When a [[Stat]] passes. */
+  sealed trait Expect
+  /** Always: a corpus figure reported for the record. */
+  case object Reported extends Expect
+  /** When it is above zero. */
+  case object Positive extends Expect
+  /** When it equals the count of distinct ids in `sub` (an id artifact). */
+  case object DistinctIds extends Expect
+  /** When it equals the family parameter `param`. */
+  final case class Equals(param: Param) extends Expect
+
+  /** An aggregate `value` over the rows of artifact `sub`. */
+  final case class Stat(name: String, sub: String, value: Column,
+      expect: Expect) extends OnRows
+  /** The count of rows of `sub` where `bad`, given `param`'s value,
+    * holds; passes at 0. */
+  final case class Violations(name: String, sub: String, param: Param,
+      bad: Column => Column) extends OnRows
+  /** The count of `id`s of `sub` whose distinct `over` values do not
+    * number `param`; passes at 0. */
+  final case class Fanout(name: String, sub: String, id: String,
+      over: String, param: Param) extends Check
+
+  /** Column `column` of artifact `sub`. */
+  final case class Key(sub: String, column: String)
+  /** A check over the join of two artifacts on `a` = `b`: all of one
+    * pair's are one full outer join of their distinct frames. */
+  sealed trait OnJoin extends Check { def a: Key; def b: Key }
+  /** The count of distinct `a` values (on the rows where `where` holds)
+    * that `b` lacks; passes at 0. */
+  final case class Subset(name: String, a: Key, b: Key,
+      where: Option[Column] = None) extends OnJoin
+  /** The count of pairings of a distinct (key, `column`) row of `a` with
+    * one of `b` under the same key but another value — a key on one side
+    * only is a [[Subset]] finding, never counted here; passes at 0. */
+  final case class Agrees(name: String, a: Key, b: Key, column: String)
+      extends OnJoin
 
   /** Audit a [[TextIndex]] at `path`. */
-  def auditText(spark: SparkSession, path: String): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").collect().head
-    val (n, sdl, nBuckets) =
-      (meta.getLong(0), meta.getLong(1), meta.getInt(2))
-    val docs = spark.read.parquet(s"$path/docs")
-    val postings = spark.read.parquet(s"$path/postings")
-    // two passes over postings, not four (r16): the placement scan needs
-    // (bucket, term); every id-level check shares ONE cached per-doc
-    // distinct frame. The independent counts run as concurrent jobs
-    // (§2.6, r17): wave 1 overlaps the sidecar aggregate, the placement
-    // scan, and the shared frame's materialization; wave 2 overlaps the
-    // three id-level checks over the materialized cache.
-    val pd = postings.select(col("doc_id"), col("dl").as("__pdl"))
-      .distinct().cache()
-    val (orphans, missing, dlMismatch, nSide, sdlSide, misplaced) = try {
-      val wave1 = graft.core.Concurrency.runAll(Seq[() => Any](
-        () => docs.agg(count(lit(1)),
-          coalesce(sum(col("dl")), lit(0L))).collect().head,
-        () => postings.filter(col("bucket") =!=
-          pmod(xxhash64(col("term")), lit(nBuckets.toLong))).count(),
-        () => pd.count()))
-      val side = wave1(0).asInstanceOf[org.apache.spark.sql.Row]
-      val mis = wave1(1).asInstanceOf[Long]
-      val pids = pd.select(col("doc_id")).distinct()
-      val wave2 = graft.core.Concurrency.runAll(Seq(
-        () => pids
-          .join(docs.select(col("doc_id")), Seq("doc_id"), "left_anti").count(),
-        () => docs.filter(col("dl") > 0).select(col("doc_id"))
-          .join(pids, Seq("doc_id"), "left_anti").count(),
-        () => pd
-          .join(docs.select(col("doc_id"), col("dl")), Seq("doc_id"))
-          .filter(col("__pdl") =!= col("dl")).count()))
-      (wave2(0), wave2(1), wave2(2), side.getLong(0), side.getLong(1), mis)
-    } finally pd.unpersist()
-    unionAll(Seq(
-      row(spark, "text", "n_docs", nSide, nSide == n),
-      row(spark, "text", "sum_dl", sdlSide, sdlSide == sdl),
-      row(spark, "text", "orphan_postings", orphans, orphans == 0L),
-      row(spark, "text", "missing_postings", missing, missing == 0L),
-      row(spark, "text", "bucket_misplacement", misplaced, misplaced == 0L),
-      row(spark, "text", "dl_mismatch", dlMismatch, dlMismatch == 0L)))
-  }
+  def auditText(spark: SparkSession, path: String): DataFrame =
+    TextIndex.lifecycle.audit(spark, path)
 
-  /** Audit a [[MinHashIndex]] at `path`. */
-  def auditMinHash(spark: SparkSession, path: String): DataFrame = {
-    val bands = spark.read.parquet(s"$path/meta").head().getAs[Int]("bands")
-    val sigs = spark.read.parquet(s"$path/sigs").select(col("id"))
-    val banded = spark.read.parquet(s"$path/bands")
-    // one cached distinct-id frame serves both membership directions
-    // (r16; was two more full scans of the band layout); the independent
-    // counts run as concurrent jobs in two waves (§2.6, r17)
-    val bandIds = banded.select(col("id")).distinct().cache()
-    val (nSigs, fanout, orphanBands, missingBands) = try {
-      val wave1 = graft.core.Concurrency.runAll(Seq(
-        () => sigs.count(),
-        () => banded.groupBy(col("id"))
-          .agg(countDistinct(col("band_idx")).as("__b"))
-          .filter(col("__b") =!= bands.toLong).count(),
-        () => bandIds.count()))
-      val wave2 = graft.core.Concurrency.runAll(Seq(
-        () => bandIds.join(sigs.distinct(), Seq("id"), "left_anti").count(),
-        () => sigs.distinct().join(bandIds, Seq("id"), "left_anti").count()))
-      (wave1(0), wave1(1), wave2(0), wave2(1))
-    } finally bandIds.unpersist()
-    unionAll(Seq(
-      row(spark, "minhash", "sig_rows", nSigs, true),
-      row(spark, "minhash", "band_fanout_violations", fanout, fanout == 0L),
-      row(spark, "minhash", "orphan_band_ids", orphanBands, orphanBands == 0L),
-      row(spark, "minhash", "missing_band_ids", missingBands,
-        missingBands == 0L)))
-  }
-
-  /** Audit a [[ProductQuantizer]] index at `dir`. */
-  def auditPq(spark: SparkSession, dir: String): DataFrame = {
-    val m = spark.read.parquet(s"$dir/pq_model")
-      .select(col("subspace")).distinct().count()
-    val codes = spark.read.parquet(s"$dir/codes")
-    val idCol = ProductQuantizer.lifecycle.membership.idColIn(codes.schema)
-    // independent counts as concurrent jobs (§2.6, r17)
-    val pqWave = graft.core.Concurrency.runAll(Seq[() => Any](
-      () => codes.agg(count(lit(1)), countDistinct(col(idCol))).collect().head,
-      () => codes.filter(size(col("codes")) =!= m.toInt).count(),
-      () => codes.select(col("list_id")).distinct()
-        .join(spark.read.parquet(s"$dir/coarse")
-          .select(col("cluster_id").as("list_id")).distinct(),
-          Seq("list_id"), "left_anti").count()))
-    val c = pqWave(0).asInstanceOf[org.apache.spark.sql.Row]
-    val widthBad = pqWave(1).asInstanceOf[Long]
-    val unknownList = pqWave(2).asInstanceOf[Long]
-    unionAll(Seq(
-      row(spark, "pq", "code_rows", c.getLong(0),
-        c.getLong(0) == c.getLong(1)),
-      row(spark, "pq", "code_width_violations", widthBad, widthBad == 0L),
-      row(spark, "pq", "unknown_list_ids", unknownList, unknownList == 0L)))
-  }
-
-  /** Audit an [[IvfIndex]] at `dir`. */
-  def auditIvf(spark: SparkSession, dir: String): DataFrame = {
-    val lists = spark.read.parquet(s"$dir/lists")
-    val idCol = IvfIndex.lifecycle.membership.idColIn(lists.schema)
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    // independent counts as concurrent jobs (§2.6, r17)
-    val ivfWave = graft.core.Concurrency.runAll(Seq[() => Any](
-      () => lists.agg(count(lit(1)), countDistinct(col(idCol))).collect().head,
-      () => centroids.count(),
-      () => lists.select(col("list_id")).distinct()
-        .join(centroids.select(col("list_id")).distinct(),
-          Seq("list_id"), "left_anti").count()))
-    val c = ivfWave(0).asInstanceOf[org.apache.spark.sql.Row]
-    val nCentroidRows = ivfWave(1).asInstanceOf[Long]
-    val unknownList = ivfWave(2).asInstanceOf[Long]
-    unionAll(Seq(
-      row(spark, "ivf", "vector_rows", c.getLong(0),
-        c.getLong(0) == c.getLong(1)),
-      row(spark, "ivf", "centroid_rows", nCentroidRows, nCentroidRows > 0L),
-      row(spark, "ivf", "unknown_list_ids", unknownList, unknownList == 0L)))
+  /** Evaluate `spec`'s checks on the index at `path`, as one wave of
+    * concurrent jobs: an aggregate per artifact, a job per fan-out, and a
+    * join per artifact pair. */
+  private[operators] def run(spark: SparkSession, path: String,
+      spec: IndexLifecycle.Spec): DataFrame = {
+    import spark.implicits._
+    val params = new Params(spark, path)
+    // each artifact is read once, on this thread: a read infers the
+    // schema with a job of its own
+    val artifacts = scala.collection.mutable.Map.empty[String, DataFrame]
+    def read(sub: String) =
+      artifacts.getOrElseUpdate(sub, spark.read.parquet(s"$path/$sub"))
+    def passAtZero(name: String, v: Long) = name -> (v, v == 0L)
+    val aggregates = spec.checks.collect { case c: OnRows => c }
+      .groupBy(_.sub).toSeq.map { case (sub, cs) =>
+        val df = read(sub)
+        def id =
+          col(spec.idArtifacts.find(_.sub == sub).get.idColIn(df.schema))
+        () => {
+          val vp = cs.flatMap {
+            case Stat(_, _, v, e) => Seq(v, e match {
+              case Reported => lit(true)
+              case Positive => v > 0L
+              case DistinctIds => v === countDistinct(id)
+              case Equals(p) => v === params(p)
+            })
+            case Violations(_, _, p, bad) =>
+              val v = count(when(bad(lit(params(p))), 1))
+              Seq(v, v === 0L)
+          }
+          val r = df.agg(vp.head, vp.tail: _*).head()
+          cs.indices.map(i =>
+            cs(i).name -> (r.getLong(2 * i), r.getBoolean(2 * i + 1)))
+        }
+      }
+    val fanouts = spec.checks.collect { case Fanout(n, sub, id, over, p) =>
+      val df = read(sub)
+      () => Seq(passAtZero(n, df.groupBy(col(id))
+        .agg(countDistinct(col(over)).as("__n"))
+        .filter(col("__n") =!= params(p)).count()))
+    }
+    // each side's distinct frame holds the key, the agreed columns and the
+    // filters of the pair's checks; the join is reduced per key (a key
+    // counts once), then summed
+    val joins = spec.checks.collect { case c: OnJoin => c }
+      .groupBy(c => Seq(c.a, c.b).sortBy(k => (k.sub, k.column))).toSeq.map {
+        case (Seq(l, r), cs) =>
+          def frame(k: Key, side: String) = read(k.sub).select(
+            col(k.column).as("__k") +: cs.flatMap {
+              case Subset(n, a, _, w) if a == k => w.map(_.as(s"__w_$n"))
+              case Agrees(_, _, _, c) => Some(col(c).as(s"${side}_$c"))
+              case _ => None
+            }.distinct: _*).distinct().withColumn(s"__in$side", lit(true))
+          val (fl, fr) = (frame(l, "L"), frame(r, "R"))
+          val perKey = cs.map {
+            case Subset(n, a, _, w) =>
+              val absent = col(if (a == l) "__inR" else "__inL").isNull
+              max(when(w.fold(absent)(_ => absent && col(s"__w_$n")), 1)).as(n)
+            case Agrees(n, _, _, c) =>
+              count(when(col(s"L_$c") =!= col(s"R_$c"), 1)).as(n)
+          }
+          () => {
+            val t = fl.join(fr, Seq("__k"), "full_outer").groupBy(col("__k"))
+              .agg(perKey.head, perKey.tail: _*)
+              .agg(sum(cs.head.name), cs.tail.map(c => sum(c.name)): _*).head()
+            cs.indices.map(i =>
+              passAtZero(cs(i).name, if (t.isNullAt(i)) 0L else t.getLong(i)))
+          }
+      }
+    val got = Concurrency.runAll(aggregates ++ fanouts ++ joins).flatten.toMap
+    spec.checks.map { c => val (v, ok) = got(c.name); (spec.name, c.name, v, ok) }
+      .toDF("family", "check", "value", "pass")
   }
 }

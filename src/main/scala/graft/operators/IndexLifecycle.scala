@@ -33,13 +33,24 @@ object IndexLifecycle {
         .getOrElse(throw new IllegalStateException(s"no id column in $sub/")))
   }
 
-  /** Where a family's partition count lives. */
-  sealed trait Partitions
-  /** An int column of the one-row `meta/` artifact. */
-  final case class MetaColumn(name: String) extends Partitions
+  /** Where one of a family's parameters lives: its partition count, or
+    * a figure an fsck check compares against. */
+  sealed trait Param
+  /** A numeric column of the one-row `meta/` artifact. */
+  final case class MetaColumn(name: String) extends Param
   /** The distinct values of `column` in the parameter artifact `sub`. */
-  final case class DistinctCount(sub: String, column: String)
-      extends Partitions
+  final case class DistinctCount(sub: String, column: String) extends Param
+
+  /** The [[Param]]s of the index at `path`; `meta/` is read once for
+    * all its columns. */
+  private[operators] final class Params(spark: SparkSession, path: String) {
+    private lazy val meta = spark.read.parquet(s"$path/meta").head()
+    def apply(p: Param): Long = p match {
+      case MetaColumn(c) => meta.getAs[Number](c).longValue
+      case DistinctCount(sub, c) =>
+        spark.read.parquet(s"$path/$sub").select(col(c)).distinct().count()
+    }
+  }
 
   /** A delete's emptying guard: given the cached delete ids, reject a
     * delete that would leave an unreadable index, and return the step to
@@ -50,21 +61,27 @@ object IndexLifecycle {
     *
     * @param idArtifacts the id-bearing artifacts every delete rewrites;
     *   the FIRST is the membership artifact that the default emptying
-    *   guard, [[rows]] and snapshot erasure read.
+    *   guard, [[rows]] and snapshot erasure
+    *   ([[IndexSnapshots.exposure]]) read.
     * @param flatParams flat parameter artifacts [[compact]] resizes.
     * @param recovered every subdir any mutation swaps.
-    * @param audit the family's [[IndexAudit]] fsck.
+    * @param checks the family's fsck invariants, run by [[audit]].
     * @param guard a family-specific emptying guard (None: the membership
     *   artifact must keep a row). */
   final case class Spec(name: String, idArtifacts: Seq[IdArtifact],
-      partitions: Partitions, flatParams: Seq[String],
-      recovered: Seq[String], audit: (SparkSession, String) => DataFrame,
+      partitions: Param, flatParams: Seq[String],
+      recovered: Seq[String], checks: Seq[IndexAudit.Check],
       guard: Option[Guard] = None) {
     require(idArtifacts.nonEmpty, s"$name: no id artifact")
     require((idArtifacts.map(_.sub) ++ flatParams).forall(recovered.contains),
       s"$name: every swapped subdir must be recovered")
 
     def membership: IdArtifact = idArtifacts.head
+
+    /** fsck: one (family, check, value, pass) row per declared check
+      * ([[IndexAudit.run]]). */
+    def audit(spark: SparkSession, path: String): DataFrame =
+      IndexAudit.run(spark, path, this)
 
     /** Writer-restart repair of every swapped subdir, run BEFORE reading
       * or mutating ([[StagedSwap.recoverSub]]): every mutation calls it,
@@ -142,7 +159,7 @@ object IndexLifecycle {
       * another not is a valid state). */
     def compact(spark: SparkSession, path: String): Unit = {
       recover(spark, path)
-      val n = partitionCount(spark, path)
+      val n = new Params(spark, path)(partitions).toInt
       val partitioned = idArtifacts.flatMap(a => a.key.map(k => () =>
         StagedSwap.subdir(spark, path, a.sub, "_compact").swap(
           aligned(spark.read.parquet(s"$path/${a.sub}"), n, k).parquet(_))))
@@ -168,22 +185,9 @@ object IndexLifecycle {
       }
     }
 
-    private def partitionCount(spark: SparkSession, path: String): Int =
-      partitions match {
-        case MetaColumn(c) =>
-          spark.read.parquet(s"$path/meta").head().getAs[Int](c)
-        case DistinctCount(sub, c) =>
-          spark.read.parquet(s"$path/$sub").select(col(c)).distinct()
-            .count().toInt
-      }
-
     /** Rows in the membership artifact. */
     def rows(spark: SparkSession, path: String): Long =
       spark.read.parquet(s"$path/${membership.sub}").count()
-
-    /** The membership artifact's id column at `path`. */
-    def idColName(spark: SparkSession, path: String): String =
-      membership.idColIn(spark.read.parquet(s"$path/${membership.sub}").schema)
   }
 
   /** The one rule for overlapping a family's writes into its live

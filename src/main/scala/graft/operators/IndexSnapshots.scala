@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Named snapshots + rollback for the persisted indexes — the "yesterday's
@@ -85,16 +85,30 @@ object IndexSnapshots {
     * reachable — a quiescence check that rejected restore's own crash
     * leftovers would deadlock the recovery it prescribes. */
   private def requireQuiescent(f: FileSystem, root: Path,
-      ownSuffixes: Set[String] = Set.empty): Unit = {
+      ownSuffixes: Set[String] = Set.empty,
+      remedy: String = "rerun the interrupted mutation (its recover " +
+        "path repairs the index) before snapshot/restore"): Unit = {
     val leftovers = f.listStatus(root).toSeq.filter(_.isDirectory)
       .map(_.getPath.getName)
       .filter(n => stagingSuffixes.exists(n.endsWith))
       .filterNot(n => ownSuffixes.exists(n.endsWith))
-    require(leftovers.isEmpty,
-      s"index at $root has crashed-mutation staging leftovers " +
-        s"$leftovers — rerun the interrupted mutation (its recover " +
-        "path repairs the index) before snapshot/restore")
+    require(leftovers.isEmpty, s"index at $root has crashed-mutation " +
+      s"staging leftovers $leftovers — $remedy")
   }
+
+  /** The directories under `snapRoot` (none when it is absent). */
+  private def snapDirs(f: FileSystem, snapRoot: Path): Seq[FileStatus] =
+    if (!f.exists(snapRoot)) Seq.empty
+    else f.listStatus(snapRoot).toSeq.filter(_.isDirectory)
+
+  /** The visible snapshot tags: the directories under `snapRoot` that
+    * are neither hidden (staging, views, retired tags) nor the object
+    * store. */
+  private def tagDirs(f: FileSystem, snapRoot: Path): Seq[FileStatus] =
+    snapDirs(f, snapRoot).filterNot { st =>
+      val n = st.getPath.getName
+      n.startsWith(".") || n == objectsDirName
+    }
 
   /** Recursive dir copy that writes the `_SUCCESS` marker LAST:
     * StagedSwap.recover (and `readable`) trust a marked tmp as a
@@ -108,7 +122,7 @@ object IndexSnapshots {
     f.mkdirs(dst)
     val (markers, data) = f.listStatus(src).toSeq
       .partition(_.getPath.getName == "_SUCCESS")
-    def copyOne(st: org.apache.hadoop.fs.FileStatus): Unit =
+    def copyOne(st: FileStatus): Unit =
       if (!FileUtil.copy(f, st.getPath, f, new Path(dst, st.getPath.getName),
           false, true, conf))
         throw new java.io.IOException(
@@ -269,11 +283,9 @@ object IndexSnapshots {
     val snapRoot = new Path(new Path(path), snapDirName)
     val objRoot = new Path(snapRoot, objectsDirName)
     if (!f.exists(objRoot)) return Seq.empty
-    val live: Set[String] = f.listStatus(snapRoot).toSeq
-      .filter(_.isDirectory).map(_.getPath)
-      .filterNot(p => p.getName.startsWith(".") || p.getName == objectsDirName)
+    val live: Set[String] = tagDirs(f, snapRoot)
       .flatMap { tagDir =>
-        f.listStatus(tagDir).toSeq
+        f.listStatus(tagDir.getPath).toSeq
           .filter(st => !st.isDirectory && st.getPath.getName.endsWith(refSuffix))
           .map(st => readRef(f, st.getPath))
       }.toSet
@@ -400,9 +412,7 @@ object IndexSnapshots {
   }
 
   private def viewDirs(f: FileSystem, snapRoot: Path) =
-    if (!f.exists(snapRoot)) Seq.empty
-    else f.listStatus(snapRoot).toSeq.filter(st =>
-      st.isDirectory && st.getPath.getName.startsWith(".view_"))
+    snapDirs(f, snapRoot).filter(_.getPath.getName.startsWith(".view_"))
 
   /** The materialized time-travel views as a dashboard frame: one (tag,
     * n_files, bytes) row per `.view_*` cache currently held on disk —
@@ -445,16 +455,10 @@ object IndexSnapshots {
     import spark.implicits._
     val f = fs(spark, path)
     val snapRoot = new Path(new Path(path), snapDirName)
-    val rows: Seq[(String, Long, Long)] =
-      if (!f.exists(snapRoot)) Seq.empty
-      else f.listStatus(snapRoot).toSeq
-        .filter(_.isDirectory).map(_.getPath)
-        .filterNot(p =>
-          p.getName.startsWith(".") || p.getName == objectsDirName)
-        .map { p =>
-          val s = f.getContentSummary(p)
-          (p.getName, s.getFileCount, s.getLength)
-        }.sortBy(_._1)
+    val rows: Seq[(String, Long, Long)] = tagDirs(f, snapRoot).map { st =>
+      val s = f.getContentSummary(st.getPath)
+      (st.getPath.getName, s.getFileCount, s.getLength)
+    }.sortBy(_._1)
     rows.toDF("tag", "n_files", "bytes")
   }
 
@@ -497,26 +501,17 @@ object IndexSnapshots {
     val f = fs(spark, path)
     val root = new Path(path)
     require(f.exists(root), s"no index at $root")
-    val leftovers = f.listStatus(root).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(n => stagingSuffixes.exists(n.endsWith))
-    require(leftovers.isEmpty,
-      s"index at $root has crashed-mutation staging leftovers " +
-        s"$leftovers — if it was a restore, its source tag is unknown to " +
-        "prune; finish (rerun) the interrupted mutation first")
+    requireQuiescent(f, root, remedy = "if it was a restore, its source " +
+      "tag is unknown to prune; finish (rerun) the interrupted mutation first")
     val snapRoot = new Path(root, snapDirName)
-    if (!f.exists(snapRoot)) return Seq.empty
-    val (hidden, visible) = f.listStatus(snapRoot).toSeq
-      .filter(_.isDirectory)
-      .filterNot(_.getPath.getName == objectsDirName)
-      .partition(_.getPath.getName.startsWith("."))
     // crashed snapshot()/prune() staging AND materialized at() views:
     // garbage/caches by construction — views rebuild on the next at()
-    hidden.map(_.getPath).foreach { p =>
-      if (!f.delete(p, true) && f.exists(p))
-        throw new java.io.IOException(s"prune: cannot clear stale $p")
-    }
-    val victims = visible
+    snapDirs(f, snapRoot).map(_.getPath).filter(_.getName.startsWith("."))
+      .foreach { p =>
+        if (!f.delete(p, true) && f.exists(p))
+          throw new java.io.IOException(s"prune: cannot clear stale $p")
+      }
+    val victims = tagDirs(f, snapRoot)
       .map(st => (st.getPath, st.getModificationTime))
       .sortBy { case (p, m) => (m, p.getName) }
       .dropRight(keepLast)
@@ -542,40 +537,36 @@ object IndexSnapshots {
     * [[scrubSnapshots]] drops it). One (tag, n_exposed) row per visible
     * snapshot, exact longs.
     *
-    * Reads ONLY the id-bearing artifact (`docs`/`sigs`/`codes`/`lists`
-    * — the caller names it and its id column), never text or vectors;
+    * Reads ONLY `spec`'s membership artifact (`docs`/`sigs`/`codes`/
+    * `lists`), never text or vectors — its id column as each tag froze
+    * it, so PQ and IVF tags keep the caller's own id name;
     * incremental tags resolve their `.ref` through the object store and
     * read the artifact IN PLACE — no view materialization. One bounded
     * semi-join count per tag, and tags are bounded by the retention
     * policy, so the report is O(keepLast) small jobs. */
   def exposure(spark: SparkSession, path: String, ids: DataFrame,
-      idArtifact: String, idColName: String): DataFrame = {
+      spec: IndexLifecycle.Spec): DataFrame = {
     import spark.implicits._
     require(ids.columns.length == 1,
       s"ids must be a one-column frame, got ${ids.columns.toSeq}")
     val f = fs(spark, path)
     val root = new Path(path)
-    val snapRoot = new Path(root, snapDirName)
     val wanted = ids.toDF("__fid").distinct()
-    val tagDirs =
-      if (!f.exists(snapRoot)) Seq.empty
-      else f.listStatus(snapRoot).toSeq
-        .filter(_.isDirectory).map(_.getPath)
-        .filterNot(p => p.getName.startsWith(".") || p.getName == objectsDirName)
-        .sortBy(_.getName)
+    val tags = tagDirs(f, new Path(root, snapDirName)).map(_.getPath)
+      .sortBy(_.getName)
+    val sub = spec.membership.sub
     // the per-tag counts are independent READ-ONLY bounded jobs — run
     // them concurrently (§2.6 overlap); runAll preserves tag order
     val rows: Seq[(String, Long)] =
-      if (tagDirs.isEmpty) Seq.empty
-      else graft.core.Concurrency.runAll(tagDirs.map(tagDir => () => {
-        val src = entries(f, root, tagDir).toMap.getOrElse(idArtifact,
+      if (tags.isEmpty) Seq.empty
+      else graft.core.Concurrency.runAll(tags.map(tagDir => () => {
+        val src = entries(f, root, tagDir).toMap.getOrElse(sub,
           throw new IllegalStateException(
-            s"snapshot '${tagDir.getName}' has no '$idArtifact' artifact"))
-        val n = spark.read.parquet(src.toString)
-          .select(org.apache.spark.sql.functions.col(idColName)
-            .as("__fid"))
-          .join(wanted, Seq("__fid"), "left_semi")
-          .count()
+            s"snapshot '${tagDir.getName}' has no '$sub' artifact"))
+        val members = spark.read.parquet(src.toString)
+        val id = members(spec.membership.idColIn(members.schema))
+        val n = members.select(id.as("__fid"))
+          .join(wanted, Seq("__fid"), "left_semi").count()
         (tagDir.getName, n)
       }))
     rows.toDF("tag", "n_exposed")
@@ -594,9 +585,9 @@ object IndexSnapshots {
     * snapshot) re-freezes the already-clean live generation. Runs under
     * the single-writer contract like every snapshot mutation. */
   def scrubSnapshots(spark: SparkSession, path: String, ids: DataFrame,
-      idArtifact: String, idColName: String): Seq[String] = {
+      spec: IndexLifecycle.Spec): Seq[String] = {
     import spark.implicits._
-    val exposed = exposure(spark, path, ids, idArtifact, idColName)
+    val exposed = exposure(spark, path, ids, spec)
       .filter($"n_exposed" > 0L)
       .select($"tag").as[String].collect().toSeq.sorted // bounded: retention-sized
     exposed.foreach(tag => drop(spark, path, tag))

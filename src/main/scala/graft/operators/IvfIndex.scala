@@ -365,12 +365,18 @@ object IvfIndex {
 
   /** This family's lifecycle facts: `lists/` carries the caller's id
     * column, partitioned by list; the list count is the centroid count;
-    * centroids and stats swap during [[refit]]. */
-  val lifecycle: IndexLifecycle.Spec = IndexLifecycle.Spec("ivf",
-    Seq(IndexLifecycle.IdArtifact("lists", None, Some("list_id"))),
-    IndexLifecycle.DistinctCount("centroids", "list_id"),
-    flatParams = Seq("centroids"),
-    recovered = Seq("lists", "centroids", "stats"), IndexAudit.auditIvf)
+    * centroids and stats swap during [[refit]]. fsck: no duplicate
+    * vector ids, some centroid, and every list id a centroid's. */
+  val lifecycle: IndexLifecycle.Spec = {
+    import IndexAudit._, IndexLifecycle._
+    Spec("ivf", Seq(IdArtifact("lists", None, Some("list_id"))),
+      DistinctCount("centroids", "list_id"), flatParams = Seq("centroids"),
+      recovered = Seq("lists", "centroids", "stats"),
+      Seq(Stat("vector_rows", "lists", count(lit(1)), DistinctIds),
+        Stat("centroid_rows", "centroids", count(lit(1)), Positive),
+        Subset("unknown_list_ids", Key("lists", "list_id"),
+          Key("centroids", "list_id"))))
+  }
 
   /** [[IndexLifecycle.Spec.recover]] on this family's artifacts. */
   def recover(spark: SparkSession, dir: String): Unit =

@@ -84,12 +84,22 @@ object MinHashIndex {
   }
 
   /** This family's lifecycle facts: sigs (membership) and the
-    * band-partitioned buckets carry the ids; the band count is in meta. */
-  val lifecycle: IndexLifecycle.Spec = IndexLifecycle.Spec("minhash",
-    Seq(IndexLifecycle.IdArtifact("sigs", Some("id"), None),
-      IndexLifecycle.IdArtifact("bands", Some("id"), Some("band_idx"))),
-    IndexLifecycle.MetaColumn("bands"), flatParams = Nil,
-    recovered = Seq("sigs", "bands", "meta"), IndexAudit.auditMinHash)
+    * band-partitioned buckets carry the ids; the band count is in meta.
+    * fsck: every id bands into exactly `bands` buckets, and sigs and
+    * bands hold the same ids. */
+  val lifecycle: IndexLifecycle.Spec = {
+    import IndexAudit._, IndexLifecycle._
+    val (sigIds, bandIds) = (Key("sigs", "id"), Key("bands", "id"))
+    Spec("minhash", Seq(IdArtifact("sigs", Some("id"), None),
+        IdArtifact("bands", Some("id"), Some("band_idx"))),
+      MetaColumn("bands"), flatParams = Nil,
+      recovered = Seq("sigs", "bands", "meta"),
+      Seq(Stat("sig_rows", "sigs", count(lit(1)), Reported),
+        Fanout("band_fanout_violations", "bands", "id", "band_idx",
+          MetaColumn("bands")),
+        Subset("orphan_band_ids", bandIds, sigIds),
+        Subset("missing_band_ids", sigIds, bandIds)))
+  }
 
   /** [[IndexLifecycle.Spec.recover]] on this family's artifacts. */
   def recover(spark: SparkSession, path: String): Unit =

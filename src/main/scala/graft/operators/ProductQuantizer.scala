@@ -418,12 +418,21 @@ object ProductQuantizer {
 
   /** This family's lifecycle facts: `codes/` carries the caller's id
     * column, partitioned by cell; the cell count is the coarse model's
-    * cluster count; the two codebooks are the flat parameter artifacts. */
-  val lifecycle: IndexLifecycle.Spec = IndexLifecycle.Spec("pq",
-    Seq(IndexLifecycle.IdArtifact("codes", None, Some("list_id"))),
-    IndexLifecycle.DistinctCount("coarse", "cluster_id"),
-    flatParams = Seq("coarse", "pq_model"),
-    recovered = Seq("codes", "coarse", "pq_model"), IndexAudit.auditPq)
+    * cluster count; the two codebooks are the flat parameter artifacts.
+    * fsck: no duplicate code ids, every code as wide as the codebook's
+    * subspace count, and every cell a coarse centroid's. */
+  val lifecycle: IndexLifecycle.Spec = {
+    import IndexAudit._, IndexLifecycle._
+    Spec("pq", Seq(IdArtifact("codes", None, Some("list_id"))),
+      DistinctCount("coarse", "cluster_id"),
+      flatParams = Seq("coarse", "pq_model"),
+      recovered = Seq("codes", "coarse", "pq_model"),
+      Seq(Stat("code_rows", "codes", count(lit(1)), DistinctIds),
+        Violations("code_width_violations", "codes",
+          DistinctCount("pq_model", "subspace"), m => size(col("codes")) =!= m),
+        Subset("unknown_list_ids", Key("codes", "list_id"),
+          Key("coarse", "cluster_id"))))
+  }
 
   /** The pruned-scan scored frame behind [[probeSaved]]: one row per
     * (query, code in a probed cell) with the asymmetric distance and no

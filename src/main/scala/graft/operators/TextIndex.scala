@@ -64,13 +64,26 @@ object TextIndex {
 
   /** This family's lifecycle facts: docs (the membership sidecar) and
     * postings carry the ids; buckets come from meta; the one
-    * surviving-docs aggregate is the delete guard and the new meta. */
-  val lifecycle: IndexLifecycle.Spec = IndexLifecycle.Spec("text",
-    Seq(IndexLifecycle.IdArtifact("docs", Some("doc_id"), None),
-      IndexLifecycle.IdArtifact("postings", Some("doc_id"), Some("bucket"))),
-    IndexLifecycle.MetaColumn("n_buckets"), flatParams = Nil,
-    recovered = Seq("postings", "docs", "meta"), IndexAudit.auditText,
-    guard = Some(survivingMeta))
+    * surviving-docs aggregate is the delete guard and the new meta. fsck:
+    * meta's stats against the sidecar, ids both ways (a doc without
+    * tokens has no postings), bucket placement, and the denormalized dl. */
+  val lifecycle: IndexLifecycle.Spec = {
+    import IndexAudit._, IndexLifecycle._
+    val (docs, postings) = (Key("docs", "doc_id"), Key("postings", "doc_id"))
+    Spec("text", Seq(IdArtifact("docs", Some("doc_id"), None),
+        IdArtifact("postings", Some("doc_id"), Some("bucket"))),
+      MetaColumn("n_buckets"), flatParams = Nil,
+      recovered = Seq("postings", "docs", "meta"),
+      Seq(Stat("n_docs", "docs", count(lit(1)), Equals(MetaColumn("n_docs"))),
+        Stat("sum_dl", "docs", coalesce(sum(col("dl")), lit(0L)),
+          Equals(MetaColumn("sum_dl"))),
+        Subset("orphan_postings", postings, docs),
+        Subset("missing_postings", docs, postings, Some(col("dl") > 0)),
+        Violations("bucket_misplacement", "postings", MetaColumn("n_buckets"),
+          n => col("bucket") =!= pmod(xxhash64(col("term")), n)),
+        Agrees("dl_mismatch", postings, docs, "dl")),
+      guard = Some(survivingMeta))
+  }
 
   /** [[IndexLifecycle.Spec.recover]] on this family's artifacts. */
   def recover(spark: SparkSession, path: String): Unit =

@@ -1407,7 +1407,7 @@ object SimilarityQueries extends QueryModule {
       graft.operators.TextIndex.append(
         docs.filter($"doc_id" % 2 === 1), "doc_id", "text", tPath)
       graft.operators.TextIndex.delete(spark, tPath, docDel)
-      graft.operators.IndexAudit.auditText(spark, tPath)
+      graft.operators.TextIndex.lifecycle.audit(spark, tPath)
     }
     val fMh = () => {
       val mPath = graft.core.Scratch.dir(dir, "fsck_mh")
@@ -1416,7 +1416,7 @@ object SimilarityQueries extends QueryModule {
       graft.operators.MinHashIndex.append(
         docs.filter($"doc_id" % 2 === 1), "doc_id", "text", mPath)
       graft.operators.MinHashIndex.delete(spark, mPath, docDel)
-      graft.operators.IndexAudit.auditMinHash(spark, mPath)
+      graft.operators.MinHashIndex.lifecycle.audit(spark, mPath)
     }
     val fPq = () => {
       val pPath = graft.core.Scratch.dir(dir, "fsck_pq")
@@ -1430,7 +1430,7 @@ object SimilarityQueries extends QueryModule {
       graft.operators.ProductQuantizer.append(
         emb.filter($"vec_id" % 2 === 1), "vec_id", "embedding", pPath)
       graft.operators.ProductQuantizer.delete(spark, pPath, embDel)
-      graft.operators.IndexAudit.auditPq(spark, pPath)
+      graft.operators.ProductQuantizer.lifecycle.audit(spark, pPath)
     }
     val fIvf = () => {
       val iPath = graft.core.Scratch.dir(dir, "fsck_ivf")
@@ -1438,7 +1438,7 @@ object SimilarityQueries extends QueryModule {
         emb, "vec_id", "embedding", nLists = 8, iters = 2)
       graft.operators.IvfIndex.save(emb, "vec_id", "embedding", ivf, iPath)
       graft.operators.IvfIndex.delete(spark, iPath, embDel)
-      graft.operators.IndexAudit.auditIvf(spark, iPath)
+      graft.operators.IvfIndex.lifecycle.audit(spark, iPath)
     }
     try graft.core.Concurrency.runAll(Seq(fText, fMh, fPq, fIvf))
       .reduce(_ unionAll _)

@@ -1225,13 +1225,13 @@ object TextQueries extends QueryModule {
     // materialize the pre-scrub report BEFORE scrubbing: its lineage
     // reads the very snapshot dirs the scrub will delete
     val before = graft.operators.IndexSnapshots
-      .exposure(spark, path, forget, "docs", "doc_id")
+      .exposure(spark, path, forget, graft.operators.TextIndex.lifecycle)
       .select(lit("exposure").as("stage"), $"tag", $"n_exposed".as("n"))
       .localCheckpoint()
     graft.operators.IndexSnapshots.scrubSnapshots(
-      spark, path, forget, "docs", "doc_id")
+      spark, path, forget, graft.operators.TextIndex.lifecycle)
     val standing = graft.operators.IndexSnapshots
-      .exposure(spark, path, forget, "docs", "doc_id")
+      .exposure(spark, path, forget, graft.operators.TextIndex.lifecycle)
       .select(lit("standing").as("stage"), $"tag", $"n_exposed".as("n"))
     before.unionByName(standing).orderBy($"stage", $"tag")
   }

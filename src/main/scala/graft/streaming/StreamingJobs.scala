@@ -570,21 +570,19 @@ object StreamingJobs {
     def family: String
     def delete(spark: SparkSession, ids: DataFrame): Unit
     def rows(spark: SparkSession): Long
-    /** The family's id-bearing artifact subdir and its id column —
-      * what [[graft.operators.IndexSnapshots.exposure]]/`scrubSnapshots`
-      * read to find forgotten ids still frozen in standing snapshots. */
-    def idArtifact: String
-    def idColName(spark: SparkSession): String
+    /** Drop the standing snapshots that still hold any of `ids`, returning
+      * their tags. A bare directory carries no snapshot store. */
+    def scrub(spark: SparkSession, ids: DataFrame): Seq[String] = Nil
   }
   /** A persisted index family at `path`: delete, membership rows and
-    * the id artifact all come from the family's lifecycle spec. */
+    * the snapshot scrub all come from the family's lifecycle spec. */
   sealed abstract class IndexAt(spec: graft.operators.IndexLifecycle.Spec)
       extends ErasureTarget {
     def delete(spark: SparkSession, ids: DataFrame): Unit =
       spec.delete(spark, path, ids)
     def rows(spark: SparkSession): Long = spec.rows(spark, path)
-    def idArtifact: String = spec.membership.sub
-    def idColName(spark: SparkSession): String = spec.idColName(spark, path)
+    override def scrub(spark: SparkSession, ids: DataFrame): Seq[String] =
+      graft.operators.IndexSnapshots.scrubSnapshots(spark, path, ids, spec)
   }
   /** [[graft.operators.TextIndex]] (BM25) at `path`. */
   final case class TextIndexAt(path: String)
@@ -614,9 +612,7 @@ object StreamingJobs {
     * (recover-first, so a crashed prior rewrite is repaired before the
     * read; the tmp write reads the live dir it will replace — the
     * standard pattern). Idempotent: absent ids are no-ops. No snapshot
-    * store applies to a bare corpus dir, so the scrub half is a no-op
-    * by construction ([[graft.operators.IndexSnapshots.exposure]] of a
-    * dir with no `_snapshots` is empty). */
+    * store applies to a bare corpus dir, so the scrub half is a no-op. */
   final case class ParquetCorpusAt(path: String, idColumn: String)
       extends ErasureTarget {
     def family = "parquet_corpus"
@@ -631,8 +627,6 @@ object StreamingJobs {
     def rows(spark: SparkSession): Long =
       graft.operators.StagedSwap.sibling(spark, path)
         .read(s"no corpus at $path")(p => spark.read.parquet(p.toString).count())
-    def idArtifact = "" // bare corpus dirs carry no snapshot store
-    def idColName(spark: SparkSession): String = idColumn
   }
   /** A streaming-serving ANSWERS directory — the write-once
     * (query_id, rank, hit, …) rows [[probeOnArrival]] /
@@ -669,8 +663,6 @@ object StreamingJobs {
     def delete(spark: SparkSession, ids: DataFrame): Unit =
       rewrite.delete(spark, ids)
     def rows(spark: SparkSession): Long = rewrite.rows(spark)
-    def idArtifact = "" // bare answers dirs carry no snapshot store
-    def idColName(spark: SparkSession): String = hitColumn
   }
 
   /** Continuous right-to-be-forgotten propagation — the delete half of
@@ -740,8 +732,7 @@ object StreamingJobs {
             else {
               val tagsBefore =
                 graft.operators.IndexSnapshots.list(spark, t.path).count()
-              val dropped = graft.operators.IndexSnapshots.scrubSnapshots(
-                spark, t.path, ids, t.idArtifact, t.idColName(spark))
+              val dropped = t.scrub(spark, ids)
               Seq(deleteRow,
                 (batchId, s"${t.family}:snapshots", t.path, nIds,
                   tagsBefore, tagsBefore - dropped.size))

@@ -4,8 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IndexAudit, IvfIndex, MinHashIndex, ProductQuantizer,
-  TextIndex}
+import graft.operators.{IvfIndex, MinHashIndex, ProductQuantizer, TextIndex}
 
 /** fsck negative tests: every audit passes on a healthy index, and each
   * planted cross-artifact corruption flips exactly its check — the
@@ -26,14 +25,14 @@ class IndexAuditSpec extends SparkSpec {
       "postings are each caught by their check") {
     val path = Files.createTempDirectory("fsck_tx").toString
     TextIndex.save(docs, "doc_id", "text", path)
-    assert(failing(IndexAudit.auditText(spark, path)) === Set.empty)
+    assert(failing(TextIndex.lifecycle.audit(spark, path)) === Set.empty)
     // corruption 1: a doc vanishes from the sidecar but not the postings
     // (a botched manual delete) -> orphan postings + stats drift
     val side = spark.read.parquet(s"$path/docs").cache()
     side.count()
     side.filter($"doc_id" =!= 1L)
       .write.mode("overwrite").parquet(s"$path/docs")
-    val f1 = failing(IndexAudit.auditText(spark, path))
+    val f1 = failing(TextIndex.lifecycle.audit(spark, path))
     assert(f1.contains("orphan_postings") && f1.contains("n_docs"), f1.toString)
     assert(f1 === Set("n_docs", "sum_dl", "orphan_postings"), f1.toString)
     side.unpersist()
@@ -45,7 +44,7 @@ class IndexAuditSpec extends SparkSpec {
       .withColumn("bucket", wrongBucket)
       .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
     spark.catalog.refreshByPath(path)
-    val f2 = failing(IndexAudit.auditText(spark, path))
+    val f2 = failing(TextIndex.lifecycle.audit(spark, path))
     assert(f2 === Set("bucket_misplacement"), f2.toString)
   }
 
@@ -57,7 +56,7 @@ class IndexAuditSpec extends SparkSpec {
       .withColumn("bucket", pmod(xxhash64($"term"), lit(64L)))
       .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
     spark.catalog.refreshByPath(path)
-    val f = failing(IndexAudit.auditText(spark, path))
+    val f = failing(TextIndex.lifecycle.audit(spark, path))
     assert(f === Set("dl_mismatch"), f.toString)
   }
 
@@ -72,7 +71,7 @@ class IndexAuditSpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/postings")
     postings.unpersist()
     spark.catalog.refreshByPath(path)
-    val f = failing(IndexAudit.auditText(spark, path))
+    val f = failing(TextIndex.lifecycle.audit(spark, path))
     assert(f === Set("missing_postings"), f.toString)
   }
 
@@ -87,7 +86,7 @@ class IndexAuditSpec extends SparkSpec {
     bands.write.mode("append").partitionBy("band_idx").parquet(s"$path/bands")
     bands.unpersist()
     spark.catalog.refreshByPath(path)
-    val f = failing(IndexAudit.auditMinHash(spark, path))
+    val f = failing(MinHashIndex.lifecycle.audit(spark, path))
     assert(f === Set("orphan_band_ids"), f.toString)
   }
 
@@ -95,14 +94,14 @@ class IndexAuditSpec extends SparkSpec {
       "band set are caught") {
     val path = Files.createTempDirectory("fsck_mh").toString
     MinHashIndex.save(docs, "doc_id", "text", path)
-    assert(failing(IndexAudit.auditMinHash(spark, path)) === Set.empty)
+    assert(failing(MinHashIndex.lifecycle.audit(spark, path)) === Set.empty)
     // corruption: a signature appended without its band rows (crash
     // between append's two writes)
     val orphanSig = spark.read.parquet(s"$path/sigs").limit(1)
       .withColumn("id", lit(9999L))
     orphanSig.write.mode("append").parquet(s"$path/sigs")
     spark.catalog.refreshByPath(path)
-    val f = failing(IndexAudit.auditMinHash(spark, path))
+    val f = failing(MinHashIndex.lifecycle.audit(spark, path))
     assert(f === Set("missing_band_ids"), f.toString)
     // heal; now a PARTIAL band set (some rows lost) -> fan-out violation
     MinHashIndex.save(docs, "doc_id", "text", path)
@@ -113,7 +112,7 @@ class IndexAuditSpec extends SparkSpec {
       .parquet(s"$path/bands")
     bands.unpersist()
     spark.catalog.refreshByPath(path)
-    val f2 = failing(IndexAudit.auditMinHash(spark, path))
+    val f2 = failing(MinHashIndex.lifecycle.audit(spark, path))
     assert(f2 === Set("band_fanout_violations"), f2.toString)
   }
 
@@ -129,13 +128,13 @@ class IndexAuditSpec extends SparkSpec {
       corpus, "vec_id", "embedding", k = 4, iters = 1)
     ProductQuantizer.save(corpus, "vec_id", "embedding", coarse, pq, path,
       residual = false)
-    assert(failing(IndexAudit.auditPq(spark, path)) === Set.empty)
+    assert(failing(ProductQuantizer.lifecycle.audit(spark, path)) === Set.empty)
     val one = spark.read.parquet(s"$path/codes").limit(1).cache()
     one.count()
     // duplicate id (upsert crash window)
     one.write.mode("append").partitionBy("list_id").parquet(s"$path/codes")
     spark.catalog.refreshByPath(path)
-    assert(failing(IndexAudit.auditPq(spark, path)) === Set("code_rows"))
+    assert(failing(ProductQuantizer.lifecycle.audit(spark, path)) === Set("code_rows"))
     ProductQuantizer.save(corpus, "vec_id", "embedding", coarse, pq, path,
       residual = false)
     // wrong code width (m=2 index, 3-wide row) + unknown coarse cell
@@ -144,7 +143,7 @@ class IndexAuditSpec extends SparkSpec {
       .withColumn("list_id", lit(99))
       .write.mode("append").partitionBy("list_id").parquet(s"$path/codes")
     spark.catalog.refreshByPath(path)
-    val f = failing(IndexAudit.auditPq(spark, path))
+    val f = failing(ProductQuantizer.lifecycle.audit(spark, path))
     assert(f === Set("code_width_violations", "unknown_list_ids"), f.toString)
     one.unpersist()
   }
@@ -158,13 +157,13 @@ class IndexAuditSpec extends SparkSpec {
     val model = IvfIndex.fit(corpus, "vec_id", "embedding", nLists = 4,
       iters = 2)
     IvfIndex.save(corpus, "vec_id", "embedding", model, path)
-    assert(failing(IndexAudit.auditIvf(spark, path)) === Set.empty)
+    assert(failing(IvfIndex.lifecycle.audit(spark, path)) === Set.empty)
     val one = spark.read.parquet(s"$path/lists").limit(1).cache()
     one.count()
     one.withColumn("list_id", lit(99))
       .write.mode("append").partitionBy("list_id").parquet(s"$path/lists")
     spark.catalog.refreshByPath(path)
-    val f = failing(IndexAudit.auditIvf(spark, path))
+    val f = failing(IvfIndex.lifecycle.audit(spark, path))
     assert(f === Set("vector_rows", "unknown_list_ids"), f.toString)
     one.unpersist()
     // heal, then plant an EMPTY centroids artifact with the same schema:
@@ -174,7 +173,7 @@ class IndexAuditSpec extends SparkSpec {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       schema).write.mode("overwrite").parquet(s"$path/centroids")
     spark.catalog.refreshByPath(path)
-    val f2 = failing(IndexAudit.auditIvf(spark, path))
+    val f2 = failing(IvfIndex.lifecycle.audit(spark, path))
     assert(f2 === Set("centroid_rows", "unknown_list_ids"), f2.toString)
   }
 }

@@ -11,7 +11,7 @@ import graft.operators.{IndexLifecycle, IndexMaintenance, IvfIndex, KMeans,
 
 /** One table over the four families' lifecycle specs: the kernel's
   * emptying guard, compaction and crash recovery hold for each family on
-  * a small fixture. */
+  * a small fixture, and a healed index passes fsck. */
 class IndexLifecycleFamiliesSpec extends SparkSpec {
   import spark.implicits._
 
@@ -113,6 +113,8 @@ class IndexLifecycleFamiliesSpec extends SparkSpec {
       f.save(f.corpus().join(ids, Seq(f.idCol), "left_anti"), rebuilt)
       assert(statsOf(f, path) === statsOf(f, rebuilt))
       assert(f.spec.rows(spark, path) === f.spec.rows(spark, rebuilt))
+      val failing = f.spec.audit(spark, path).filter(!$"pass").collect()
+      assert(failing.isEmpty, failing.mkString("; "))
     }
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IndexSnapshots, MinHashIndex, TextIndex}
+import graft.operators.{IndexSnapshots, IvfIndex, MinHashIndex, TextIndex}
 import graft.streaming.StreamingJobs
 
 /** Right-to-be-forgotten vs immutable snapshots: the families' delete
@@ -32,13 +32,13 @@ class SnapshotErasureSpec extends SparkSpec {
     TextIndex.delete(spark, path, forget)
     Thread.sleep(20)
     IndexSnapshots.snapshotIncremental(spark, path, "clean")
-    val exp = IndexSnapshots.exposure(spark, path, forget, "docs", "doc_id")
+    val exp = IndexSnapshots.exposure(spark, path, forget, TextIndex.lifecycle)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val n5 = docs.filter($"doc_id" % 5 === 0).count()
     assert(exp === Map("inc_pre" -> n5, "full_pre" -> n5, "clean" -> 0L),
       s"exposure must count forgotten ids per tag: $exp")
     val dropped = IndexSnapshots.scrubSnapshots(
-      spark, path, forget, "docs", "doc_id")
+      spark, path, forget, TextIndex.lifecycle)
     assert(dropped === Seq("full_pre", "inc_pre"))
     assert(IndexSnapshots.list(spark, path).select($"tag")
       .as[String].collect().toSeq === Seq("clean"),
@@ -52,7 +52,33 @@ class SnapshotErasureSpec extends SparkSpec {
     }
     // idempotent: nothing left to scrub
     assert(IndexSnapshots.scrubSnapshots(
-      spark, path, forget, "docs", "doc_id") === Seq.empty)
+      spark, path, forget, TextIndex.lifecycle) === Seq.empty)
+  }
+
+  test("a vector family's exposure reads the caller's id column from " +
+      "each tag's membership artifact; scrub drops exactly the exposed tags") {
+    val vectors = (0 until 40).map { i =>
+      (i.toLong, Seq.tabulate(8)(d => if (d == i % 4) 10.0 + (i % 4) else 0.001 * i))
+    }.toDF("vec_id", "embedding")
+    val path = Files.createTempDirectory("scrub_ivf").toString
+    val model = IvfIndex.fit(vectors, "vec_id", "embedding", nLists = 4,
+      iters = 2)
+    IvfIndex.save(vectors, "vec_id", "embedding", model, path)
+    IndexSnapshots.snapshotIncremental(spark, path, "inc_pre")
+    IndexSnapshots.snapshot(spark, path, "full_pre")
+    // the erasure feed names its column differently from the index
+    val forget = vectors.filter($"vec_id" % 5 === 0).select($"vec_id".as("gone"))
+    IvfIndex.delete(spark, path, forget)
+    Thread.sleep(20)
+    IndexSnapshots.snapshotIncremental(spark, path, "clean")
+    val exp = IndexSnapshots.exposure(spark, path, forget, IvfIndex.lifecycle)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(exp === Map("inc_pre" -> 8L, "full_pre" -> 8L, "clean" -> 0L),
+      s"exposure must count forgotten vec_ids per tag: $exp")
+    assert(IndexSnapshots.scrubSnapshots(spark, path, forget,
+      IvfIndex.lifecycle) === Seq("full_pre", "inc_pre"))
+    assert(IndexSnapshots.list(spark, path).select($"tag")
+      .as[String].collect().toSeq === Seq("clean"))
   }
 
   test("ParquetCorpusAt: the curated-output corpus joins the erasure " +
@@ -206,7 +232,7 @@ class SnapshotErasureSpec extends SparkSpec {
     // a fresh snapshot of the scrubbed generation stays clean + standing
     IndexSnapshots.snapshotIncremental(spark, tx, "night1")
     val forget = docs.filter($"doc_id" % 3 === 0).select($"doc_id")
-    assert(IndexSnapshots.exposure(spark, tx, forget, "docs", "doc_id")
+    assert(IndexSnapshots.exposure(spark, tx, forget, TextIndex.lifecycle)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq ===
       Seq(("night1", 0L)))
   }
