@@ -23,15 +23,14 @@ import IndexLifecycle.{Param, Params}
   * every value is derivable from the corpus alone, which is what lets
   * q232 pin the whole audit surface under the DuckDB hash.
   *
-  * Scale shape: id-column joins and aggregates only — no text, no
-  * vectors, no signatures move; the widest check is one corpus-scale
-  * join on doc ids. Placement checks (bucket = hash(term), code
-  * width) are row-local codegen predicates under a count. Every
-  * artifact is read at most twice: the checks that aggregate its rows
-  * fuse into one job, and the join checks between two artifacts fuse
-  * into one full outer join of their distinct frames, each side
-  * computed once inside that query (text reads postings twice, not
-  * once per check). The jobs run concurrently (§2.6).
+  * Scale shape: id-column aggregates only — no text, no vectors, no
+  * signatures move; the widest check is one corpus-scale shuffle on doc
+  * ids. Placement checks (bucket = hash(term), code width) are
+  * row-local codegen predicates under a count. Every artifact is read
+  * at most twice: the checks that aggregate its rows fuse into one job,
+  * and the checks between two artifacts fuse into one aggregate of the
+  * union of both sides' key rows, reduced per key (text reads postings
+  * twice, not once per check). The jobs run concurrently (§2.6).
   *
   * What each family checks and why it can break:
   *  - Text: meta's (n_docs, sum_dl) vs the docs sidecar (a crash
@@ -59,28 +58,15 @@ object IndexAudit {
   /** One declared fsck invariant; `name` is its row's `check`. */
   sealed trait Check { def name: String }
 
-  /** A check aggregating the rows of one artifact `sub`: all of an
-    * artifact's are one job. */
-  sealed trait OnRows extends Check { def sub: String }
+  /** What a [[Stat]]'s columns read: the family's parameters, and the id
+    * column of the artifact it aggregates (an id artifact's only). */
+  trait Scope { def param(p: Param): Column; def id: Column }
 
-  /** When a [[Stat]] passes. */
-  sealed trait Expect
-  /** Always: a corpus figure reported for the record. */
-  case object Reported extends Expect
-  /** When it is above zero. */
-  case object Positive extends Expect
-  /** When it equals the count of distinct ids in `sub` (an id artifact). */
-  case object DistinctIds extends Expect
-  /** When it equals the family parameter `param`. */
-  final case class Equals(param: Param) extends Expect
-
-  /** An aggregate `value` over the rows of artifact `sub`. */
-  final case class Stat(name: String, sub: String, value: Column,
-      expect: Expect) extends OnRows
-  /** The count of rows of `sub` where `bad`, given `param`'s value,
-    * holds; passes at 0. */
-  final case class Violations(name: String, sub: String, param: Param,
-      bad: Column => Column) extends OnRows
+  /** An aggregate `value` over the rows of artifact `sub`, passing where
+    * `pass` holds of it (by default a violation count, passing at 0); all
+    * of one artifact's are one job. */
+  final case class Stat(name: String, sub: String, value: Scope => Column,
+      pass: (Column, Scope) => Column = (v, _) => v === 0L) extends Check
   /** The count of `id`s of `sub` whose distinct `over` values do not
     * number `param`; passes at 0. */
   final case class Fanout(name: String, sub: String, id: String,
@@ -88,18 +74,18 @@ object IndexAudit {
 
   /** Column `column` of artifact `sub`. */
   final case class Key(sub: String, column: String)
-  /** A check over the join of two artifacts on `a` = `b`: all of one
-    * pair's are one full outer join of their distinct frames. */
-  sealed trait OnJoin extends Check { def a: Key; def b: Key }
+  /** A check matching the keys of two artifacts, `a` against `b`: all of
+    * one pair's are one aggregate of both sides' rows, grouped by key. */
+  sealed trait OnPair extends Check { def a: Key; def b: Key }
   /** The count of distinct `a` values (on the rows where `where` holds)
     * that `b` lacks; passes at 0. */
   final case class Subset(name: String, a: Key, b: Key,
-      where: Option[Column] = None) extends OnJoin
-  /** The count of pairings of a distinct (key, `column`) row of `a` with
-    * one of `b` under the same key but another value — a key on one side
-    * only is a [[Subset]] finding, never counted here; passes at 0. */
+      where: Option[Column] = None) extends OnPair
+  /** The count of pairings of a distinct `column` value of `a` with one of
+    * `b` under the same key that differ — a key on one side only is a
+    * [[Subset]] finding, never counted here; passes at 0. */
   final case class Agrees(name: String, a: Key, b: Key, column: String)
-      extends OnJoin
+      extends OnPair
 
   /** Audit a [[TextIndex]] at `path`. */
   def auditText(spark: SparkSession, path: String): DataFrame =
@@ -107,7 +93,7 @@ object IndexAudit {
 
   /** Evaluate `spec`'s checks on the index at `path`, as one wave of
     * concurrent jobs: an aggregate per artifact, a job per fan-out, and a
-    * join per artifact pair. */
+    * keyed aggregate per artifact pair. */
   private[operators] def run(spark: SparkSession, path: String,
       spec: IndexLifecycle.Spec): DataFrame = {
     import spark.implicits._
@@ -118,22 +104,18 @@ object IndexAudit {
     def read(sub: String) =
       artifacts.getOrElseUpdate(sub, spark.read.parquet(s"$path/$sub"))
     def passAtZero(name: String, v: Long) = name -> (v, v == 0L)
-    val aggregates = spec.checks.collect { case c: OnRows => c }
+    val aggregates = spec.checks.collect { case c: Stat => c }
       .groupBy(_.sub).toSeq.map { case (sub, cs) =>
         val df = read(sub)
-        def id =
-          col(spec.idArtifacts.find(_.sub == sub).get.idColIn(df.schema))
         () => {
-          val vp = cs.flatMap {
-            case Stat(_, _, v, e) => Seq(v, e match {
-              case Reported => lit(true)
-              case Positive => v > 0L
-              case DistinctIds => v === countDistinct(id)
-              case Equals(p) => v === params(p)
-            })
-            case Violations(_, _, p, bad) =>
-              val v = count(when(bad(lit(params(p))), 1))
-              Seq(v, v === 0L)
+          val scope = new Scope {
+            def param(p: Param) = lit(params(p))
+            def id = col(spec.idArtifacts.find(_.sub == sub).get
+              .idColIn(df.schema))
+          }
+          val vp = cs.flatMap { c =>
+            val v = c.value(scope)
+            Seq(v, c.pass(v, scope))
           }
           val r = df.agg(vp.head, vp.tail: _*).head()
           cs.indices.map(i =>
@@ -146,35 +128,39 @@ object IndexAudit {
         .agg(countDistinct(col(over)).as("__n"))
         .filter(col("__n") =!= params(p)).count()))
     }
-    // each side's distinct frame holds the key, the agreed columns and the
-    // filters of the pair's checks; the join is reduced per key (a key
-    // counts once), then summed
-    val joins = spec.checks.collect { case c: OnJoin => c }
+    // a pair's checks read one union of the two sides' rows, each flagged
+    // with its side, reduced per key and then summed: one shuffle, no join.
+    // A null key matches nothing, as in a join.
+    val pairs = spec.checks.collect { case c: OnPair => c }
       .groupBy(c => Seq(c.a, c.b).sortBy(k => (k.sub, k.column))).toSeq.map {
         case (Seq(l, r), cs) =>
-          def frame(k: Key, side: String) = read(k.sub).select(
-            col(k.column).as("__k") +: cs.flatMap {
-              case Subset(n, a, _, w) if a == k => w.map(_.as(s"__w_$n"))
+          def rows(k: Key, side: String) = read(k.sub).select(
+            col(k.column).as("__k") +: lit(true).as(s"__in$side") +: cs.flatMap {
+              case Subset(n, a, _, w) if a == k =>
+                Some(w.getOrElse(lit(true)).as(s"__a_$n"))
               case Agrees(_, _, _, c) => Some(col(c).as(s"${side}_$c"))
               case _ => None
-            }.distinct: _*).distinct().withColumn(s"__in$side", lit(true))
-          val (fl, fr) = (frame(l, "L"), frame(r, "R"))
+            }: _*)
+          val matched = col("__k").isNotNull
           val perKey = cs.map {
-            case Subset(n, a, _, w) =>
-              val absent = col(if (a == l) "__inR" else "__inL").isNull
-              max(when(w.fold(absent)(_ => absent && col(s"__w_$n")), 1)).as(n)
+            case Subset(n, a, _, _) =>
+              val inB = max(col(if (a == l) "__inR" else "__inL"))
+              when(max(col(s"__a_$n")) && !(matched && inB.isNotNull), 1).as(n)
             case Agrees(n, _, _, c) =>
-              count(when(col(s"L_$c") =!= col(s"R_$c"), 1)).as(n)
+              val (vl, vr) = (collect_set(s"L_$c"), collect_set(s"R_$c"))
+              when(matched,
+                size(vl) * size(vr) - size(array_intersect(vl, vr))).as(n)
           }
           () => {
-            val t = fl.join(fr, Seq("__k"), "full_outer").groupBy(col("__k"))
-              .agg(perKey.head, perKey.tail: _*)
+            val t = rows(l, "L")
+              .unionByName(rows(r, "R"), allowMissingColumns = true)
+              .groupBy(col("__k")).agg(perKey.head, perKey.tail: _*)
               .agg(sum(cs.head.name), cs.tail.map(c => sum(c.name)): _*).head()
             cs.indices.map(i =>
               passAtZero(cs(i).name, if (t.isNullAt(i)) 0L else t.getLong(i)))
           }
       }
-    val got = Concurrency.runAll(aggregates ++ fanouts ++ joins).flatten.toMap
+    val got = Concurrency.runAll(aggregates ++ fanouts ++ pairs).flatten.toMap
     spec.checks.map { c => val (v, ok) = got(c.name); (spec.name, c.name, v, ok) }
       .toDF("family", "check", "value", "pass")
   }

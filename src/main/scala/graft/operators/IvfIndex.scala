@@ -372,8 +372,10 @@ object IvfIndex {
     Spec("ivf", Seq(IdArtifact("lists", None, Some("list_id"))),
       DistinctCount("centroids", "list_id"), flatParams = Seq("centroids"),
       recovered = Seq("lists", "centroids", "stats"),
-      Seq(Stat("vector_rows", "lists", count(lit(1)), DistinctIds),
-        Stat("centroid_rows", "centroids", count(lit(1)), Positive),
+      Seq(Stat("vector_rows", "lists", _ => count(lit(1)),
+          (v, s) => v === countDistinct(s.id)),
+        Stat("centroid_rows", "centroids", _ => count(lit(1)),
+          (v, _) => v > 0L),
         Subset("unknown_list_ids", Key("lists", "list_id"),
           Key("centroids", "list_id"))))
   }

@@ -94,7 +94,7 @@ object MinHashIndex {
         IdArtifact("bands", Some("id"), Some("band_idx"))),
       MetaColumn("bands"), flatParams = Nil,
       recovered = Seq("sigs", "bands", "meta"),
-      Seq(Stat("sig_rows", "sigs", count(lit(1)), Reported),
+      Seq(Stat("sig_rows", "sigs", _ => count(lit(1)), (_, _) => lit(true)),
         Fanout("band_fanout_violations", "bands", "id", "band_idx",
           MetaColumn("bands")),
         Subset("orphan_band_ids", bandIds, sigIds),

@@ -427,9 +427,11 @@ object ProductQuantizer {
       DistinctCount("coarse", "cluster_id"),
       flatParams = Seq("coarse", "pq_model"),
       recovered = Seq("codes", "coarse", "pq_model"),
-      Seq(Stat("code_rows", "codes", count(lit(1)), DistinctIds),
-        Violations("code_width_violations", "codes",
-          DistinctCount("pq_model", "subspace"), m => size(col("codes")) =!= m),
+      Seq(Stat("code_rows", "codes", _ => count(lit(1)),
+          (v, s) => v === countDistinct(s.id)),
+        Stat("code_width_violations", "codes", s => count(when(
+          size(col("codes")) =!= s.param(DistinctCount("pq_model", "subspace")),
+          1))),
         Subset("unknown_list_ids", Key("codes", "list_id"),
           Key("coarse", "cluster_id"))))
   }

@@ -74,13 +74,15 @@ object TextIndex {
         IdArtifact("postings", Some("doc_id"), Some("bucket"))),
       MetaColumn("n_buckets"), flatParams = Nil,
       recovered = Seq("postings", "docs", "meta"),
-      Seq(Stat("n_docs", "docs", count(lit(1)), Equals(MetaColumn("n_docs"))),
-        Stat("sum_dl", "docs", coalesce(sum(col("dl")), lit(0L)),
-          Equals(MetaColumn("sum_dl"))),
+      Seq(Stat("n_docs", "docs", _ => count(lit(1)),
+          (v, s) => v === s.param(MetaColumn("n_docs"))),
+        Stat("sum_dl", "docs", _ => coalesce(sum(col("dl")), lit(0L)),
+          (v, s) => v === s.param(MetaColumn("sum_dl"))),
         Subset("orphan_postings", postings, docs),
         Subset("missing_postings", docs, postings, Some(col("dl") > 0)),
-        Violations("bucket_misplacement", "postings", MetaColumn("n_buckets"),
-          n => col("bucket") =!= pmod(xxhash64(col("term")), n)),
+        Stat("bucket_misplacement", "postings", s => count(when(
+          col("bucket") =!= pmod(xxhash64(col("term")),
+            s.param(MetaColumn("n_buckets"))), 1))),
         Agrees("dl_mismatch", postings, docs, "dl")),
       guard = Some(survivingMeta))
   }

@@ -2,15 +2,12 @@
 """Count the program's lines of code: the non-blank lines of
 src/main/**/*.scala that are neither `//` comment lines nor inside a
 `/* ... */` block (scaladoc included). Prints the total, then one
-`<count> <file>` line per file, largest first.
+`<count> <file>` line per file, largest first. Run it from the root
+of the checkout to count:
 
-    python3 tools/loc.py            # from the root of a checkout
-    python3 tools/loc.py --total    # the total only
-    python3 tools/loc.py <root>     # another checkout
+    python3 tools/loc.py
 """
-import argparse
 import os
-import signal
 import sys
 
 
@@ -44,27 +41,19 @@ def code_lines(text):
 
 
 def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("root", nargs="?", default=".")
-    ap.add_argument("--total", action="store_true",
-                    help="print the total only")
-    args = ap.parse_args()
-    signal.signal(signal.SIGPIPE, signal.SIG_DFL)  # quiet under `| head`
-    src = os.path.join(args.root, "src", "main")
+    src = os.path.join("src", "main")
     if not os.path.isdir(src):
-        sys.exit(f"no src/main under {args.root}")
+        sys.exit("no src/main here: run from the root of a checkout")
     counts = []
     for d, _, files in os.walk(src):
         for f in files:
             if f.endswith(".scala"):
                 p = os.path.join(d, f)
                 with open(p, encoding="utf-8") as fh:
-                    counts.append((code_lines(fh.read()),
-                                   os.path.relpath(p, args.root)))
+                    counts.append((code_lines(fh.read()), p))
     print(sum(c for c, _ in counts))
-    if not args.total:
-        for c, p in sorted(counts, key=lambda cp: (-cp[0], cp[1])):
-            print(f"{c:6d} {p}")
+    for c, p in sorted(counts, key=lambda cp: (-cp[0], cp[1])):
+        print(f"{c:6d} {p}")
 
 
 if __name__ == "__main__":
