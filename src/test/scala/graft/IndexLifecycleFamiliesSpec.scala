@@ -15,11 +15,14 @@ import graft.operators.{IndexLifecycle, IndexMaintenance, IvfIndex, KMeans,
 class IndexLifecycleFamiliesSpec extends SparkSpec {
   import spark.implicits._
 
-  /** A family's fixture: its spec, a corpus keyed by `idCol`, and the
-    * family's own save/append/stats. */
+  /** A family's fixture: its spec, a corpus keyed by `idCol`, the
+    * family's own save/append/stats, and its pinned `stats` rows after
+    * saving the first quarter of the corpus and after appending the
+    * other three. */
   private case class Family(spec: IndexLifecycle.Spec, idCol: String,
       corpus: () => DataFrame, save: (DataFrame, String) => Unit,
-      append: (DataFrame, String) => Unit, stats: String => DataFrame)
+      append: (DataFrame, String) => Unit, stats: String => DataFrame,
+      saved: Seq[(String, Long)], appended: Seq[(String, Long)])
 
   private lazy val texts = (0 until 24).map { i =>
     (i.toLong, (1 to 12).map(j => s"w${(i * 7 + j * 3) % 41}").mkString(" "))
@@ -40,26 +43,60 @@ class IndexLifecycleFamiliesSpec extends SparkSpec {
     Family(TextIndex.lifecycle, "doc_id", () => texts,
       TextIndex.save(_, "doc_id", "text", _, nBuckets = 4),
       TextIndex.append(_, "doc_id", "text", _),
-      TextIndex.stats(spark, _)),
+      TextIndex.stats(spark, _),
+      Seq("n_docs" -> 6L, "sum_dl" -> 72L, "n_buckets" -> 4L, "doc_rows" -> 6L,
+        "posting_doc_ids" -> 6L, "posting_rows" -> 72L,
+        "distinct_terms" -> 40L, "nonempty_buckets" -> 4L),
+      Seq("n_docs" -> 24L, "sum_dl" -> 288L, "n_buckets" -> 4L,
+        "doc_rows" -> 24L, "posting_doc_ids" -> 24L, "posting_rows" -> 288L,
+        "distinct_terms" -> 41L, "nonempty_buckets" -> 4L)),
     Family(MinHashIndex.lifecycle, "doc_id", () => texts,
       MinHashIndex.save(_, "doc_id", "text", _),
       MinHashIndex.append(_, "doc_id", "text", _),
-      MinHashIndex.stats(spark, _)),
+      MinHashIndex.stats(spark, _),
+      Seq("sig_rows" -> 6L, "band_rows" -> 96L, "nonempty_buckets" -> 96L,
+        "max_bucket_size" -> 1L, "distinct_banded_ids" -> 6L, "n" -> 3L,
+        "k" -> 64L, "bands" -> 16L, "seed" -> 42L),
+      Seq("sig_rows" -> 24L, "band_rows" -> 384L, "nonempty_buckets" -> 282L,
+        "max_bucket_size" -> 4L, "distinct_banded_ids" -> 24L, "n" -> 3L,
+        "k" -> 64L, "bands" -> 16L, "seed" -> 42L)),
     Family(IvfIndex.lifecycle, "vec_id", () => vectors,
       IvfIndex.save(_, "vec_id", "embedding", ivfModel, _),
       IvfIndex.append(_, "vec_id", "embedding", _),
-      IvfIndex.stats(spark, _)),
+      IvfIndex.stats(spark, _),
+      // n_lists counts centroid rows, empty lists included
+      Seq("vec_rows" -> 10L, "n_lists" -> 4L, "nonempty_lists" -> 1L,
+        "min_list_size" -> 10L, "max_list_size" -> 10L),
+      Seq("vec_rows" -> 40L, "n_lists" -> 4L, "nonempty_lists" -> 4L,
+        "min_list_size" -> 10L, "max_list_size" -> 10L)),
     Family(ProductQuantizer.lifecycle, "vec_id", () => vectors,
       ProductQuantizer.save(_, "vec_id", "embedding", coarse, pqModel, _,
         residual = false),
       ProductQuantizer.append(_, "vec_id", "embedding", _),
-      ProductQuantizer.stats(spark, _)))
+      ProductQuantizer.stats(spark, _),
+      // n_lists counts non-empty cells
+      Seq("code_rows" -> 10L, "n_lists" -> 1L, "min_cell_size" -> 10L,
+        "max_cell_size" -> 10L, "m" -> 2L, "pq_codebook_rows" -> 32L,
+        "residual" -> 0L),
+      Seq("code_rows" -> 40L, "n_lists" -> 4L, "min_cell_size" -> 10L,
+        "max_cell_size" -> 10L, "m" -> 2L, "pq_codebook_rows" -> 32L,
+        "residual" -> 0L)))
 
   private def statsOf(f: Family, path: String): Map[String, Long] =
     f.stats(path).as[(String, Long)].collect().toMap
 
   for (f <- families) {
     val name = f.spec.name
+
+    test(s"$name: stats rows after save and after appends, in order") {
+      val path = Files.createTempDirectory(s"lk_stats_$name").toString
+      val part = (r: Int) => f.corpus().filter(col(f.idCol) % 4 === r)
+      def rows = f.stats(path).as[(String, Long)].collect().toSeq
+      f.save(part(0), path)
+      assert(rows === f.saved)
+      (1 to 3).foreach(r => f.append(part(r), path))
+      assert(rows === f.appended)
+    }
 
     test(s"$name: an emptying delete is rejected and stats are unchanged") {
       val path = Files.createTempDirectory(s"lk_empty_$name").toString
