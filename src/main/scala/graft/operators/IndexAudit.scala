@@ -6,31 +6,35 @@ import org.apache.spark.sql.functions._
 import graft.core.Concurrency
 import IndexLifecycle.{Param, Params}
 
-/** fsck for the persisted index families — cross-ARTIFACT consistency
-  * the per-family `stats` dashboards don't check (stats reads each
-  * artifact alone; corruption that matters lives BETWEEN them): a
-  * maintenance cadence runs this after crashes, restores, manual
-  * surgery, or object-store mishaps, and trusts the index only when
-  * every row passes.
+/** Stats and fsck for the persisted index families: each family declares
+  * both on its [[IndexLifecycle.Spec]] — `stats` as value-only [[Stat]]s,
+  * `checks` as invariants — and [[run]] is the one evaluator.
   *
-  * Each family declares its invariants as [[Check]]s on its
-  * [[IndexLifecycle.Spec]] and [[run]] evaluates them for every family.
-  * Output contract: one (family, check, value, pass) row per check,
-  * in declaration order, exact longs — `value` is the observed
-  * count (a corpus-anchored total for count checks, a VIOLATION count
-  * for membership/placement checks, so healthy indexes show the corpus
-  * number or 0) and `pass` the invariant verdict. On a healthy index
-  * every value is derivable from the corpus alone, which is what lets
-  * q232 pin the whole audit surface under the DuckDB hash.
+  * Stats are the serving dashboard ([[IndexLifecycle.Spec.measure]]): one
+  * (stat, value) row per figure, in declaration order, exact longs — row
+  * and distinct-key counts, group-size skew (a grouped [[Stat]]), and the
+  * family's parameters. fsck ([[IndexLifecycle.Spec.audit]]) checks the
+  * consistency that matters BETWEEN artifacts: a maintenance cadence runs
+  * it after crashes, restores, manual surgery, or object-store mishaps,
+  * and trusts the index only when every row passes. Its contract: one
+  * (family, check, value, pass) row per check, in declaration order,
+  * exact longs — `value` is the observed count (a corpus-anchored total
+  * for count checks, a VIOLATION count for membership/placement checks,
+  * so healthy indexes show the corpus number or 0) and `pass` the
+  * invariant verdict. On a healthy index every check value is
+  * derivable from the corpus alone, which is what lets q232 pin the
+  * whole audit surface under the DuckDB hash (q219 pins the
+  * corpus-derivable stats).
   *
   * Scale shape: id-column aggregates only — no text, no vectors, no
-  * signatures move; the widest check is one corpus-scale shuffle on doc
+  * signatures move; the widest figure is one corpus-scale shuffle on doc
   * ids. Placement checks (bucket = hash(term), code width) are
-  * row-local codegen predicates under a count. Every artifact is read
-  * at most twice: the checks that aggregate its rows fuse into one job,
-  * and the checks between two artifacts fuse into one aggregate of the
-  * union of both sides' key rows, reduced per key (text reads postings
-  * twice, not once per check). The jobs run concurrently (§2.6).
+  * row-local codegen predicates under a count. Each artifact is read
+  * once, with `meta/` through [[IndexLifecycle.Params]]: the figures that
+  * aggregate its rows under one grouping fuse into one job, and the
+  * checks between two artifacts fuse into one aggregate of the union of
+  * both sides' key rows, reduced per key. The jobs run concurrently
+  * (§2.6).
   *
   * What each family checks and why it can break:
   *  - Text: meta's (n_docs, sum_dl) vs the docs sidecar (a crash
@@ -55,22 +59,30 @@ import IndexLifecycle.{Param, Params}
   *  - IVF: duplicate vector ids; list_id domain vs centroids. */
 object IndexAudit {
 
-  /** One declared fsck invariant; `name` is its row's `check`. */
+  /** One declared figure of an index, a stat or an fsck check; `name` is
+    * its row's `stat` or `check`. */
   sealed trait Check { def name: String }
 
   /** What a [[Stat]]'s columns read: the family's parameters, and the id
     * column of the artifact it aggregates (an id artifact's only). */
   trait Scope { def param(p: Param): Column; def id: Column }
 
-  /** An aggregate `value` over the rows of artifact `sub`, passing where
-    * `pass` holds of it (by default a violation count, passing at 0); all
-    * of one artifact's are one job. */
+  /** The groups of an artifact's rows by `keys`, each sized by its rows,
+    * or by its distinct values of `distinct`: a grouped [[Stat]]'s value
+    * aggregates the sizes, read as [[Group.size]]. */
+  final case class Group(keys: Seq[String], distinct: Option[String] = None)
+  object Group { val size: Column = col("__size") }
+
+  /** An aggregate `value` over the rows of artifact `sub` (with `by`: over
+    * its groups), passing where `pass` holds of it — by default always, a
+    * value-only figure. All of one artifact's under one grouping are one
+    * job, and a value of parameters alone (`_.param(p)`) rides on its
+    * artifact's job. */
   final case class Stat(name: String, sub: String, value: Scope => Column,
-      pass: (Column, Scope) => Column = (v, _) => v === 0L) extends Check
-  /** The count of `id`s of `sub` whose distinct `over` values do not
-    * number `param`; passes at 0. */
-  final case class Fanout(name: String, sub: String, id: String,
-      over: String, param: Param) extends Check
+      pass: (Column, Scope) => Column = (_, _) => lit(true),
+      by: Option[Group] = None) extends Check
+  /** The pass of a violation count: none found. */
+  val atZero: (Column, Scope) => Column = (v, _) => v === 0L
 
   /** Column `column` of artifact `sub`. */
   final case class Key(sub: String, column: String)
@@ -91,22 +103,20 @@ object IndexAudit {
   def auditText(spark: SparkSession, path: String): DataFrame =
     TextIndex.lifecycle.audit(spark, path)
 
-  /** Evaluate `spec`'s checks on the index at `path`, as one wave of
-    * concurrent jobs: an aggregate per artifact, a job per fan-out, and a
-    * keyed aggregate per artifact pair. */
+  /** Evaluate `checks` (declared on `spec`) on the index at `path`, as one
+    * wave of concurrent jobs — an aggregate per artifact and grouping, and
+    * a keyed aggregate per artifact pair — into one (name, value, pass)
+    * per check, in order. */
   private[operators] def run(spark: SparkSession, path: String,
-      spec: IndexLifecycle.Spec): DataFrame = {
-    import spark.implicits._
+      spec: IndexLifecycle.Spec, checks: Seq[Check]): Seq[(String, Long, Boolean)] = {
     val params = new Params(spark, path)
-    // each artifact is read once, on this thread: a read infers the
-    // schema with a job of its own
-    val artifacts = scala.collection.mutable.Map.empty[String, DataFrame]
-    def read(sub: String) =
-      artifacts.getOrElseUpdate(sub, spark.read.parquet(s"$path/$sub"))
     def passAtZero(name: String, v: Long) = name -> (v, v == 0L)
-    val aggregates = spec.checks.collect { case c: Stat => c }
-      .groupBy(_.sub).toSeq.map { case (sub, cs) =>
-        val df = read(sub)
+    val aggregates = checks.collect { case c: Stat => c }
+      .groupBy(c => (c.sub, c.by)).toSeq.map { case ((sub, by), cs) =>
+        val df = params.read(sub)
+        val rows = by.fold(df)(g => df.groupBy(g.keys.map(col): _*).agg(
+          g.distinct.fold(count(lit(1)))(c => countDistinct(col(c)))
+            .as("__size")))
         () => {
           val scope = new Scope {
             def param(p: Param) = lit(params(p))
@@ -114,27 +124,21 @@ object IndexAudit {
               .idColIn(df.schema))
           }
           val vp = cs.flatMap { c =>
-            val v = c.value(scope)
+            val v = c.value(scope).cast("long")
             Seq(v, c.pass(v, scope))
           }
-          val r = df.agg(vp.head, vp.tail: _*).head()
+          val r = rows.agg(vp.head, vp.tail: _*).head()
           cs.indices.map(i =>
             cs(i).name -> (r.getLong(2 * i), r.getBoolean(2 * i + 1)))
         }
       }
-    val fanouts = spec.checks.collect { case Fanout(n, sub, id, over, p) =>
-      val df = read(sub)
-      () => Seq(passAtZero(n, df.groupBy(col(id))
-        .agg(countDistinct(col(over)).as("__n"))
-        .filter(col("__n") =!= params(p)).count()))
-    }
     // a pair's checks read one union of the two sides' rows, each flagged
     // with its side, reduced per key and then summed: one shuffle, no join.
     // A null key matches nothing, as in a join.
-    val pairs = spec.checks.collect { case c: OnPair => c }
+    val pairs = checks.collect { case c: OnPair => c }
       .groupBy(c => Seq(c.a, c.b).sortBy(k => (k.sub, k.column))).toSeq.map {
         case (Seq(l, r), cs) =>
-          def rows(k: Key, side: String) = read(k.sub).select(
+          def rows(k: Key, side: String) = params.read(k.sub).select(
             col(k.column).as("__k") +: lit(true).as(s"__in$side") +: cs.flatMap {
               case Subset(n, a, _, w) if a == k =>
                 Some(w.getOrElse(lit(true)).as(s"__a_$n"))
@@ -151,17 +155,16 @@ object IndexAudit {
               when(matched,
                 size(vl) * size(vr) - size(array_intersect(vl, vr))).as(n)
           }
+          val (left, right) = (rows(l, "L"), rows(r, "R"))
           () => {
-            val t = rows(l, "L")
-              .unionByName(rows(r, "R"), allowMissingColumns = true)
+            val t = left.unionByName(right, allowMissingColumns = true)
               .groupBy(col("__k")).agg(perKey.head, perKey.tail: _*)
               .agg(sum(cs.head.name), cs.tail.map(c => sum(c.name)): _*).head()
             cs.indices.map(i =>
               passAtZero(cs(i).name, if (t.isNullAt(i)) 0L else t.getLong(i)))
           }
       }
-    val got = Concurrency.runAll(aggregates ++ fanouts ++ pairs).flatten.toMap
-    spec.checks.map { c => val (v, ok) = got(c.name); (spec.name, c.name, v, ok) }
-      .toDF("family", "check", "value", "pass")
+    val got = Concurrency.runAll(aggregates ++ pairs).flatten.toMap
+    checks.map { c => val (v, ok) = got(c.name); (c.name, v, ok) }
   }
 }

@@ -34,28 +34,36 @@ object IndexLifecycle {
   }
 
   /** Where one of a family's parameters lives: its partition count, or
-    * a figure an fsck check compares against. */
+    * a figure a stat or fsck check reads. */
   sealed trait Param
-  /** A numeric column of the one-row `meta/` artifact. */
+  /** A numeric or boolean (1/0) column of the one-row `meta/` artifact. */
   final case class MetaColumn(name: String) extends Param
   /** The distinct values of `column` in the parameter artifact `sub`. */
   final case class DistinctCount(sub: String, column: String) extends Param
 
-  /** The [[Param]]s of the index at `path`; `meta/` is read once for
-    * all its columns. */
+  /** The [[Param]]s of the index at `path`, the one reader of `meta/`: it
+    * is read once for all its columns, and each artifact [[read]] once. */
   private[operators] final class Params(spark: SparkSession, path: String) {
-    private lazy val meta = spark.read.parquet(s"$path/meta").head()
+    private lazy val meta = read("meta").head()
+    private val artifacts = scala.collection.mutable.Map.empty[String, DataFrame]
     def apply(p: Param): Long = p match {
-      case MetaColumn(c) => meta.getAs[Number](c).longValue
-      case DistinctCount(sub, c) =>
-        spark.read.parquet(s"$path/$sub").select(col(c)).distinct().count()
+      case MetaColumn(c) => meta.getAs[Any](c) match {
+        case b: Boolean => if (b) 1L else 0L
+        case n: Number => n.longValue
+      }
+      case DistinctCount(sub, c) => read(sub).select(col(c)).distinct().count()
     }
+    /** Artifact `sub`, read once: each read infers its schema with a job
+      * of its own. */
+    def read(sub: String): DataFrame = artifacts.synchronized(
+      artifacts.getOrElseUpdate(sub, spark.read.parquet(s"$path/$sub")))
   }
 
-  /** A delete's emptying guard: given the cached delete ids, reject a
-    * delete that would leave an unreadable index, and return the step to
-    * run once the id artifacts are rewritten. */
-  type Guard = (SparkSession, String, DataFrame) => () => Unit
+  /** A delete's emptying guard: given the membership artifact's live rows
+    * and the cached delete ids, reject a delete that would leave an
+    * unreadable index, and return the step to run once the id artifacts
+    * are rewritten. */
+  type Guard = (SparkSession, String, DataFrame, DataFrame) => () => Unit
 
   /** One family's lifecycle facts.
     *
@@ -66,12 +74,13 @@ object IndexLifecycle {
     * @param flatParams flat parameter artifacts [[compact]] resizes.
     * @param recovered every subdir any mutation swaps.
     * @param checks the family's fsck invariants, run by [[audit]].
+    * @param stats the family's dashboard figures, run by [[measure]].
     * @param guard a family-specific emptying guard (None: the membership
     *   artifact must keep a row). */
   final case class Spec(name: String, idArtifacts: Seq[IdArtifact],
       partitions: Param, flatParams: Seq[String],
       recovered: Seq[String], checks: Seq[IndexAudit.Check],
-      guard: Option[Guard] = None) {
+      stats: Seq[IndexAudit.Stat], guard: Option[Guard] = None) {
     require(idArtifacts.nonEmpty, s"$name: no id artifact")
     require((idArtifacts.map(_.sub) ++ flatParams).forall(recovered.contains),
       s"$name: every swapped subdir must be recovered")
@@ -80,8 +89,20 @@ object IndexLifecycle {
 
     /** fsck: one (family, check, value, pass) row per declared check
       * ([[IndexAudit.run]]). */
-    def audit(spark: SparkSession, path: String): DataFrame =
-      IndexAudit.run(spark, path, this)
+    def audit(spark: SparkSession, path: String): DataFrame = {
+      import spark.implicits._
+      IndexAudit.run(spark, path, this, checks)
+        .map { case (c, v, ok) => (name, c, v, ok) }
+        .toDF("family", "check", "value", "pass")
+    }
+
+    /** The dashboard: one (stat, value) row per declared stat, in
+      * declaration order, exact longs ([[IndexAudit.run]]). */
+    def measure(spark: SparkSession, path: String): DataFrame = {
+      import spark.implicits._
+      IndexAudit.run(spark, path, this, stats)
+        .map { case (s, v, _) => (s, v) }.toDF("stat", "value")
+    }
 
     /** Writer-restart repair of every swapped subdir, run BEFORE reading
       * or mutating ([[StagedSwap.recoverSub]]): every mutation calls it,
@@ -110,14 +131,14 @@ object IndexLifecycle {
       val del0 = ids.toDF("__del_id").distinct()
       val del = if (owned) del0.cache() else del0
       try {
-        val commit = guard.getOrElse(keepsARow _)(spark, path, del)
-        fanOut(idArtifacts.map(a => () =>
-          StagedSwap.subdir(spark, path, a.sub, "_del").swap { tmp =>
-            val live = spark.read.parquet(s"$path/${a.sub}")
-            writer(live.join(del,
-              col(a.idColIn(live.schema)) === col("__del_id"), "left_anti"),
-              a.key).parquet(tmp)
-          }))
+        // each artifact is read once, on this thread: the guard and the
+        // rewrite share the membership frame
+        val live = idArtifacts.map(a => spark.read.parquet(s"$path/${a.sub}"))
+        val commit = guard.getOrElse(keepsARow _)(spark, path, live.head, del)
+        fanOut(idArtifacts.zip(live).map { case (a, l) => () =>
+          StagedSwap.subdir(spark, path, a.sub, "_del").swap(tmp =>
+            writer(survivors(a, l, del), a.key).parquet(tmp))
+        })
         commit()
       } finally if (owned) del.unpersist()
     }
@@ -125,15 +146,18 @@ object IndexLifecycle {
     /** The default emptying guard: a zero-row rewrite under partitionBy
       * writes NO data files, bricking every later read with an
       * unreadable-schema error. `head(1)` stops at the first survivor. */
-    private def keepsARow(spark: SparkSession, path: String,
+    private def keepsARow(spark: SparkSession, path: String, live: DataFrame,
         del: DataFrame): () => Unit = {
-      val live = spark.read.parquet(s"$path/${membership.sub}")
-      require(live.join(del,
-          col(membership.idColIn(live.schema)) === col("__del_id"), "left_anti")
-          .head(1).nonEmpty,
+      require(survivors(membership, live, del).head(1).nonEmpty,
         "delete would empty the index; drop the index directory instead")
       () => ()
     }
+
+    /** The rows of artifact `a` (read as `live`) whose id `del` lacks. */
+    private def survivors(a: IdArtifact, live: DataFrame,
+        del: DataFrame): DataFrame =
+      live.join(del, col(a.idColIn(live.schema)) === col("__del_id"),
+        "left_anti")
 
     /** Upsert (replace-or-insert): delete the batch's ids, then the
       * family's own `append` — replaced ids serve only their new rows,

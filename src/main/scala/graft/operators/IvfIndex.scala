@@ -267,7 +267,7 @@ object IvfIndex {
       nLists: Int = 0, iters: Int = 3, trainCap: Int = 4096): IvfModel = {
     recover(spark, dir)
     val k = if (nLists > 0) nLists
-      else spark.read.parquet(s"$dir/centroids").count().toInt
+      else new IndexLifecycle.Params(spark, dir)(lifecycle.partitions).toInt
     val current = spark.read.parquet(s"$dir/lists").drop("list_id")
     val model = fit(current, idCol, vecCol, k, iters, trainCap)
     def swapIn(sub: String)(write: String => Unit): Unit =
@@ -306,8 +306,9 @@ object IvfIndex {
       dir: String): Unit = {
     val spark = vectors.sparkSession
     recover(spark, dir)
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val nLists = centroids.count().toInt
+    val params = new IndexLifecycle.Params(spark, dir)
+    val centroids = params.read("centroids")
+    val nLists = params(lifecycle.partitions).toInt
     // type homogeneity: coerce the batch's vector column to the SAVED
     // element type. An index mixing float and double part files makes
     // every later read's inferred schema a file-listing-order lottery —
@@ -343,25 +344,13 @@ object IvfIndex {
 
   /** Operational snapshot — one (stat, value) row per metric, exact
     * longs (the [[TextIndex.stats]] dashboard discipline): `vec_rows`
-    * (grows with [[append]], shrinks with [[delete]]), `n_lists`, and
-    * the list-balance shape `nonempty_lists`/`min_list_size`/
-    * `max_list_size` — the probe-cost skew numbers; a hot max list is
-    * the [[refit]] signal [[staleness]] reads distributionally. */
-  def stats(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val nLists = spark.read.parquet(s"$dir/centroids").count()
-    val c = spark.read.parquet(s"$dir/lists")
-      .groupBy(col("list_id")).agg(count(lit(1)).as("c"))
-      .agg(sum(col("c")), count(lit(1)), min(col("c")), max(col("c")))
-      .collect().head
-    Seq(
-      "vec_rows" -> c.getLong(0),
-      "n_lists" -> nLists,
-      "nonempty_lists" -> c.getLong(1),
-      "min_list_size" -> c.getLong(2),
-      "max_list_size" -> c.getLong(3)
-    ).toDF("stat", "value")
-  }
+    * (grows with [[append]], shrinks with [[delete]]), `n_lists` (the
+    * centroid rows, empty lists included), and the list-balance shape
+    * `nonempty_lists`/`min_list_size`/`max_list_size` — the probe-cost
+    * skew numbers; a hot max list is the [[refit]] signal [[staleness]]
+    * reads distributionally. Declared on [[lifecycle]]. */
+  def stats(spark: SparkSession, dir: String): DataFrame =
+    lifecycle.measure(spark, dir)
 
   /** This family's lifecycle facts: `lists/` carries the caller's id
     * column, partitioned by list; the list count is the centroid count;
@@ -369,15 +358,21 @@ object IvfIndex {
     * vector ids, some centroid, and every list id a centroid's. */
   val lifecycle: IndexLifecycle.Spec = {
     import IndexAudit._, IndexLifecycle._
+    val lists = Some(Group(Seq("list_id")))
     Spec("ivf", Seq(IdArtifact("lists", None, Some("list_id"))),
       DistinctCount("centroids", "list_id"), flatParams = Seq("centroids"),
       recovered = Seq("lists", "centroids", "stats"),
-      Seq(Stat("vector_rows", "lists", _ => count(lit(1)),
+      checks = Seq(Stat("vector_rows", "lists", _ => count(lit(1)),
           (v, s) => v === countDistinct(s.id)),
         Stat("centroid_rows", "centroids", _ => count(lit(1)),
           (v, _) => v > 0L),
         Subset("unknown_list_ids", Key("lists", "list_id"),
-          Key("centroids", "list_id"))))
+          Key("centroids", "list_id"))),
+      stats = Seq(Stat("vec_rows", "lists", _ => sum(Group.size), by = lists),
+        Stat("n_lists", "centroids", _ => count(lit(1))),
+        Stat("nonempty_lists", "lists", _ => count(lit(1)), by = lists),
+        Stat("min_list_size", "lists", _ => min(Group.size), by = lists),
+        Stat("max_list_size", "lists", _ => max(Group.size), by = lists)))
   }
 
   /** [[IndexLifecycle.Spec.recover]] on this family's artifacts. */

@@ -83,22 +83,37 @@ object MinHashIndex {
     } finally sigs.unpersist()
   }
 
+  /** The meta columns: the hash parameters (shingle size, signature
+    * length, band count, seed). */
+  private val Bands = IndexLifecycle.MetaColumn("bands")
+  private val Hashing = Seq(IndexLifecycle.MetaColumn("n"),
+    IndexLifecycle.MetaColumn("k"), Bands, IndexLifecycle.MetaColumn("seed"))
+
   /** This family's lifecycle facts: sigs (membership) and the
     * band-partitioned buckets carry the ids; the band count is in meta.
     * fsck: every id bands into exactly `bands` buckets, and sigs and
-    * bands hold the same ids. */
+    * bands hold the same ids. The stats are [[stats]]'s rows. */
   val lifecycle: IndexLifecycle.Spec = {
     import IndexAudit._, IndexLifecycle._
     val (sigIds, bandIds) = (Key("sigs", "id"), Key("bands", "id"))
+    val sigRows = Stat("sig_rows", "sigs", _ => count(lit(1)))
+    val buckets = Some(Group(Seq("band_idx", "band_hash")))
     Spec("minhash", Seq(IdArtifact("sigs", Some("id"), None),
         IdArtifact("bands", Some("id"), Some("band_idx"))),
-      MetaColumn("bands"), flatParams = Nil,
+      Bands, flatParams = Nil,
       recovered = Seq("sigs", "bands", "meta"),
-      Seq(Stat("sig_rows", "sigs", _ => count(lit(1)), (_, _) => lit(true)),
-        Fanout("band_fanout_violations", "bands", "id", "band_idx",
-          MetaColumn("bands")),
+      checks = Seq(sigRows,
+        Stat("band_fanout_violations", "bands",
+          s => count(when(Group.size =!= s.param(Bands), 1)), atZero,
+          Some(Group(Seq("id"), Some("band_idx")))),
         Subset("orphan_band_ids", bandIds, sigIds),
-        Subset("missing_band_ids", sigIds, bandIds)))
+        Subset("missing_band_ids", sigIds, bandIds)),
+      stats = Seq(sigRows,
+        Stat("band_rows", "bands", _ => sum(Group.size), by = buckets),
+        Stat("nonempty_buckets", "bands", _ => count(lit(1)), by = buckets),
+        Stat("max_bucket_size", "bands", _ => max(Group.size), by = buckets),
+        Stat("distinct_banded_ids", "bands", _ => countDistinct(col("id")))) ++
+        Hashing.map(p => Stat(p.name, "sigs", _.param(p))))
   }
 
   /** [[IndexLifecycle.Spec.recover]] on this family's artifacts. */
@@ -115,7 +130,7 @@ object MinHashIndex {
       path: String): Unit = {
     val spark = newDocs.sparkSession
     recover(spark, path)
-    val (n, k, bands, seed) = meta(spark, path)
+    val (n, k, bands, seed) = params(spark, path)
     val sigs = Dedup.minhashSignatures(newDocs, idCol, textCol, n, k, seed)
       .select(col(idCol).as("id"), col("sig")).cache()
     try {
@@ -158,17 +173,14 @@ object MinHashIndex {
   def compact(spark: SparkSession, path: String): Unit =
     lifecycle.compact(spark, path)
 
-  private def meta(spark: SparkSession, path: String): (Int, Int, Int, Long) = {
-    val row = spark.read.parquet(s"$path/meta").head()
-    (row.getAs[Int]("n"), row.getAs[Int]("k"), row.getAs[Int]("bands"),
-      row.getAs[Long]("seed"))
-  }
-
   /** The index's persisted hash parameters (n, k, bands, seed) — for
     * callers that must run OTHER minhash machinery consistently with
     * this index (e.g. the streaming gate's intra-batch pair stage). */
-  def params(spark: SparkSession, path: String): (Int, Int, Int, Long) =
-    meta(spark, path)
+  def params(spark: SparkSession, path: String): (Int, Int, Int, Long) = {
+    val Seq(n, k, bands, seed) =
+      Hashing.map(new IndexLifecycle.Params(spark, path)(_))
+    (n.toInt, k.toInt, bands.toInt, seed)
+  }
 
   /** Operational snapshot — one (stat, value) row per metric, exact
     * longs (the [[TextIndex.stats]] dashboard discipline):
@@ -183,30 +195,12 @@ object MinHashIndex {
     *    joining into a pathological bucket (e.g. a boilerplate-heavy
     *    corpus hashing many docs identically) pays candidates
     *    proportional to it. Watch it grow; split/shard when it runs hot.
-    *  - `n`/`k`/`bands`/`seed`: the hash parameters (from meta). */
-  def stats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val (n, k, bands, seed) = meta(spark, path)
-    val sigRows = spark.read.parquet(s"$path/sigs").count()
-    val b = spark.read.parquet(s"$path/bands")
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("c"))
-      .agg(sum(col("c")), countDistinct(col("band_idx"), col("band_hash")),
-        max(col("c"))).collect().head
-    val distinctIds = spark.read.parquet(s"$path/bands")
-      .select(col("id")).distinct().count()
-    Seq(
-      "sig_rows" -> sigRows,
-      "band_rows" -> b.getLong(0),
-      "nonempty_buckets" -> b.getLong(1),
-      "max_bucket_size" -> b.getLong(2),
-      "distinct_banded_ids" -> distinctIds,
-      "n" -> n.toLong,
-      "k" -> k.toLong,
-      "bands" -> bands.toLong,
-      "seed" -> seed
-    ).toDF("stat", "value")
-  }
+    *  - `n`/`k`/`bands`/`seed`: the hash parameters (from meta).
+    *
+    * Declared on [[lifecycle]]: one aggregate per artifact and grouping,
+    * run concurrently. */
+  def stats(spark: SparkSession, path: String): DataFrame =
+    lifecycle.measure(spark, path)
 
   /** Probe a batch against the index: every (batch id, corpus id) pair
     * whose estimated Jaccard >= minEstJac, as (idCol, corpus_id,
@@ -214,7 +208,7 @@ object MinHashIndex {
   def probe(newDocs: DataFrame, idCol: String, textCol: String,
       path: String, minEstJac: Double = 0.5): DataFrame = {
     val spark = newDocs.sparkSession
-    val (n, k, bands, seed) = meta(spark, path)
+    val (n, k, bands, seed) = params(spark, path)
     // NO cache: the signature subplan feeds both the banded candidate join
     // and the __sa rejoin, but it is a row-local codegen map over the BATCH
     // (the small side by contract) — recomputing it once costs microseconds

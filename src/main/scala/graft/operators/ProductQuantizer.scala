@@ -377,7 +377,8 @@ object ProductQuantizer {
     // parameter-sized artifacts (k x dim rows): one file each, like meta
     coarse.coalesce(1).write.mode("overwrite").parquet(s"$dir/coarse")
     model.coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_model")
-    val nLists = coarse.select(col("cluster_id")).distinct().count().toInt
+    val nLists = new IndexLifecycle.Params(spark, dir)(lifecycle.partitions)
+      .toInt
     IndexLifecycle.aligned(indexArtifact(df, idCol, vecCol, coarse, model,
       residual), nLists, "list_id").mode("overwrite").parquet(s"$dir/codes")
     Seq(residual).toDF("residual")
@@ -407,33 +408,44 @@ object ProductQuantizer {
       dir: String): Unit = {
     val spark = df.sparkSession
     recover(spark, dir)
-    val residual = spark.read.parquet(s"$dir/meta")
-      .head().getAs[Boolean]("residual")
-    val coarse = spark.read.parquet(s"$dir/coarse")
-    val nLists = coarse.select(col("cluster_id")).distinct().count().toInt
-    IndexLifecycle.aligned(indexArtifact(df, idCol, vecCol, coarse,
-        spark.read.parquet(s"$dir/pq_model"), residual), nLists, "list_id")
+    val params = new IndexLifecycle.Params(spark, dir)
+    IndexLifecycle.aligned(indexArtifact(df, idCol, vecCol,
+        params.read("coarse"), params.read("pq_model"), params(Residual) == 1L),
+        params(lifecycle.partitions).toInt, "list_id")
       .mode("append").parquet(s"$dir/codes")
   }
+
+  /** The meta column: whether the codes quantize residuals (1) or raw
+    * vectors (0). */
+  private val Residual = IndexLifecycle.MetaColumn("residual")
 
   /** This family's lifecycle facts: `codes/` carries the caller's id
     * column, partitioned by cell; the cell count is the coarse model's
     * cluster count; the two codebooks are the flat parameter artifacts.
     * fsck: no duplicate code ids, every code as wide as the codebook's
-    * subspace count, and every cell a coarse centroid's. */
+    * subspace count, and every cell a coarse centroid's. The stats are
+    * [[stats]]'s rows. */
   val lifecycle: IndexLifecycle.Spec = {
     import IndexAudit._, IndexLifecycle._
+    val cells = Some(Group(Seq("list_id")))
     Spec("pq", Seq(IdArtifact("codes", None, Some("list_id"))),
       DistinctCount("coarse", "cluster_id"),
       flatParams = Seq("coarse", "pq_model"),
       recovered = Seq("codes", "coarse", "pq_model"),
-      Seq(Stat("code_rows", "codes", _ => count(lit(1)),
+      checks = Seq(Stat("code_rows", "codes", _ => count(lit(1)),
           (v, s) => v === countDistinct(s.id)),
         Stat("code_width_violations", "codes", s => count(when(
           size(col("codes")) =!= s.param(DistinctCount("pq_model", "subspace")),
-          1))),
+          1)), atZero),
         Subset("unknown_list_ids", Key("codes", "list_id"),
-          Key("coarse", "cluster_id"))))
+          Key("coarse", "cluster_id"))),
+      stats = Seq(Stat("code_rows", "codes", _ => sum(Group.size), by = cells),
+        Stat("n_lists", "codes", _ => count(lit(1)), by = cells),
+        Stat("min_cell_size", "codes", _ => min(Group.size), by = cells),
+        Stat("max_cell_size", "codes", _ => max(Group.size), by = cells),
+        Stat("m", "codes", _ => max(size(col("codes")))),
+        Stat("pq_codebook_rows", "pq_model", _ => count(lit(1))),
+        Stat("residual", "pq_model", _.param(Residual))))
   }
 
   /** The pruned-scan scored frame behind [[probeSaved]]: one row per
@@ -494,12 +506,10 @@ object ProductQuantizer {
   private def savedProbePlan(queries: DataFrame, queryIdCol: String,
       queryVecCol: String, spark: org.apache.spark.sql.SparkSession,
       dir: String, nProbe: Int): (DataFrame, DataFrame, Int) = {
-    val residual = spark.read.parquet(s"$dir/meta")
-      .head().getAs[Boolean]("residual")
-    val model = spark.read.parquet(s"$dir/pq_model")
-    val cb = collectCodebook(model)
+    val params = new IndexLifecycle.Params(spark, dir)
+    val cb = collectCodebook(params.read("pq_model"))
     val probes = probeFrame(queries, queryIdCol, queryVecCol, cb,
-      spark.read.parquet(s"$dir/coarse"), nProbe, residual)
+      params.read("coarse"), nProbe, params(Residual) == 1L)
     val probedLists = probes.select(col("list_id")).distinct()
       .collect().map(_.getLong(0)).sorted
     val codes = spark.read.parquet(s"$dir/codes")
@@ -553,25 +563,9 @@ object ProductQuantizer {
     *    coarse quantizer (codebooks are immutable per [[append]]'s
     *    maintenance-cadence contract).
     *  - `m`/`pq_codebook_rows`/`residual`: the quantization parameters
-    *    a probe must match. */
-  def stats(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val residual = spark.read.parquet(s"$dir/meta")
-      .head().getAs[Boolean]("residual")
-    val cbRows = spark.read.parquet(s"$dir/pq_model").count()
-    val codes = spark.read.parquet(s"$dir/codes")
-    val m = codes.select(size(col("codes"))).head().getInt(0)
-    val c = codes.groupBy(col("list_id")).agg(count(lit(1)).as("c"))
-      .agg(sum(col("c")), count(lit(1)), min(col("c")), max(col("c")))
-      .collect().head
-    Seq(
-      "code_rows" -> c.getLong(0),
-      "n_lists" -> c.getLong(1),
-      "min_cell_size" -> c.getLong(2),
-      "max_cell_size" -> c.getLong(3),
-      "m" -> m.toLong,
-      "pq_codebook_rows" -> cbRows,
-      "residual" -> (if (residual) 1L else 0L)
-    ).toDF("stat", "value")
-  }
+    *    a probe must match.
+    *
+    * `n_lists` counts the non-empty cells. Declared on [[lifecycle]]. */
+  def stats(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    lifecycle.measure(spark, dir)
 }

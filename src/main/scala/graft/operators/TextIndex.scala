@@ -62,28 +62,44 @@ object TextIndex {
     docs.select(col(idCol).as("doc_id"),
       size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"))
 
+  /** The meta columns: the corpus-level BM25 statistics and the bucket
+    * count. */
+  private val NDocs = IndexLifecycle.MetaColumn("n_docs")
+  private val SumDl = IndexLifecycle.MetaColumn("sum_dl")
+  private val NBuckets = IndexLifecycle.MetaColumn("n_buckets")
+
   /** This family's lifecycle facts: docs (the membership sidecar) and
     * postings carry the ids; buckets come from meta; the one
     * surviving-docs aggregate is the delete guard and the new meta. fsck:
     * meta's stats against the sidecar, ids both ways (a doc without
-    * tokens has no postings), bucket placement, and the denormalized dl. */
+    * tokens has no postings), bucket placement, and the denormalized dl.
+    * The stats are [[stats]]'s rows. */
   val lifecycle: IndexLifecycle.Spec = {
     import IndexAudit._, IndexLifecycle._
     val (docs, postings) = (Key("docs", "doc_id"), Key("postings", "doc_id"))
     Spec("text", Seq(IdArtifact("docs", Some("doc_id"), None),
         IdArtifact("postings", Some("doc_id"), Some("bucket"))),
-      MetaColumn("n_buckets"), flatParams = Nil,
+      NBuckets, flatParams = Nil,
       recovered = Seq("postings", "docs", "meta"),
-      Seq(Stat("n_docs", "docs", _ => count(lit(1)),
-          (v, s) => v === s.param(MetaColumn("n_docs"))),
+      checks = Seq(Stat("n_docs", "docs", _ => count(lit(1)),
+          (v, s) => v === s.param(NDocs)),
         Stat("sum_dl", "docs", _ => coalesce(sum(col("dl")), lit(0L)),
-          (v, s) => v === s.param(MetaColumn("sum_dl"))),
+          (v, s) => v === s.param(SumDl)),
         Subset("orphan_postings", postings, docs),
         Subset("missing_postings", docs, postings, Some(col("dl") > 0)),
         Stat("bucket_misplacement", "postings", s => count(when(
-          col("bucket") =!= pmod(xxhash64(col("term")),
-            s.param(MetaColumn("n_buckets"))), 1))),
+          col("bucket") =!= pmod(xxhash64(col("term")), s.param(NBuckets)),
+          1)), atZero),
         Agrees("dl_mismatch", postings, docs, "dl")),
+      stats = Seq(Stat("n_docs", "docs", _.param(NDocs)),
+        Stat("sum_dl", "docs", _.param(SumDl)),
+        Stat("n_buckets", "docs", _.param(NBuckets)),
+        Stat("doc_rows", "docs", _ => count(lit(1))),
+        Stat("posting_doc_ids", "postings", _ => countDistinct(col("doc_id"))),
+        Stat("posting_rows", "postings", _ => count(lit(1))),
+        Stat("distinct_terms", "postings", _ => countDistinct(col("term"))),
+        Stat("nonempty_buckets", "postings",
+          _ => countDistinct(col("bucket")))),
       guard = Some(survivingMeta))
   }
 
@@ -162,8 +178,8 @@ object TextIndex {
       path: String): Unit = {
     val spark = batch.sparkSession
     recover(spark, path)
-    val meta = spark.read.parquet(s"$path/meta").collect().head
-    val nBuckets = meta.getInt(2)
+    val params = new IndexLifecycle.Params(spark, path)
+    val nBuckets = params(NBuckets).toInt
     IndexLifecycle.aligned(postingsOf(batch, idCol, textCol, nBuckets),
       nBuckets, "bucket").mode("append").parquet(s"$path/postings")
     val docRows = docRowsOf(batch, idCol, textCol).persist()
@@ -182,8 +198,8 @@ object TextIndex {
       val r = docRows.agg(count(lit(1)),
         coalesce(sum(col("dl")), lit(0L))).collect().head
       docRows.write.mode("append").parquet(s"$path/docs")
-      writeMeta(spark, path, meta.getLong(0) + r.getLong(0),
-        meta.getLong(1) + r.getLong(1), nBuckets)
+      writeMeta(spark, path, params(NDocs) + r.getLong(0),
+        params(SumDl) + r.getLong(1), nBuckets)
     } finally docRows.unpersist()
   }
 
@@ -218,26 +234,10 @@ object TextIndex {
     *    file shape (vocabulary size, bucket occupancy for the pruning
     *    layout).
     *
-    * One bounded aggregate per artifact; no corpus text is read. */
-  def stats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val meta = spark.read.parquet(s"$path/meta").collect().head
-    val p = spark.read.parquet(s"$path/postings")
-      .agg(count(lit(1)), countDistinct(col("term")),
-        countDistinct(col("bucket")), countDistinct(col("doc_id")))
-      .collect().head
-    val docRows = spark.read.parquet(s"$path/docs").count()
-    Seq(
-      "n_docs" -> meta.getLong(0),
-      "sum_dl" -> meta.getLong(1),
-      "n_buckets" -> meta.getInt(2).toLong,
-      "doc_rows" -> docRows,
-      "posting_doc_ids" -> p.getLong(3),
-      "posting_rows" -> p.getLong(0),
-      "distinct_terms" -> p.getLong(1),
-      "nonempty_buckets" -> p.getLong(2)
-    ).toDF("stat", "value")
-  }
+    * Declared on [[lifecycle]]: one bounded aggregate per artifact, the
+    * artifacts' as concurrent jobs; no corpus text is read. */
+  def stats(spark: SparkSession, path: String): DataFrame =
+    lifecycle.measure(spark, path)
 
   /** Compact an index that has accreted small files through [[append]]/
     * [[upsert]]: `postings/` to ~one file per bucket partition, `docs/`
@@ -274,9 +274,9 @@ object TextIndex {
     * dl ≥ 1 (both derive from the same tokens()), so sum(dl) > 0 ⟺ the
     * rewrite keeps a postings row — no postings anti-join needed. */
   private def survivingMeta(spark: SparkSession, path: String,
-      del: DataFrame): () => Unit = {
-    val nBuckets = spark.read.parquet(s"$path/meta").collect().head.getInt(2)
-    val surviving = spark.read.parquet(s"$path/docs")
+      docs: DataFrame, del: DataFrame): () => Unit = {
+    val nBuckets = new IndexLifecycle.Params(spark, path)(NBuckets).toInt
+    val surviving = docs
       .join(del, col("doc_id") === col("__del_id"), "left_anti")
       .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
       .collect().head
@@ -324,13 +324,13 @@ object TextIndex {
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       s"maxDfFrac must be in (0, 1], got $maxDfFrac")
     import spark.implicits._
-    val meta = spark.read.parquet(s"$path/meta").collect().head
-    val (n, sdl, nBuckets) = (meta.getLong(0), meta.getLong(1), meta.getInt(2))
+    val params = new IndexLifecycle.Params(spark, path)
+    val (n, sdl, nBuckets) = (params(NDocs), params(SumDl), params(NBuckets))
     val avgdl = sdl.toDouble / n
     // bucket ids via the SAME hash the writer used (a one-row Spark job,
     // not a driver reimplementation that could drift from xxhash64)
     val buckets = queryTerms.toDF("term")
-      .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
+      .select(pmod(xxhash64(col("term")), lit(nBuckets)))
       .collect().map(_.getLong(0)).distinct.toSeq
     val post = spark.read.parquet(s"$path/postings")
       .filter(col("bucket").isin(buckets: _*) &&
@@ -415,8 +415,8 @@ object TextIndex {
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       s"maxDfFrac must be in (0, 1], got $maxDfFrac")
     val spark = queries.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").collect().head
-    val (n, sdl, nBuckets) = (meta.getLong(0), meta.getLong(1), meta.getInt(2))
+    val params = new IndexLifecycle.Params(spark, path)
+    val (n, sdl, nBuckets) = (params(NDocs), params(SumDl), params(NBuckets))
     val avgdl = sdl.toDouble / n
     val dup = queries.agg(count(lit(1)),
       countDistinct(col(queryIdCol))).collect().head
@@ -429,7 +429,7 @@ object TextIndex {
       .select(col("query_id"), col("pos").as("__pos"), col("col").as("term"))
     // the terms' bucket ids: ≤ nBuckets values, via the writer's hash
     val buckets = qt.select(
-        pmod(xxhash64(col("term")), lit(nBuckets.toLong)).as("b"))
+        pmod(xxhash64(col("term")), lit(nBuckets)).as("b"))
       .distinct().collect().map(_.getLong(0)).toSeq
     val pruned = spark.read.parquet(s"$path/postings")
       .filter(col("bucket").isin(buckets: _*))
